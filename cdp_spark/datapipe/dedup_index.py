@@ -42,11 +42,10 @@ Layout (all appends, no rewrites — folds are O(increment)):
                                   LSM pattern) instead of re-counting
                                   the full (id, fp) index
 
-Folds given an ``epoch`` (the streaming lifecycle) land in per-epoch
-``fold=e<epoch>/`` subdirectories with OVERWRITE semantics plus a
-``last_epoch`` watermark in the meta — idempotent under foreachBatch's
-at-least-once replay (a committed epoch skips, a half-written one
-rewrites cleanly); see the epoch-fold helpers below.
+Folds given an ``epoch`` (the streaming lifecycle) follow the shared
+replay-safe fold protocol of :mod:`.fold_commit` (per-epoch overwrite
+directories, lineage watermarks); loads drop its ``fold`` partition
+column.
 
 Reference parity: the reference's deduplicate step is per-window only
 (src/step-functions/deduplicate.ts:82-124) — this lifecycle is
@@ -55,15 +54,14 @@ superset scope for the training-data-pipeline use case.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import dedup as ddp
+from . import fold_commit as fc
 
-_META_NAME = "_cdp_index_meta.json"
 _HASH_FNS = {
     "default_hash64": ddp.default_hash64,
     "md5_hash60": ddp.md5_hash60,
@@ -123,162 +121,6 @@ def _hash_name(hash_fn) -> str:
     )
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    """Atomic meta write (temp + rename): the meta's ``last_epoch``
-    watermark is the fold lifecycle's commit record, so a crash
-    mid-write must leave the previous meta intact, never a torn one."""
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _META_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, _META_NAME))
-
-
-# ------------------------------------------------- epoch-idempotent folds
-#
-# foreachBatch is AT-LEAST-ONCE: a crash between a fold's parquet
-# appends and the stream's checkpoint commit replays the batch, and a
-# plain append would double-count it (VERDICT r10 "what's wrong" #1).
-# Folds called with an ``epoch`` therefore write into per-epoch
-# subdirectories with OVERWRITE semantics — a replay wipes whatever
-# the crashed attempt left and rewrites it — and record the epoch as a
-# watermark in the index meta AFTER all stat writes, so a fully
-# committed epoch is skipped outright on replay.  Spark's own
-# ``Sink.addBatch`` contract ("deduplicate on batchId for exactly-once")
-# is the public-knowledge model.
-#
-# Layout: epoch folds live under ``<stat>/fold=e<epoch>/``; the first
-# labeled fold moves any root-level files into ``fold=base/`` (parquet
-# partition discovery rejects mixed depths).  Readers drop the
-# resulting ``fold`` partition column.  Unlabeled folds keep the
-# historical root-append behavior on root-layout indexes and append
-# into ``fold=base/`` on migrated ones.
-
-
-def _has_fold_layout(stat_dir: str) -> bool:
-    return os.path.isdir(stat_dir) and any(
-        e.startswith("fold=") for e in os.listdir(stat_dir)
-    )
-
-
-def _migrate_to_fold_layout(stat_dir: str) -> None:
-    """Move a stat directory's root-level data files into
-    ``fold=base/`` so labeled epoch folds can coexist with them."""
-    if not os.path.isdir(stat_dir):
-        return
-    entries = [
-        e
-        for e in os.listdir(stat_dir)
-        if not e.startswith(("fold=", "_", "."))
-    ]
-    if not entries:
-        return
-    base = os.path.join(stat_dir, "fold=base")
-    os.makedirs(base, exist_ok=True)
-    for e in entries:
-        os.replace(os.path.join(stat_dir, e), os.path.join(base, e))
-
-
-def _lineage_label(lineage) -> str:
-    """Validated lineage tag for fold-directory and watermark keys.
-    A LINEAGE names one checkpoint's epoch sequence: epoch ids are
-    monotone only within a checkpoint, so when SEVERAL ingest streams
-    fold into one index each needs its own watermark and its own
-    fold-directory namespace (two streams both at epoch 3 must not
-    overwrite each other)."""
-    s = str(lineage)
-    if not s or not all(c.isalnum() or c in "-_." for c in s):
-        raise ValueError(
-            f"lineage {lineage!r} must be a non-empty [alnum-_.] tag "
-            "(it becomes a partition-directory component)"
-        )
-    return s
-
-
-def _fold_write(df: DataFrame, stat_dir: str, epoch, lineage=None) -> None:
-    """Write one stat table for a fold.  ``epoch=None`` = historical
-    append; an integer epoch = overwrite of that epoch's subdir (the
-    idempotent replay path), namespaced by ``lineage`` when several
-    checkpoint lineages fold into one index."""
-    if epoch is None:
-        if _has_fold_layout(stat_dir):
-            df.write.mode("append").parquet(
-                os.path.join(stat_dir, "fold=base")
-            )
-        else:
-            df.write.mode("append").parquet(stat_dir)
-    else:
-        prefix = f"{_lineage_label(lineage)}-" if lineage is not None else ""
-        _migrate_to_fold_layout(stat_dir)
-        df.write.mode("overwrite").parquet(
-            os.path.join(stat_dir, f"fold={prefix}e{int(epoch)}")
-        )
-
-
-def _watermark_key(lineage) -> str:
-    return (
-        "last_epoch"
-        if lineage is None
-        else f"last_epoch:{_lineage_label(lineage)}"
-    )
-
-
-def _watermark_sidecar(path: str, lineage) -> str:
-    """Per-lineage watermark file: each labeled lineage commits its
-    epoch watermark into its OWN ``_watermark.<lineage>.json`` (atomic
-    temp + rename), so two lineages folding concurrently into one
-    index can never lose each other's watermark to a meta
-    read-modify-write race (ADVICE r11).  The default (unlabeled)
-    lineage keeps the historical meta key — one stream per index by
-    contract, nothing to race."""
-    return os.path.join(path, f"_watermark.{_lineage_label(lineage)}.json")
-
-
-def _epoch_already_folded(path: str, meta: dict, epoch, lineage=None) -> bool:
-    """True when the lineage's watermark says this epoch's fold fully
-    committed (stat writes AND watermark commit) — the replay can
-    skip it entirely.  Epoch ids are monotone per checkpoint
-    (foreachBatch's batchId), so one watermark per lineage suffices.
-    Labeled lineages read their sidecar file (falling back to the
-    legacy ``last_epoch:<lineage>`` meta key for pre-sidecar
-    indexes); the default lineage reads the meta key."""
-    if epoch is None:
-        return False
-    last = None
-    if lineage is not None:
-        sidecar = _watermark_sidecar(path, lineage)
-        if os.path.isfile(sidecar):
-            with open(sidecar) as f:
-                last = json.load(f).get("last_epoch")
-    if last is None:
-        last = meta.get(_watermark_key(lineage))
-    return last is not None and int(epoch) <= int(last)
-
-
-def _commit_epoch(path: str, meta: dict, epoch, lineage=None) -> None:
-    if epoch is None:
-        return
-    if lineage is not None:
-        sidecar = _watermark_sidecar(path, lineage)
-        tmp = sidecar + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_epoch": int(epoch)}, f)
-        os.replace(tmp, sidecar)
-        return
-    meta[_watermark_key(lineage)] = int(epoch)
-    _write_meta(path, meta)
-
-
-def _read_meta(path: str, kind: str) -> dict:
-    with open(os.path.join(path, _META_NAME)) as f:
-        meta = json.load(f)
-    if meta.get("kind") != kind:
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, expected {kind!r}"
-        )
-    return meta
-
-
 # ---------------------------------------------------------------- MinHash
 
 
@@ -334,7 +176,7 @@ def minhash_index_write(
     _signature_frame(
         docs, id_col, text_col, num_perm, n, hash_fn
     ).write.mode("overwrite").parquet(os.path.join(path, "sigs"))
-    _write_meta(path, meta)
+    fc.write_meta(path, meta)
 
 
 def minhash_index_load(
@@ -344,7 +186,7 @@ def minhash_index_load(
     — corpus ∪ every folded increment so far.  The ``fold`` partition
     column epoch-labeled folds introduce is dropped: which fold a
     signature arrived in is lifecycle bookkeeping, not index data."""
-    meta = _read_meta(path, "minhash")
+    meta = fc.read_meta(path, "minhash")
     frame = spark.read.parquet(os.path.join(path, "sigs")).drop("fold")
     return frame, meta
 
@@ -372,18 +214,15 @@ def minhash_index_fold(
     The corpus is never read or rewritten.
 
     ``epoch``: pass foreachBatch's batch id to make the fold
-    IDEMPOTENT under at-least-once replay — an already-committed epoch
-    is skipped (meta watermark), a half-written one is overwritten in
-    its own ``fold=e<epoch>`` subdirectory.  ``lineage`` namespaces
-    the watermark and fold directories when several checkpoint
-    lineages fold into ONE index (epoch ids are only monotone within
-    a checkpoint)."""
-    meta = _read_meta(path, "minhash")
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    IDEMPOTENT under at-least-once replay; ``lineage`` tags one of
+    several checkpoint lineages folding into ONE index (see
+    :mod:`.fold_commit`)."""
+    meta = fc.read_meta(path, "minhash")
+    if fc.already_committed(path, meta, epoch, lineage):
         return
     hash_fn = _HASH_FNS[meta["hash"]]
     survivors = _survivors(increment_docs, flagged_ids, id_col)
-    _fold_write(
+    fc.fold_write(
         _signature_frame(
             survivors, id_col, text_col, meta["num_perm"], meta["n"], hash_fn
         ),
@@ -391,7 +230,7 @@ def minhash_index_fold(
         epoch,
         lineage,
     )
-    _commit_epoch(path, meta, epoch, lineage)
+    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def minhash_banded_index(
@@ -582,7 +421,7 @@ def simhash_index_write(
     _fingerprint_frame(docs, id_col, text_col, hash_fn).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "fps"))
-    _write_meta(path, meta)
+    fc.write_meta(path, meta)
 
 
 def simhash_index_load(
@@ -591,7 +430,7 @@ def simhash_index_load(
     """(index frame, meta).  Frame columns: (id, s) — corpus ∪ every
     folded increment so far; the epoch-fold partition column is
     lifecycle bookkeeping and dropped."""
-    meta = _read_meta(path, "simhash")
+    meta = fc.read_meta(path, "simhash")
     frame = spark.read.parquet(os.path.join(path, "fps")).drop("fold")
     return frame, meta
 
@@ -610,18 +449,18 @@ def simhash_index_fold(
     flag-against-rebuilt-corpus; fingerprints are pure functions of
     (text, hash)), same O(increment) cost, same epoch/lineage
     idempotence under at-least-once replay."""
-    meta = _read_meta(path, "simhash")
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    meta = fc.read_meta(path, "simhash")
+    if fc.already_committed(path, meta, epoch, lineage):
         return
     hash_fn = _HASH_FNS[meta["hash"]]
     survivors = _survivors(increment_docs, flagged_ids, id_col)
-    _fold_write(
+    fc.fold_write(
         _fingerprint_frame(survivors, id_col, text_col, hash_fn),
         os.path.join(path, "fps"),
         epoch,
         lineage,
     )
-    _commit_epoch(path, meta, epoch, lineage)
+    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def flag_against_simhash_index(
@@ -755,7 +594,7 @@ def substring_index_write(
     spark.read.parquet(fps_path).groupBy("fp").agg(
         F.count(F.lit(1)).alias("c")
     ).write.mode("overwrite").parquet(os.path.join(path, "df"))
-    _write_meta(path, meta)
+    fc.write_meta(path, meta)
 
 
 def _doc_fingerprints(
@@ -787,7 +626,7 @@ def substring_index_load(
     """(fps frame, summed df frame, meta).  The df frame aggregates
     the per-fold deltas to current corpus-wide document frequencies
     — a groupBy over the small delta table, not over fps."""
-    meta = _read_meta(path, "substring")
+    meta = fc.read_meta(path, "substring")
     fps = spark.read.parquet(os.path.join(path, "fps")).drop("fold")
     df = (
         spark.read.parquet(os.path.join(path, "df"))
@@ -815,22 +654,22 @@ def substring_index_fold(
     ``epoch``: see :func:`minhash_index_fold` — committed epochs skip,
     half-written ones overwrite their own subdirectories (a crash
     between the fps and df writes replays both cleanly)."""
-    meta = _read_meta(path, "substring")
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    meta = fc.read_meta(path, "substring")
+    if fc.already_committed(path, meta, epoch, lineage):
         return
     hash_fn = _HASH_FNS[meta["hash"]]
     survivors = _survivors(increment_docs, flagged_ids, id_col)
     fps = _doc_fingerprints(
         survivors, id_col, text_col, meta["k"], meta["w"], hash_fn
     )
-    _fold_write(fps, os.path.join(path, "fps"), epoch, lineage)
-    _fold_write(
+    fc.fold_write(fps, os.path.join(path, "fps"), epoch, lineage)
+    fc.fold_write(
         fps.groupBy("fp").agg(F.count(F.lit(1)).alias("c")),
         os.path.join(path, "df"),
         epoch,
         lineage,
     )
-    _commit_epoch(path, meta, epoch, lineage)
+    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 # ------------------------------------------------------------ exact n-gram
@@ -861,7 +700,7 @@ def exactngram_index_write(
     _gram_counts(docs, id_col, text_col, k).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "df"))
-    _write_meta(path, meta)
+    fc.write_meta(path, meta)
 
 
 def _gram_counts(
@@ -882,7 +721,7 @@ def exactngram_index_load(
 ) -> tuple[DataFrame, dict]:
     """(summed (fp, df) frame, meta) — gram document frequencies over
     corpus ∪ every folded increment (deltas summed, the LSM read)."""
-    meta = _read_meta(path, "exactngram")
+    meta = fc.read_meta(path, "exactngram")
     df = (
         spark.read.parquet(os.path.join(path, "df"))
         .groupBy("fp")
@@ -906,17 +745,17 @@ def exactngram_index_fold(
     over corpus ∪ survivors.  ``epoch``: see
     :func:`minhash_index_fold` — committed epochs skip, half-written
     ones overwrite their own subdirectory."""
-    meta = _read_meta(path, "exactngram")
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    meta = fc.read_meta(path, "exactngram")
+    if fc.already_committed(path, meta, epoch, lineage):
         return
     survivors = _survivors(increment_docs, flagged_ids, id_col)
-    _fold_write(
+    fc.fold_write(
         _gram_counts(survivors, id_col, text_col, meta["k"]),
         os.path.join(path, "df"),
         epoch,
         lineage,
     )
-    _commit_epoch(path, meta, epoch, lineage)
+    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def exactngram_seen_index(df: DataFrame) -> DataFrame:

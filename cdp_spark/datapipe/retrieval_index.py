@@ -29,10 +29,8 @@ Layout (all appends, no rewrites):
     <path>/df/    (term, c) per-fold document-frequency DELTAS
     <path>/sc/    (n_docs, sum_dl) one DELTA row per fold
 
-Folds given an ``epoch`` (streaming ingest) land in per-epoch
-``fold=e<epoch>/`` subdirectories with overwrite semantics plus a
-meta watermark — idempotent under foreachBatch's at-least-once
-replay (see ``dedup_index``'s epoch-fold helpers).
+Folds given an ``epoch`` (streaming ingest) follow the shared
+replay-safe fold protocol of :mod:`.fold_commit`.
 
 Reference parity: superset scope (the reference has no retrieval);
 cited next to the BM25 scorer it serves (analytics.py bm25_topk).
@@ -40,15 +38,13 @@ cited next to the BM25 scorer it serves (analytics.py bm25_topk).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fold_commit as fc
 from .analytics import bm25_score_tail
-
-_META_NAME = "_cdp_index_meta.json"
 
 
 def _doc_stats(
@@ -78,7 +74,6 @@ def _write_or_fold(
     lineage: str | None = None,
 ) -> None:
     from ..session import iter_checkpoint
-    from .dedup_index import _fold_write
 
     tf, dl = _doc_stats(docs, id_col, text_col)
     # tf feeds three consumers (postings write, df delta, nothing
@@ -92,20 +87,13 @@ def _write_or_fold(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("dl").cast("decimal(28,6)")).alias("sum_dl"),
     )
-    if mode == "append":
-        # folds go through the epoch-aware writer: epoch=None keeps
-        # the historical append, an integer epoch overwrites its own
-        # fold=e<epoch> subdirectory so a foreachBatch replay of a
-        # half-written fold leaves no duplicate statistics
-        _fold_write(tf_sorted, os.path.join(path, "tf"), epoch, lineage)
-        _fold_write(dl, os.path.join(path, "dl"), epoch, lineage)
-        _fold_write(df_delta, os.path.join(path, "df"), epoch, lineage)
-        _fold_write(sc_delta, os.path.join(path, "sc"), epoch, lineage)
-    else:
-        tf_sorted.write.mode(mode).parquet(os.path.join(path, "tf"))
-        dl.write.mode(mode).parquet(os.path.join(path, "dl"))
-        df_delta.write.mode(mode).parquet(os.path.join(path, "df"))
-        sc_delta.write.mode(mode).parquet(os.path.join(path, "sc"))
+    for stat, frame in (
+        ("tf", tf_sorted), ("dl", dl), ("df", df_delta), ("sc", sc_delta)
+    ):
+        if mode == "append":
+            fc.fold_write(frame, os.path.join(path, stat), epoch, lineage)
+        else:
+            frame.write.mode(mode).parquet(os.path.join(path, stat))
 
 
 def bm25_index_write(
@@ -117,14 +105,7 @@ def bm25_index_write(
     """Build the persisted BM25 index over the corpus (one tokenize
     pass; see module docstring for layout)."""
     _write_or_fold(docs, path, id_col, text_col, "overwrite")
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(
-            {"kind": "bm25", "tokenizer": "lower split [^a-z0-9]+"},
-            f,
-            indent=1,
-            sort_keys=True,
-        )
+    bm25_index_init(path)
 
 
 def bm25_index_init(path: str) -> None:
@@ -133,14 +114,9 @@ def bm25_index_init(path: str) -> None:
     parquet appends create the statistic directories on first write.
     A query before any fold has no postings to read; fold at least
     once first."""
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, _META_NAME), "w") as f:
-        json.dump(
-            {"kind": "bm25", "tokenizer": "lower split [^a-z0-9]+"},
-            f,
-            indent=1,
-            sort_keys=True,
-        )
+    fc.write_meta(
+        path, {"kind": "bm25", "tokenizer": "lower split [^a-z0-9]+"}
+    )
 
 
 def bm25_index_fold(
@@ -157,28 +133,17 @@ def bm25_index_fold(
     corpus ∪ increment (the shared-oracle contract).
 
     ``epoch``: pass foreachBatch's batch id to make the fold
-    IDEMPOTENT under at-least-once replay — a committed epoch is
-    skipped via the meta watermark, a half-written one (crash between
-    the four stat writes) is overwritten in its own ``fold=e<epoch>``
-    subdirectories.  ``lineage`` namespaces the watermark and fold
-    directories when several checkpoint lineages (several ingest
-    streams) fold into ONE index — epoch ids are only monotone within
-    a checkpoint.  Without the epoch key, a replayed batch
-    double-counts tf/df/N (VERDICT r10 "what's wrong" #1)."""
-    from .dedup_index import _commit_epoch, _epoch_already_folded
-
-    with open(os.path.join(path, _META_NAME)) as f:
-        meta = json.load(f)
-    if meta.get("kind") != "bm25":
-        raise ValueError(
-            f"index at {path} is kind={meta.get('kind')!r}, expected 'bm25'"
-        )
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    IDEMPOTENT under at-least-once replay (a crash between the four
+    stat writes rewrites them cleanly); ``lineage`` tags one of several
+    ingest streams folding into ONE index (see :mod:`.fold_commit`).
+    Without the epoch key, a replayed batch double-counts tf/df/N."""
+    meta = fc.read_meta(path, "bm25")
+    if fc.already_committed(path, meta, epoch, lineage):
         return
     _write_or_fold(
         increment_docs, path, id_col, text_col, "append", epoch, lineage
     )
-    _commit_epoch(path, meta, epoch, lineage)
+    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def bm25_index_topk(

@@ -8,18 +8,24 @@
   fixed seeded projections; same-bucket join gives the ANN candidate
   set (the scale path: the shuffle carries (id, bucket) only).
 - IVF-style coarse quantization over seeded anchor points for
-  partition pruning at query time.
+  partition pruning at query time; the persisted IVF index folds
+  increments under the shared replay-safe protocol of
+  :mod:`.fold_commit`.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import math
+import os
 import random
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import fold_commit as fc
 
 logger = logging.getLogger(__name__)
 
@@ -1308,9 +1314,7 @@ def ivf_index_recall(
     core (:func:`_recall_at_k`).  Output: (query_id, recall_at_k)."""
     import math as _math
 
-    from .dedup_index import _read_meta
-
-    meta = _read_meta(path, "ivf")
+    meta = fc.read_meta(path, "ivf")
     id_col, vec_col = meta["id_col"], meta["vec_col"]
     dim = int(meta["dim"])
     qids, qmat = _collect_query_matrix(queries, dim, id_col, vec_col)
@@ -1749,11 +1753,15 @@ def ivf_append(
 # #3): a meta file pins the assignment model (dim, anchors seed,
 # n_centroids, columns) so folds can never silently mix assignment
 # spaces, and folds given an ``epoch`` are IDEMPOTENT under
-# foreachBatch replay — the same fold=e<epoch> + meta-watermark
-# pattern as dedup_index/retrieval_index.  Layout:
+# foreachBatch replay — the shared protocol of ``fold_commit``.
+# Layout:
 #
-#     <path>/_cdp_index_meta.json
-#     <path>/fold=e<epoch>/centroid=<c>/   per-fold, per-list parquet
+#     <path>/_cdp_index_meta.json           model + ``base_counts``
+#     <path>/fold=base/centroid=<c>/        epoch-less appends
+#     <path>/fold=[<lineage>-]e<N>/centroid=<c>/   one epoch fold
+#     <path>/_foldcounts.<fold>.json        that fold's per-list counts
+#     <path>/_foldcounts.base.json          epoch-less appends' counts
+#     <path>/_foldcounts_compact.json       merged counts of old folds
 #
 # Both ``fold`` and ``centroid`` are partition directories, so a
 # query's ``centroid IN (probed)`` still prunes at file-listing time
@@ -1784,8 +1792,6 @@ def ivf_index_init(
     :func:`kmeans_fit`'s rule) and queries rank probe lists the same
     way.  The model is k*dim floats — meta-sized state, exactly like
     the anchors' (seed, dim) pin."""
-    from .dedup_index import _write_meta
-
     meta = {
         "kind": "ivf",
         "dim": dim,
@@ -1805,7 +1811,7 @@ def ivf_index_init(
                 f"{n_centroids}"
             )
         meta["centroids"] = [[float(x) for x in c] for c in centroids]
-    _write_meta(path, meta)
+    fc.write_meta(path, meta)
 
 
 def _ivf_meta_assign(df: DataFrame, meta: dict) -> DataFrame:
@@ -1851,9 +1857,9 @@ def ivf_index_fold(
     """FOLD an embedding increment into the persisted IVF index:
     assign against the meta-pinned model (trained centroids or the
     anchor set) and write the centroid-partitioned rows into this
-    fold's subdirectory.  O(increment); committed epochs skip (meta
-    watermark), half-written ones overwrite their own ``fold=e<epoch>``
-    directory — see the module-level lifecycle note.
+    fold's subdirectory.  O(increment); committed epochs skip,
+    half-written ones overwrite their own fold directory (see
+    :mod:`.fold_commit`).
 
     ``return_counts=True`` additionally returns the increment's rows
     per centroid (the occupancy delta the refit policy accumulates —
@@ -1863,71 +1869,60 @@ def ivf_index_fold(
 
     Every EPOCH fold also persists its per-centroid counts in a
     ``_foldcounts.<fold>.json`` sidecar written atomically BEFORE the
-    epoch commit (VERDICT r12 next #4): the counts are part of the
-    fold's epoch-keyed atomic unit, so occupancy derived by
-    :func:`ivf_index_occupancy` can never lose a committed fold's
-    delta to a crash — a half-written fold is replayed and overwrites
-    both its data and its sidecar.
+    epoch commit: the counts are part of the fold's epoch-keyed atomic
+    unit, so occupancy derived by :func:`ivf_index_occupancy` can
+    never lose a committed fold's delta to a crash — a half-written
+    fold is replayed and overwrites both its data and its sidecar.
+
+    An EPOCH-LESS fold appends into ``fold=base`` and adds its counts
+    to ``_foldcounts.base.json``.  It holds the ``_append.lock`` file
+    while it does: a concurrent epoch-less append would count the
+    other's part files as its own and race the sidecar
+    read-modify-write, so a second appender fails loudly instead.
 
     Every ``compact_every`` epoch folds the sidecars are merged into
-    the single ``_foldcounts_compact.json`` (:func:`compact_foldcounts`,
-    VERDICT r13 next #4) so a never-refitted deployment's occupancy
-    derivation reads O(1) files, not O(#folds); ``compact_every=None``
-    disables the automatic compaction."""
-    import os as _os
-
-    from .dedup_index import (
-        _commit_epoch,
-        _epoch_already_folded,
-        _migrate_to_fold_layout,
-        _read_meta,
-    )
-
-    meta = _read_meta(path, "ivf")
-    if _epoch_already_folded(path, meta, epoch, lineage):
+    the single ``_foldcounts_compact.json`` (:func:`compact_foldcounts`)
+    so a never-refitted deployment's occupancy derivation reads O(1)
+    files, not O(#folds); ``compact_every=None`` disables the
+    automatic compaction."""
+    meta = fc.read_meta(path, "ivf")
+    if fc.already_committed(path, meta, epoch, lineage):
         return None
     assigned = _ivf_meta_assign(
         increment.select(meta["id_col"], meta["vec_col"]), meta
     )
-    # epoch-less appends into a base_counts generation must stay
-    # visible to derived occupancy (ADVICE r13): they land in
-    # fold=base, which the derivation reads from meta, not footers
-    track_base = epoch is None and meta.get("base_counts") is not None
-    want_counts = return_counts or epoch is not None or track_base
-    _migrate_to_fold_layout(path)
+    fc.migrate_to_fold_layout(path)
     # Per-centroid counts come from the PARQUET FOOTERS of the files
-    # this fold just wrote (optimization r17, guide §1.2/§5: the write
-    # already materialized every row — a persist + second aggregation
-    # job over the assignment recomputed what the file metadata states
-    # for free).  Append-mode folds count only the files NEW in this
-    # write (part file names are unique per task attempt).
+    # this fold just wrote: the write already materialized every row,
+    # so the file metadata states the counts without a second job.
     if epoch is None:
-        fold_dir = _os.path.join(path, "fold=base")
-        before = _fold_part_files(fold_dir) if want_counts else set()
-        assigned.write.mode("append").partitionBy("centroid").parquet(fold_dir)
-        fold_name = None
-        counts = (
-            _fold_footer_counts(fold_dir, only=_fold_part_files(fold_dir) - before)
-            if want_counts
-            else None
-        )
-    else:
-        from .dedup_index import _lineage_label
-
-        prefix = f"{_lineage_label(lineage)}-" if lineage is not None else ""
-        fold_name = f"{prefix}e{int(epoch)}"
-        fold_dir = _os.path.join(path, f"fold={fold_name}")
-        assigned.write.mode("overwrite").partitionBy("centroid").parquet(fold_dir)
-        counts = _fold_footer_counts(fold_dir) if want_counts else None
-    if fold_name is not None:
-        _write_foldcounts(path, fold_name, counts)
-    elif track_base:
-        _bump_base_foldcounts(path, counts)
-    _commit_epoch(path, meta, epoch, lineage)
-    if fold_name is not None and compact_every is not None:
+        fold_dir = os.path.join(path, fc.fold_dir_name(fc.BASE))
+        with fc.exclusive_lock(
+            os.path.join(path, "_append.lock"),
+            "concurrent epoch-less appends would count each other's "
+            "part files into their occupancy deltas",
+        ):
+            # append mode: count only the part files NEW in this write
+            # (part file names are unique per task attempt)
+            before = _fold_part_files(fold_dir)
+            assigned.write.mode("append").partitionBy("centroid").parquet(
+                fold_dir
+            )
+            counts = _fold_footer_counts(
+                fold_dir, only=_fold_part_files(fold_dir) - before
+            )
+            _bump_base_foldcounts(path, counts)
+        return counts if return_counts else None
+    name = fc.fold_name(epoch, lineage)
+    fold_dir = os.path.join(path, fc.fold_dir_name(name))
+    assigned.write.mode("overwrite").partitionBy("centroid").parquet(fold_dir)
+    counts = _fold_footer_counts(fold_dir)
+    _write_foldcounts(path, name, counts)
+    fc.commit_epoch(path, meta, epoch, lineage)
+    if compact_every is not None:
         n_sidecars = sum(
             1
-            for e in _os.listdir(path)
+            for e in os.listdir(path)
             if e.startswith("_foldcounts.")
             and e.endswith(".json")
             and e != "_foldcounts.base.json"
@@ -1940,18 +1935,16 @@ def ivf_index_fold(
 def _fold_part_files(fold_dir: str) -> set[str]:
     """Relative ``centroid=<c>/part-*.parquet`` paths currently in a
     fold directory (empty when the directory does not exist yet)."""
-    import os as _os
-
     files: set[str] = set()
-    if not _os.path.isdir(fold_dir):
+    if not os.path.isdir(fold_dir):
         return files
-    for entry in _os.listdir(fold_dir):
+    for entry in os.listdir(fold_dir):
         if not entry.startswith("centroid="):
             continue
-        cdir = _os.path.join(fold_dir, entry)
-        for f in _os.listdir(cdir):
+        cdir = os.path.join(fold_dir, entry)
+        for f in os.listdir(cdir):
             if f.endswith(".parquet"):
-                files.add(_os.path.join(entry, f))
+                files.add(os.path.join(entry, f))
     return files
 
 
@@ -1960,84 +1953,71 @@ def _fold_footer_counts(
 ) -> dict[int, int]:
     """Per-centroid row counts of a centroid-partitioned fold
     directory, summed from the parquet FOOTERS — exact file-level
-    metadata, no Spark job (optimization r17).  ``only`` restricts the
-    sum to the given relative paths (the append-mode delta); centroids
-    with zero counted rows are omitted, matching the groupBy shape
-    this replaces."""
-    import os as _os
-
+    metadata, no Spark job.  ``only`` restricts the sum to the given
+    relative paths (the append-mode delta); centroids with zero
+    counted rows are omitted."""
     import pyarrow.parquet as _pq
 
     counts: dict[int, int] = {}
-    for entry in _os.listdir(fold_dir):
+    for entry in os.listdir(fold_dir):
         if not entry.startswith("centroid="):
             continue
         cid = int(entry.split("=", 1)[1])
-        cdir = _os.path.join(fold_dir, entry)
+        cdir = os.path.join(fold_dir, entry)
         n = 0
-        for f in _os.listdir(cdir):
+        for f in os.listdir(cdir):
             if not f.endswith(".parquet"):
                 continue
-            if only is not None and _os.path.join(entry, f) not in only:
+            if only is not None and os.path.join(entry, f) not in only:
                 continue
-            n += _pq.ParquetFile(_os.path.join(cdir, f)).metadata.num_rows
+            n += _pq.ParquetFile(os.path.join(cdir, f)).metadata.num_rows
         if n:
             counts[cid] = n
     return counts
 
 
-def _foldcounts_path(path: str, fold_name: str) -> str:
-    import os as _os
+def _add_counts(acc: dict[int, int], delta: dict) -> None:
+    """Add a JSON-read (string-keyed) per-centroid delta into ``acc``."""
+    for c, n in delta.items():
+        acc[int(c)] = acc.get(int(c), 0) + int(n)
 
-    return _os.path.join(path, f"_foldcounts.{fold_name}.json")
+
+def _json_counts(counts: dict) -> dict[str, int]:
+    return {str(int(c)): int(n) for c, n in counts.items()}
+
+
+def _read_counts(target: str) -> dict:
+    with open(target) as f:
+        return json.load(f)["counts"]
+
+
+def _foldcounts_path(path: str, fold_name: str) -> str:
+    return os.path.join(path, f"_foldcounts.{fold_name}.json")
 
 
 def _write_foldcounts(path: str, fold_name: str, counts: dict) -> None:
-    import json as _json
-    import os as _os
-
-    target = _foldcounts_path(path, fold_name)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(
-            {"counts": {str(int(c)): int(n) for c, n in counts.items()}},
-            f,
-            sort_keys=True,
-        )
-    _os.replace(tmp, target)
+    fc.write_json_atomic(
+        _foldcounts_path(path, fold_name), {"counts": _json_counts(counts)}
+    )
 
 
 def _bump_base_foldcounts(path: str, counts: dict) -> None:
     """Accumulate an EPOCH-LESS append's per-centroid delta into the
-    ``_foldcounts.base.json`` sidecar (ADVICE r13): epoch-less folds
-    land in ``fold=base``, whose rows a ``base_counts`` generation
-    derives from META, not footers — without this sidecar they would
-    be invisible to occupancy until a refit rebases.  Epoch-less
-    appends carry no watermark (not replayable by contract), so this
-    is a read-modify-write under the same single-caller contract as
-    the ``mode("append")`` data write itself; the epoch-keyed fold
-    path stays the crash-exact one."""
-    import json as _json
-    import os as _os
-
-    target = _foldcounts_path(path, "base")
-    acc: dict[str, int] = {}
-    if _os.path.isfile(target):
-        with open(target) as f:
-            acc = _json.load(f)["counts"]
-    for c, n in counts.items():
-        key = str(int(c))
-        acc[key] = int(acc.get(key, 0)) + int(n)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump({"counts": acc}, f, sort_keys=True)
-    _os.replace(tmp, target)
+    ``_foldcounts.base.json`` sidecar: epoch-less folds land in
+    ``fold=base``, whose rows occupancy takes from the meta's
+    ``base_counts``, not from footers — without this sidecar they
+    would be invisible to occupancy until a refit rebases.  A
+    read-modify-write: the caller holds the append lock."""
+    target = _foldcounts_path(path, fc.BASE)
+    acc: dict[int, int] = {}
+    if os.path.isfile(target):
+        _add_counts(acc, _read_counts(target))
+    _add_counts(acc, counts)
+    _write_foldcounts(path, fc.BASE, acc)
 
 
 def _compact_foldcounts_path(path: str) -> str:
-    import os as _os
-
-    return _os.path.join(path, "_foldcounts_compact.json")
+    return os.path.join(path, "_foldcounts_compact.json")
 
 
 def _read_compact_foldcounts(path: str) -> dict:
@@ -2047,55 +2027,22 @@ def _read_compact_foldcounts(path: str) -> dict:
     exists (a crash between the compact write and the sidecar
     deletions, or an uncommitted epoch's replay re-writing its
     sidecar, must never double-count)."""
-    import json as _json
-    import os as _os
-
     target = _compact_foldcounts_path(path)
-    if not _os.path.isfile(target):
+    if not os.path.isfile(target):
         return {"counts": {}, "folds": []}
     with open(target) as f:
-        return _json.load(f)
-
-
-def _fold_committed(path: str, meta: dict, fold_name: str) -> bool:
-    """Whether this fold's epoch watermark has committed — the gate
-    for compacting a FOOTER-fallback fold (no sidecar): an in-progress
-    fold's directory would footer-count partial rows.  Sidecar'd folds
-    need no gate (the sidecar is written after the data completes, and
-    a replay rewrites identical counts)."""
-    import json as _json
-    import os as _os
-
-    label, sep, ep = fold_name.rpartition("-e")
-    if not sep:
-        if not fold_name.startswith("e"):
-            return False
-        label, ep = None, fold_name[1:]
-    try:
-        epoch = int(ep)
-    except ValueError:
-        return False
-    last = None
-    if label is not None:
-        sidecar = _os.path.join(path, f"_watermark.{label}.json")
-        if _os.path.isfile(sidecar):
-            with open(sidecar) as f:
-                last = _json.load(f).get("last_epoch")
-        if last is None:
-            last = meta.get(f"last_epoch:{label}")
-    else:
-        last = meta.get("last_epoch")
-    return last is not None and int(last) >= epoch
+        return json.load(f)
 
 
 def compact_foldcounts(path: str) -> bool:
-    """MERGE per-fold ``_foldcounts`` sidecars (and committed legacy
-    folds' footer counts) into the single ``_foldcounts_compact.json``
-    and delete the merged sidecars, so a never-refitted deployment's
-    policy check reads O(1) files instead of O(#folds) (VERDICT r13
-    next #4 — the one unbounded-growth seam left in the serving
-    loop).  :func:`ivf_index_fold` calls this automatically every
-    ``compact_every`` epoch folds; safe to run manually any time.
+    """MERGE per-fold ``_foldcounts`` sidecars into the single
+    ``_foldcounts_compact.json`` and delete the merged sidecars, so a
+    never-refitted deployment's policy check reads O(1) files instead
+    of O(#folds).  :func:`ivf_index_fold` calls this automatically
+    every ``compact_every`` epoch folds; safe to run manually any
+    time.  A fold directory without a sidecar is still in progress
+    (every epoch fold writes its sidecar before its watermark) and is
+    left for a later compaction.
 
     Crash-safe by construction: the compact file lists the covered
     fold names, and the derivation skips covered folds even when
@@ -2122,25 +2069,21 @@ def compact_foldcounts(path: str) -> bool:
     rename, exactly one wins and re-acquires, and the loser can
     never unlink the winner's fresh lock (the delete-then-recreate
     TOCTOU a plain remove would open)."""
-    import json as _json
-    import os as _os
     import time as _time
 
-    from .dedup_index import _read_meta
-
-    lock = _os.path.join(path, "_foldcounts_compact.lock")
+    lock = os.path.join(path, "_foldcounts_compact.lock")
 
     def _acquire():
-        return _os.open(lock, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
+        return os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
 
     try:
         fd = _acquire()
     except FileExistsError:
         ident = _lock_identity(lock)
         if ident is not None and _lock_is_stale(lock, _time.time()):
-            tomb = f"{lock}.stale.{_os.getpid()}"
+            tomb = f"{lock}.stale.{os.getpid()}"
             try:
-                _os.rename(lock, tomb)
+                os.rename(lock, tomb)
             except OSError:  # another process broke it first
                 return False
             # ADVICE r15 TOCTOU: between our staleness judgment and
@@ -2154,11 +2097,11 @@ def compact_foldcounts(path: str) -> bool:
             # lock, which would let two compactions run concurrently.
             if _lock_identity(tomb) != ident:
                 try:
-                    _os.link(tomb, lock)
+                    os.link(tomb, lock)
                 except OSError:
                     pass  # a newer lock exists: leave it theirs
                 try:
-                    _os.remove(tomb)
+                    os.remove(tomb)
                 except FileNotFoundError:
                     pass
                 return False
@@ -2167,7 +2110,7 @@ def compact_foldcounts(path: str) -> bool:
                 "(holder dead or lock aged out)", lock,
             )
             try:
-                _os.remove(tomb)
+                os.remove(tomb)
             except FileNotFoundError:
                 pass
             try:
@@ -2183,60 +2126,39 @@ def compact_foldcounts(path: str) -> bool:
     try:
         import socket as _socket
 
-        _os.write(
-            fd, f"{_socket.gethostname()}:{_os.getpid()}".encode()
-        )
-        _os.close(fd)
-        meta = _read_meta(path, "ivf")
+        os.write(fd, f"{_socket.gethostname()}:{os.getpid()}".encode())
+        os.close(fd)
         compact = _read_compact_foldcounts(path)
         covered = set(compact["folds"])
-        acc = {str(int(c)): int(n) for c, n in compact["counts"].items()}
+        acc: dict[int, int] = {}
+        _add_counts(acc, compact["counts"])
         merged: list[str] = []
         stale: list[str] = []
-        for entry in sorted(_os.listdir(path)):
-            if not entry.startswith("fold=") or entry == "fold=base":
-                continue
-            fold_name = entry.split("=", 1)[1]
+        for fold_name in fc.epoch_fold_names(path):
             sidecar = _foldcounts_path(path, fold_name)
+            if not os.path.isfile(sidecar):
+                continue  # in progress: no sidecar yet
             if fold_name in covered:
-                if _os.path.isfile(sidecar):
-                    stale.append(sidecar)  # replay re-wrote it; identical
+                stale.append(sidecar)  # replay re-wrote it; identical
                 continue
-            if _os.path.isfile(sidecar):
-                with open(sidecar) as f:
-                    delta = _json.load(f)["counts"]
-            elif _fold_committed(path, meta, fold_name):
-                delta = _fold_counts_from_footers(
-                    _os.path.join(path, entry)
-                )
-            else:  # in-progress or unparseable fold: leave it alone
-                continue
-            for c, n in delta.items():
-                key = str(int(c))
-                acc[key] = int(acc.get(key, 0)) + int(n)
+            _add_counts(acc, _read_counts(sidecar))
             covered.add(fold_name)
-            if _os.path.isfile(sidecar):
-                merged.append(sidecar)
-        if len(covered) == len(compact["folds"]) and not stale:
+            merged.append(sidecar)
+        if not merged and not stale:
             return True  # nothing new to cover, nothing to clean
-        target = _compact_foldcounts_path(path)
-        tmp = target + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {"counts": acc, "folds": sorted(covered)},
-                f,
-                sort_keys=True,
-            )
-        _os.replace(tmp, target)
+        fc.write_json_atomic(
+            _compact_foldcounts_path(path),
+            {"counts": _json_counts(acc), "folds": sorted(covered)},
+        )
         for sidecar in merged + stale:
             try:
-                _os.remove(sidecar)
+                os.remove(sidecar)
             except FileNotFoundError:
                 pass
         return True
     finally:
         try:
-            _os.remove(lock)
+            os.remove(lock)
         except FileNotFoundError:
             pass
 
@@ -2292,101 +2214,41 @@ def _lock_is_stale(lock: str, now: float, max_age: float = 3600.0) -> bool:
         return False
 
 
-def _fold_counts_from_footers(fold_dir: str) -> dict[int, int]:
-    """Per-centroid row counts of one fold directory read from the
-    parquet FOOTERS — driver-side file metadata only, never a Spark
-    job.  The legacy fallback for pre-sidecar folds; new folds carry
-    a ``_foldcounts`` sidecar instead (O(1) read)."""
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    counts: dict[int, int] = {}
-    if not _os.path.isdir(fold_dir):
-        return counts
-    for entry in _os.listdir(fold_dir):
-        if not entry.startswith("centroid="):
-            continue
-        cid = int(entry.split("=", 1)[1])
-        part = _os.path.join(fold_dir, entry)
-        n = 0
-        for fn in _os.listdir(part):
-            if fn.endswith(".parquet"):
-                n += _pq.read_metadata(_os.path.join(part, fn)).num_rows
-        if n:
-            counts[cid] = counts.get(cid, 0) + n
-    return counts
-
-
 def ivf_index_occupancy(path: str) -> dict:
     """DERIVE the index's per-centroid occupancy from committed state
     only — the meta-pinned ``base_counts`` (what the generation's
     initial build/refit wrote) plus every fold's ``_foldcounts``
     sidecar (written inside the fold's epoch-keyed atomic unit, so a
-    crash can never tear occupancy away from the data; VERDICT r12
-    next #4 / ADVICE r12).  Pre-sidecar folds fall back to parquet
-    footer counts (driver-side metadata, no Spark job).  Epoch-less
-    appends into a ``base_counts`` generation are read from the
-    ``_foldcounts.base`` sidecar they accumulate into (ADVICE r13)
-    and count as growth, not base.  Folds merged by
-    :func:`compact_foldcounts` arrive in ONE read of
+    crash can never tear occupancy away from the data).  Epoch-less
+    appends into the generation are read from the ``_foldcounts.base``
+    sidecar they accumulate into and count as growth, not base.  Folds
+    merged by :func:`compact_foldcounts` arrive in ONE read of
     ``_foldcounts_compact.json`` — the derivation stays O(1) in file
     reads no matter how many folds a never-refitted deployment
-    accumulates (VERDICT r13 next #4).
+    accumulates.
 
     Returns ``{"counts": {cid: n}, "total": n, "base_total": n}``;
     ``total - base_total`` is the number of vectors folded since the
     generation was built — the refit policy's growth gate, derived
     instead of accumulated so there is no mutable counter to lose."""
-    import json as _json
-    import os as _os
-
-    from .dedup_index import _read_meta
-
-    meta = _read_meta(path, "ivf")
-    base = meta.get("base_counts")
-    base_sidecar_counts: dict[str, int] = {}
-    if base is None:
-        # pre-r13 generation: count the non-fold base data from footers
-        base = _fold_counts_from_footers(_os.path.join(path, "fold=base"))
-        root_level = _fold_counts_from_footers(path)
-        for c, n in root_level.items():
-            base[c] = base.get(c, 0) + n
-    else:
-        # ADVICE r13: epoch-less appends into a base_counts generation
-        # accumulate in the _foldcounts.base sidecar (their rows live
-        # in fold=base, which this branch never footer-counts); they
-        # count as GROWTH, not base — the refit policy must see them
-        base_fc = _foldcounts_path(path, "base")
-        if _os.path.isfile(base_fc):
-            with open(base_fc) as f:
-                base_sidecar_counts = _json.load(f)["counts"]
-    counts = {int(c): int(n) for c, n in base.items()}
+    meta = fc.read_meta(path, "ivf")
+    counts: dict[int, int] = {}
+    _add_counts(counts, meta["base_counts"])
     base_total = sum(counts.values())
-    for c, n in base_sidecar_counts.items():
-        counts[int(c)] = counts.get(int(c), 0) + int(n)
-    # compacted folds in ONE read (VERDICT r13 next #4); their names
-    # are skipped below even if a sidecar lingers (crash between the
-    # compact write and its cleanup, or an uncommitted epoch's replay
-    # re-writing identical counts) — covered wins, never both
+    base_fc = _foldcounts_path(path, fc.BASE)
+    if os.path.isfile(base_fc):
+        _add_counts(counts, _read_counts(base_fc))
+    # compacted folds in ONE read; their names are skipped below even
+    # if a sidecar lingers (crash between the compact write and its
+    # cleanup, or an uncommitted epoch's replay re-writing identical
+    # counts) — covered wins, never both
     compact = _read_compact_foldcounts(path)
     covered = set(compact["folds"])
-    for c, n in compact["counts"].items():
-        counts[int(c)] = counts.get(int(c), 0) + int(n)
-    for entry in sorted(_os.listdir(path)) if _os.path.isdir(path) else []:
-        if not entry.startswith("fold=") or entry == "fold=base":
-            continue
-        fold_name = entry.split("=", 1)[1]
-        if fold_name in covered:
-            continue
+    _add_counts(counts, compact["counts"])
+    for fold_name in fc.epoch_fold_names(path):
         sidecar = _foldcounts_path(path, fold_name)
-        if _os.path.isfile(sidecar):
-            with open(sidecar) as f:
-                delta = _json.load(f)["counts"]
-        else:  # legacy fold without a sidecar
-            delta = _fold_counts_from_footers(_os.path.join(path, entry))
-        for c, n in delta.items():
-            counts[int(c)] = counts.get(int(c), 0) + int(n)
+        if fold_name not in covered and os.path.isfile(sidecar):
+            _add_counts(counts, _read_counts(sidecar))
     return {
         "counts": counts,
         "total": sum(counts.values()),
@@ -2410,9 +2272,7 @@ def ivf_index_topk(
     time across every fold directory), exact cosine top-k within
     them.  Equals :func:`ivf_topk` / the trained probe over the union
     of all folded increments."""
-    from .dedup_index import _read_meta
-
-    meta = _read_meta(path, "ivf")
+    meta = fc.read_meta(path, "ivf")
     if len(query_vector) != int(meta["dim"]):
         raise ValueError(
             f"query vector has dim {len(query_vector)}, but the index at "
@@ -2483,14 +2343,24 @@ def _read_serving(root: str) -> dict:
 
 
 def _write_serving(root: str, state: dict) -> None:
-    import json as _json
-    import os as _os
+    fc.write_json_atomic(os.path.join(root, _SERVING_NAME), state)
 
-    _os.makedirs(root, exist_ok=True)
-    tmp = _os.path.join(root, _SERVING_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump(state, f, indent=1, sort_keys=True)
-    _os.replace(tmp, _os.path.join(root, _SERVING_NAME))
+
+def _write_occupancy_snapshot(root: str, gen: int, occ: dict) -> None:
+    """``<root>/_ivf_occupancy.json``: the gen-stamped MONITORING view
+    of a generation's derived occupancy (:func:`ivf_index_occupancy`'s
+    shape); readers ignore it when its ``gen`` is not the served
+    one."""
+    fc.write_json_atomic(
+        os.path.join(root, "_ivf_occupancy.json"),
+        {
+            "gen": int(gen),
+            "counts": _json_counts(occ["counts"]),
+            "total": int(occ["total"]),
+            "since_refit": int(occ["total"] - occ["base_total"]),
+            "refits": int(gen),
+        },
+    )
 
 
 def ivf_serving_path(root: str) -> str:
@@ -2559,29 +2429,6 @@ def ivf_serving_topk(
     )
 
 
-def _ivf_watermark_state(gen_path: str) -> dict[str, int]:
-    """Every lineage's committed epoch watermark for one generation —
-    sidecar files plus legacy ``last_epoch*`` meta keys.  The refit
-    compares this snapshot before and after its rebuild: any advance
-    means a fold committed concurrently (its vectors are NOT in the
-    rebuild), so carrying its watermark would silently drop them."""
-    import json as _json
-    import os as _os
-
-    from .dedup_index import _read_meta
-
-    state: dict[str, int] = {}
-    for entry in _os.listdir(gen_path):
-        if entry.startswith("_watermark.") and entry.endswith(".json"):
-            with open(_os.path.join(gen_path, entry)) as f:
-                state[entry] = int(_json.load(f)["last_epoch"])
-    meta = _read_meta(gen_path, "ivf")
-    for k, v in meta.items():
-        if k.startswith("last_epoch"):
-            state[f"meta:{k}"] = int(v)
-    return state
-
-
 def ivf_serving_refit(
     spark,
     root: str,
@@ -2624,33 +2471,21 @@ def ivf_serving_refit(
     epoch into the new generation on its next micro-batch
     (epoch-idempotent by construction).
     """
-    import json as _json
-    import os as _os
     import shutil as _shutil
 
-    from .dedup_index import _read_meta, _write_meta
-
-    lock = _os.path.join(root, "_refit.lock")
-    try:
-        fd = _os.open(lock, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"another refit holds {lock} — concurrent refits would "
-            "destroy each other's in-progress generation.  If the "
-            "previous refit crashed, remove the lock file and re-run "
-            "(a crash mid-refit never tears the served index: the "
-            "pointer swap is the last step)."
-        ) from None
-    try:
-        _os.write(fd, str(_os.getpid()).encode())
-        _os.close(fd)
+    with fc.exclusive_lock(
+        os.path.join(root, "_refit.lock"),
+        "concurrent refits would destroy each other's in-progress "
+        "generation (a crash mid-refit never tears the served index: "
+        "the pointer swap is the last step)",
+    ):
         state = _read_serving(root)
-        cur = _os.path.join(root, f"gen-{int(state['gen'])}")
-        meta = _read_meta(cur, "ivf")
+        cur = os.path.join(root, f"gen-{int(state['gen'])}")
+        meta = fc.read_meta(cur, "ivf")
         id_col, vec_col = meta["id_col"], meta["vec_col"]
-        new_gen = _os.path.join(root, f"gen-{int(state['gen']) + 1}")
+        new_gen = os.path.join(root, f"gen-{int(state['gen']) + 1}")
         for attempt in range(int(max_retries) + 1):
-            marks = _ivf_watermark_state(cur)
+            marks = fc.watermarks(cur)
             vectors = spark.read.parquet(cur).select(id_col, vec_col)
             cents, assigned = kmeans_fit(
                 vectors,
@@ -2661,7 +2496,7 @@ def ivf_serving_refit(
                 iters=iters,
                 seed=int(meta["seed"]),
             )
-            if _os.path.isdir(new_gen):  # crashed/stale earlier attempt
+            if os.path.isdir(new_gen):  # crashed/stale earlier attempt
                 _shutil.rmtree(new_gen)
             out = assigned.select(
                 F.col(id_col),
@@ -2674,7 +2509,7 @@ def ivf_serving_refit(
             # occupancy from the written footers — no persist, no
             # second aggregation job (optimization r17)
             counts = _fold_footer_counts(new_gen)
-            if _ivf_watermark_state(cur) == marks:
+            if fc.watermarks(cur) == marks:
                 break
             logger.warning(
                 "refit attempt %d raced a concurrent fold (a lineage "
@@ -2690,64 +2525,37 @@ def ivf_serving_refit(
                 "(or retry at a quieter moment) and re-run"
             )
         # carry replay state MATERIALIZED FROM THE VERIFIED SNAPSHOT
-        # (ADVICE r13): copying live sidecar files (or the live meta's
-        # last_epoch* keys — `meta` was read once, before any retry)
+        # (ADVICE r13): copying live watermark files (or the live
+        # meta's watermark — `meta` was read once, before any retry)
         # would let a fold committing between the final watermark check
         # and this point carry its ADVANCED watermark into a generation
         # that lacks its vectors, so the replay skips the epoch and the
         # vectors are silently lost.  `marks` is exactly the state the
         # rebuild's data read was verified against, so every watermark
         # written here names vectors that ARE in the rebuild; a fold
-        # landing after the check keeps its sidecar in the OLD gen
+        # landing after the check keeps its watermark in the OLD gen
         # only, and the new gen's lower watermark makes the stream
         # replay it.  Meta lands AFTER the data (the gen's commit
         # mark).
-        for key, epoch in marks.items():
-            if key.startswith("meta:"):
-                continue  # carried via new_meta below, same snapshot
-            tmp_side = _os.path.join(new_gen, key + ".tmp")
-            with open(tmp_side, "w") as f:
-                _json.dump({"last_epoch": int(epoch)}, f)
-            _os.replace(tmp_side, _os.path.join(new_gen, key))
         new_meta = {
             k: v for k, v in meta.items() if k not in ("centroids",)
         }
-        for key, epoch in marks.items():
-            if key.startswith("meta:"):
-                new_meta[key[len("meta:"):]] = int(epoch)
+        fc.restore_watermarks(new_gen, new_meta, marks)
         new_meta["centroids"] = [[float(x) for x in c] for c in cents]
         # the rebuilt lists ARE the new occupancy base (derivation
         # restarts from here; since-refit growth resets to zero)
-        new_meta["base_counts"] = {
-            str(c): int(n) for c, n in counts.items()
-        }
-        _write_meta(new_gen, new_meta)
+        new_meta["base_counts"] = _json_counts(counts)
+        fc.write_meta(new_gen, new_meta)
         _write_serving(root, {**state, "gen": int(state["gen"]) + 1})
         # refresh the monitoring snapshot as part of the swap (ADVICE
         # r12: a manual refit must not leave a stale occupancy file for
-        # the streaming policy to misread; the gen stamp lets readers
-        # reject any snapshot from another generation)
-        occ_path = _os.path.join(root, "_ivf_occupancy.json")
-        tmp = occ_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "gen": int(state["gen"]) + 1,
-                    "counts": {str(c): int(n) for c, n in counts.items()},
-                    "total": int(sum(counts.values())),
-                    "since_refit": 0,
-                    "refits": int(state["gen"]) + 1,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-        _os.replace(tmp, occ_path)
-    finally:
-        try:
-            _os.remove(lock)
-        except FileNotFoundError:
-            pass
+        # the streaming policy to misread)
+        total = sum(counts.values())
+        _write_occupancy_snapshot(
+            root,
+            int(state["gen"]) + 1,
+            {"counts": counts, "total": total, "base_total": total},
+        )
     return cents, counts
 
 

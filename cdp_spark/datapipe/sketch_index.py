@@ -36,14 +36,17 @@ Layout::
     <path>/_cdp_index_meta.json  params (col/group_cols/p, cms shape)
     <path>/_state.json           {"dir": "fold=e3", "epoch": 3,
                                   "lineage": null} — the committed
-                                  snapshot pointer + replay watermark,
-                                  written atomically (temp + rename)
+                                  snapshot pointer + replay watermark
+                                  in ONE atomic write
     <path>/hll/fold=base/        (group..., register, max_rank)
     <path>/hll/fold=e<N>/        full merged state at epoch N
     <path>/cms/fold=.../         (row, bucket, cnt), same chain
 
-Single-writer contract (the family's): one fold driver per index at a
-time — the snapshot chain is linear.  A RE-CREATED checkpoint (epoch
+Fold directory names, lineage tags and atomic JSON writes are the
+shared protocol of :mod:`.fold_commit`; the one departure is the
+watermark, which lives in the snapshot pointer so both commit together.
+Single-writer contract: one fold driver per index at a time — the
+snapshot chain is linear.  A RE-CREATED checkpoint (epoch
 ids restart at 0) passes a fresh ``lineage`` tag: the epoch-skip
 watermark is lineage-scoped, while the snapshot pointer is global, so
 the new lineage's first fold continues from the latest committed
@@ -51,8 +54,7 @@ state instead of skipping behind a stale epoch number.
 
 Reference parity: superset scope — the reference has no persisted
 sketch state (its sketches live per-window in step functions); this
-is the training-pipeline lifecycle (SURVEY §2 extensions), the
-sketch twin of ``dedup_index``'s fold contract.
+is the training-pipeline lifecycle (SURVEY §2 extensions).
 """
 
 from __future__ import annotations
@@ -63,8 +65,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fold_commit as fc
 from . import sketches as sk
-from .dedup_index import _read_meta, _write_meta
 
 _STATE_NAME = "_state.json"
 
@@ -74,11 +76,13 @@ def _read_state(path: str) -> dict:
         return json.load(f)
 
 
-def _write_state(path: str, state: dict) -> None:
-    tmp = os.path.join(path, _STATE_NAME + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, _STATE_NAME))
+def _write_state(path: str, fold_dir: str, epoch, lineage) -> None:
+    """Commit the snapshot pointer and the replay watermark in ONE
+    atomic write."""
+    fc.write_json_atomic(
+        os.path.join(path, _STATE_NAME),
+        {"dir": fold_dir, "epoch": epoch, "lineage": lineage},
+    )
 
 
 def _hll_state(df: DataFrame, meta: dict) -> DataFrame:
@@ -123,6 +127,36 @@ def _hist_state(df: DataFrame, meta: dict) -> DataFrame:
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+
+
+# stat directory -> (meta key that enables it, state of a frame, lossless
+# merge of (committed snapshot ∪ increment state), the stat's name in
+# errors)
+_STATS = {
+    "hll": (
+        "col",
+        _hll_state,
+        lambda u, meta: u.groupBy(*meta["group_cols"], "register").agg(
+            F.max("max_rank").alias("max_rank")
+        ),
+        "an HLL",
+    ),
+    "cms": (
+        "cms",
+        _cms_state,
+        lambda u, meta: u.groupBy("row", "bucket").agg(
+            F.sum("cnt").alias("cnt")
+        ),
+        "a CMS",
+    ),
+    "bloom": ("bloom", _bloom_state, lambda u, meta: u.distinct(), "a Bloom"),
+    "hist": (
+        "hist",
+        _hist_state,
+        lambda u, meta: u.groupBy("bin").agg(F.sum("cnt").alias("cnt")),
+        "a histogram",
+    ),
+}
 
 
 def sketch_index_write(
@@ -175,24 +209,14 @@ def sketch_index_write(
             "col": hist_col, "lo": float(hist_lo), "hi": float(hist_hi),
             "bins": int(hist_bins),
         }
-    if col is not None:
-        _hll_state(df, meta).write.mode("overwrite").parquet(
-            os.path.join(path, "hll", "fold=base")
-        )
-    if cms_col is not None:
-        _cms_state(df, meta).write.mode("overwrite").parquet(
-            os.path.join(path, "cms", "fold=base")
-        )
-    if bloom_col is not None:
-        _bloom_state(df, meta).write.mode("overwrite").parquet(
-            os.path.join(path, "bloom", "fold=base")
-        )
-    if hist_col is not None:
-        _hist_state(df, meta).write.mode("overwrite").parquet(
-            os.path.join(path, "hist", "fold=base")
-        )
-    _write_meta(path, meta)
-    _write_state(path, {"dir": "fold=base", "epoch": None, "lineage": None})
+    base = fc.fold_dir_name(fc.BASE)
+    for stat, (key, state_of, _, _) in _STATS.items():
+        if key in meta:
+            state_of(df, meta).write.mode("overwrite").parquet(
+                os.path.join(path, stat, base)
+            )
+    fc.write_meta(path, meta)
+    _write_state(path, base, None, None)
 
 
 def _epoch_committed(path: str, epoch: int, lineage: str | None) -> bool:
@@ -222,59 +246,31 @@ def sketch_index_fold(
     the pointer-advance-last ordering makes half-written epochs
     rewrite cleanly).  ``epoch`` is required — every sketch fold is a
     full snapshot, so there is no unlabeled append form."""
-    meta = _read_meta(path, "sketch")
+    new_dir = fc.fold_dir_name(fc.fold_name(epoch, lineage))
+    meta = fc.read_meta(path, "sketch")
     if _epoch_committed(path, epoch, lineage):
         return
     state = _read_state(path)
     spark = increment_df.sparkSession
-    prefix = "" if lineage is None else f"{lineage}-"
-    new_dir = f"fold={prefix}e{int(epoch)}"
+    for stat, (key, state_of, merge, _) in _STATS.items():
+        if key in meta:
+            prev = spark.read.parquet(os.path.join(path, stat, state["dir"]))
+            merge(
+                prev.unionByName(state_of(increment_df, meta)), meta
+            ).write.mode("overwrite").parquet(os.path.join(path, stat, new_dir))
+    _write_state(path, new_dir, int(epoch), lineage)
 
-    if "col" in meta:
-        groups = list(meta["group_cols"])
-        prev_hll = spark.read.parquet(os.path.join(path, "hll", state["dir"]))
-        merged_hll = (
-            prev_hll.unionByName(_hll_state(increment_df, meta))
-            .groupBy(*groups, "register")
-            .agg(F.max("max_rank").alias("max_rank"))
-        )
-        merged_hll.write.mode("overwrite").parquet(
-            os.path.join(path, "hll", new_dir)
-        )
-    if "cms" in meta:
-        prev_cms = spark.read.parquet(os.path.join(path, "cms", state["dir"]))
-        merged_cms = (
-            prev_cms.unionByName(_cms_state(increment_df, meta))
-            .groupBy("row", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        merged_cms.write.mode("overwrite").parquet(
-            os.path.join(path, "cms", new_dir)
-        )
-    if "bloom" in meta:
-        prev_bloom = spark.read.parquet(
-            os.path.join(path, "bloom", state["dir"])
-        )
-        merged_bloom = prev_bloom.unionByName(
-            _bloom_state(increment_df, meta)
-        ).distinct()
-        merged_bloom.write.mode("overwrite").parquet(
-            os.path.join(path, "bloom", new_dir)
-        )
-    if "hist" in meta:
-        prev_hist = spark.read.parquet(
-            os.path.join(path, "hist", state["dir"])
-        )
-        merged_hist = (
-            prev_hist.unionByName(_hist_state(increment_df, meta))
-            .groupBy("bin")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        merged_hist.write.mode("overwrite").parquet(
-            os.path.join(path, "hist", new_dir)
-        )
-    _write_state(
-        path, {"dir": new_dir, "epoch": int(epoch), "lineage": lineage}
+
+def _committed(spark: SparkSession, path: str, stat: str):
+    """(meta, the committed snapshot of ``stat``) — ONE snapshot
+    directory, whatever has been folded.  ValueError when the index
+    was written without that stat."""
+    meta = fc.read_meta(path, "sketch")
+    key, _, _, name = _STATS[stat]
+    if key not in meta:
+        raise ValueError(f"index was written without {name} column")
+    return meta, spark.read.parquet(
+        os.path.join(path, stat, _read_state(path)["dir"])
     )
 
 
@@ -284,10 +280,7 @@ def sketch_index_hll_estimate(spark: SparkSession, path: str) -> DataFrame:
     regardless of how much data has been folded.  Equals
     :func:`~cdp_spark.datapipe.sketches.hll_estimate_by` over the
     union of everything written + folded, exactly."""
-    meta = _read_meta(path, "sketch")
-    regs = spark.read.parquet(
-        os.path.join(path, "hll", _read_state(path)["dir"])
-    )
+    meta, regs = _committed(spark, path, "hll")
     return sk.hll_estimate_from_registers(
         regs, int(meta["p"]), group_cols=list(meta["group_cols"])
     )
@@ -299,11 +292,8 @@ def sketch_index_cms_estimates(
     """CMS point estimates for ``items`` from the committed snapshot
     (min-of-counters upper bound; the sketch side broadcasts).
     Equals estimates from a from-scratch sketch of all folded data."""
-    meta = _read_meta(path, "sketch")
+    meta, sketch = _committed(spark, path, "cms")
     c = meta["cms"]
-    sketch = spark.read.parquet(
-        os.path.join(path, "cms", _read_state(path)["dir"])
-    )
     return sk.cms_estimates(
         sketch, items, col or c["col"],
         depth=int(c["depth"]), width=int(c["width"]),
@@ -325,13 +315,10 @@ def sketch_index_hist_quantiles(
 
     from .sketches import _round_half_up
 
-    meta = _read_meta(path, "sketch")
+    meta, hist = _committed(spark, path, "hist")
     h = meta["hist"]
     lo, hi, bins = float(h["lo"]), float(h["hi"]), int(h["bins"])
     width = (hi - lo) / bins
-    hist = spark.read.parquet(
-        os.path.join(path, "hist", _read_state(path)["dir"])
-    )
     w = W.orderBy("bin").rowsBetween(W.unboundedPreceding, 0)
     full = W.orderBy(F.lit(1)).rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
@@ -378,11 +365,8 @@ def sketch_index_bloom_contains(
     positions side broadcasts, ≤ n_bits rows).  Position union is
     idempotent, so the folded filter equals one built from scratch
     over all folded data — bit-identically."""
-    meta = _read_meta(path, "sketch")
+    meta, positions = _committed(spark, path, "bloom")
     b = meta["bloom"]
-    positions = spark.read.parquet(
-        os.path.join(path, "bloom", _read_state(path)["dir"])
-    )
     return sk.bloom_contains(
         positions, items, col or b["col"],
         n_bits=int(b["n_bits"]), k=int(b["k"]),

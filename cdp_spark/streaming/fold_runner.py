@@ -57,9 +57,9 @@ the batch's ``epoch_id``:
   below ``last_folded_epoch`` is skipped outright (its documents are
   already IN the index; re-flagging them would mark them duplicates
   of themselves);
-- the index fold itself is epoch-idempotent (``dedup_index``'s
-  ``fold=e<epoch>`` subdirectories + meta watermark), so a crash
-  mid-fold replays to the identical index.
+- the index fold itself is epoch-idempotent (the shared protocol of
+  ``datapipe.fold_commit``), so a crash mid-fold replays to the
+  identical index.
 
 Spark's own ``Sink.addBatch`` contract ("deduplicate on batchId for
 exactly-once") is the public-knowledge model for this pattern.
@@ -88,9 +88,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..datapipe import dedup_index as di
+from ..datapipe import fold_commit as fc
 from ..session import iter_checkpoint
 
 logger = logging.getLogger(__name__)
+
+
+def _start_foreach_batch(
+    source_stream: DataFrame,
+    body,
+    checkpoint_dir: Optional[str],
+    available_now: bool,
+    trigger_seconds: Optional[float],
+) -> StreamingQuery:
+    """Start ``body(batch_df, epoch_id)`` as the foreachBatch sink of
+    ``source_stream``: checkpointed when ``checkpoint_dir`` is given,
+    drained once with ``available_now``, else every
+    ``trigger_seconds`` (Spark's default trigger when None)."""
+    writer = source_stream.writeStream.foreachBatch(body)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def run_bm25_ingest_stream(
@@ -123,17 +145,9 @@ def run_bm25_ingest_stream(
     every stream its own ``lineage`` tag when several streams — or a
     re-created checkpoint — fold into the same index; the default
     (None) covers the common one-stream-per-index case."""
-    import json as _json
-    import os as _os
-
     from ..datapipe import retrieval_index as ri
 
-    with open(_os.path.join(index_path, ri._META_NAME)) as f:
-        kind = _json.load(f).get("kind")
-    if kind != "bm25":
-        raise ValueError(
-            f"index at {index_path} is kind={kind!r}, expected 'bm25'"
-        )
+    fc.read_meta(index_path, "bm25")
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         docs = batch_df.select(F.col(id_col), F.col(text_col))
@@ -144,14 +158,9 @@ def run_bm25_ingest_stream(
             epoch=epoch_id, lineage=lineage,
         )
 
-    writer = source_stream.writeStream.foreachBatch(_fold)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(
+        source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
+    )
 
 
 def run_sketch_ingest_stream(
@@ -175,18 +184,9 @@ def run_sketch_ingest_stream(
     watermark in ``_state.json``; half-written ones overwrite their
     own snapshot directory.  Single-writer per index; pass a fresh
     ``lineage`` when a checkpoint is re-created (epoch ids restart)."""
-    import json as _json
-    import os as _os
-
     from ..datapipe import sketch_index as si
-    from ..datapipe.dedup_index import _META_NAME
 
-    with open(_os.path.join(index_path, _META_NAME)) as f:
-        kind = _json.load(f).get("kind")
-    if kind != "sketch":
-        raise ValueError(
-            f"index at {index_path} is kind={kind!r}, expected 'sketch'"
-        )
+    fc.read_meta(index_path, "sketch")
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
@@ -195,14 +195,9 @@ def run_sketch_ingest_stream(
             batch_df, index_path, epoch=epoch_id, lineage=lineage
         )
 
-    writer = source_stream.writeStream.foreachBatch(_fold)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(
+        source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
+    )
 
 
 def run_bloom_gate_stream(
@@ -248,19 +243,13 @@ def run_bloom_gate_stream(
     lineage now honestly reads ``seen_before`` (it IS in the
     filter).  One checkpoint lineage per flags spool, for the
     spool's whole life."""
-    import json as _json
-    import os as _os
-
     from ..datapipe import sketch_index as si
-    from ..datapipe.dedup_index import _META_NAME
 
-    with open(_os.path.join(index_path, _META_NAME)) as f:
-        meta = _json.load(f)
-    if meta.get("kind") != "sketch" or "bloom" not in meta:
-        raise ValueError(
-            f"index at {index_path} must be a 'sketch' index with a "
-            f"bloom stat (kind={meta.get('kind')!r})"
-        )
+    meta = fc.read_meta(index_path, "sketch")
+    if "bloom" not in meta:
+        raise ValueError(f"sketch index at {index_path} has no bloom stat")
+    if lineage is not None:
+        fc.lineage_label(lineage)  # refuse it before any flags are written
     col = meta["bloom"]["col"]
 
     def _step(batch_df: DataFrame, epoch_id: int) -> None:
@@ -288,20 +277,15 @@ def run_bloom_gate_stream(
         # rides in-file as an int column); read the spool back with
         # spark.read.option("recursiveFileLookup", "true")
         flags.write.mode("overwrite").parquet(
-            _os.path.join(flags_dir, f"epoch-{int(epoch_id)}")
+            os.path.join(flags_dir, f"epoch-{int(epoch_id)}")
         )
         si.sketch_index_fold(
             batch, index_path, epoch=epoch_id, lineage=lineage
         )
 
-    writer = source_stream.writeStream.foreachBatch(_step)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(
+        source_stream, _step, checkpoint_dir, available_now, trigger_seconds
+    )
 
 
 def run_ivf_ingest_stream(
@@ -333,32 +317,18 @@ def run_ivf_ingest_stream(
     so a crash-replayed batch never double-inserts vectors.  Same
     per-lineage watermark rule as the BM25 ingest: tag each stream
     with its own ``lineage`` when several fold into one index."""
-    import json as _json
-    import os as _os
-
     from ..datapipe import similarity as si
-    from ..datapipe.dedup_index import _META_NAME
 
-    with open(_os.path.join(index_path, _META_NAME)) as f:
-        kind = _json.load(f).get("kind")
-    if kind != "ivf":
-        raise ValueError(
-            f"index at {index_path} is kind={kind!r}, expected 'ivf'"
-        )
+    fc.read_meta(index_path, "ivf")
 
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.take(1):
             return
         si.ivf_index_fold(batch_df, index_path, epoch=epoch_id, lineage=lineage)
 
-    writer = source_stream.writeStream.foreachBatch(_fold)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(
+        source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
+    )
 
 
 def ivf_serving_policy_step(
@@ -383,15 +353,13 @@ def ivf_serving_policy_step(
     See :func:`run_ivf_serving_stream` for the full policy
     semantics."""
     import json as _json
-    import os as _os
 
     from ..datapipe import similarity as si
 
-    occ_path = _os.path.join(root, "_ivf_occupancy.json")
-    recall_policy_path = _os.path.join(root, "_recall_policy.json")
+    recall_policy_path = os.path.join(root, "_recall_policy.json")
 
     def _read_recall_policy() -> dict:
-        if not _os.path.isfile(recall_policy_path):
+        if not os.path.isfile(recall_policy_path):
             return {}
         with open(recall_policy_path) as f:
             return _json.load(f)
@@ -399,10 +367,7 @@ def ivf_serving_policy_step(
     def _write_recall_policy(**updates) -> None:
         pol = _read_recall_policy()
         pol.update(updates)
-        tmp = recall_policy_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(pol, f)
-        _os.replace(tmp, recall_policy_path)
+        fc.write_json_atomic(recall_policy_path, pol)
 
     def _recall_muted_gen() -> Optional[int]:
         return _read_recall_policy().get("muted_gen")
@@ -429,26 +394,6 @@ def ivf_serving_policy_step(
         ).collect()
         return sum(r["recall_at_k"] for r in rows) / len(rows)
 
-    def _snapshot_occ(gen: int, occ: dict) -> None:
-        """Gen-stamped monitoring view of the derived occupancy."""
-        tmp = occ_path + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(
-                {
-                    "gen": int(gen),
-                    "counts": {
-                        str(c): int(n) for c, n in occ["counts"].items()
-                    },
-                    "total": int(occ["total"]),
-                    "since_refit": int(occ["total"] - occ["base_total"]),
-                    "refits": int(gen),
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-        _os.replace(tmp, occ_path)
-
     if not batch_df.take(1):
         return
     delta = si.ivf_serving_fold(
@@ -459,7 +404,7 @@ def ivf_serving_policy_step(
         return
     gen = int(si._read_serving(root)["gen"])
     occ = si.ivf_index_occupancy(si.ivf_serving_path(root))
-    _snapshot_occ(gen, occ)
+    si._write_occupancy_snapshot(root, gen, occ)
     since_refit = occ["total"] - occ["base_total"]
     if (refit_skew is None and refit_recall_below is None) or (
         since_refit < refit_min_rows
@@ -468,10 +413,8 @@ def ivf_serving_policy_step(
     fire = None
     recall_fired = False
     if refit_skew is not None:
-        from ..datapipe.dedup_index import _read_meta
-
         k = int(
-            _read_meta(si.ivf_serving_path(root), "ivf")["n_centroids"]
+            fc.read_meta(si.ivf_serving_path(root), "ivf")["n_centroids"]
         )
         fair = occ["total"] / k
         skew = max(
@@ -622,14 +565,9 @@ def run_ivf_serving_stream(
             recall_n_probe=recall_n_probe,
         )
 
-    writer = source_stream.writeStream.foreachBatch(_fold)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(
+        source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
+    )
 
 
 class IncrementFoldRunner:
@@ -716,15 +654,9 @@ class IncrementFoldRunner:
         self._ckpt_identity: Optional[str] = None
         self._pending_ckpt: Optional[str] = None
         # kind + snapshot for cycle 0
-        import json
-
-        with open(os.path.join(index_path, di._META_NAME)) as f:
-            self._kind = json.load(f)["kind"]
-        if self._kind not in ("minhash", "substring", "exactngram", "simhash"):
-            raise ValueError(
-                f"index at {index_path} has unsupported kind "
-                f"{self._kind!r} for the fold lifecycle"
-            )
+        self._kind = fc.read_meta(
+            index_path, "minhash", "substring", "exactngram", "simhash"
+        )["kind"]
         self._load_state()
         self._load_snapshot()
 
@@ -748,24 +680,16 @@ class IncrementFoldRunner:
         and every fold, so a NEW runner process resumes exactly where
         the crashed one stopped — state save is the runner's commit
         point, exactly like the index meta's epoch watermark."""
-        import json
-
-        os.makedirs(self._work, exist_ok=True)
-        tmp = self._state_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "cycle": self.cycle,
-                    "folds_done": self.folds_done,
-                    "last_folded_epoch": self._last_folded_epoch,
-                    "cur_epochs": self._cur_epochs,
-                    "checkpoint_id": self._ckpt_identity,
-                },
-                f,
-                indent=1,
-                sort_keys=True,
-            )
-        os.replace(tmp, self._state_path())
+        fc.write_json_atomic(
+            self._state_path(),
+            {
+                "cycle": self.cycle,
+                "folds_done": self.folds_done,
+                "last_folded_epoch": self._last_folded_epoch,
+                "cur_epochs": self._cur_epochs,
+                "checkpoint_id": self._ckpt_identity,
+            },
+        )
 
     def _load_state(self) -> None:
         import json
@@ -1087,30 +1011,14 @@ class IncrementFoldRunner:
             )
         else:
             flagged = inc_docs.select(self._id).limit(0)
-        if self._kind == "minhash":
-            di.minhash_index_fold(
-                inc_docs, flagged, self._path,
-                id_col=self._id, text_col=self._text, epoch=upto_epoch,
-                lineage=self._lineage,
-            )
-        elif self._kind == "exactngram":
-            di.exactngram_index_fold(
-                inc_docs, flagged, self._path,
-                id_col=self._id, text_col=self._text, epoch=upto_epoch,
-                lineage=self._lineage,
-            )
-        elif self._kind == "simhash":
-            di.simhash_index_fold(
-                inc_docs, flagged, self._path,
-                id_col=self._id, text_col=self._text, epoch=upto_epoch,
-                lineage=self._lineage,
-            )
-        else:
-            di.substring_index_fold(
-                inc_docs, flagged, self._path,
-                id_col=self._id, text_col=self._text, epoch=upto_epoch,
-                lineage=self._lineage,
-            )
+        # looked up per call, not bound at import: the module attribute
+        # is what callers (and tracing) may wrap
+        fold = getattr(di, f"{self._kind}_index_fold")
+        fold(
+            inc_docs, flagged, self._path,
+            id_col=self._id, text_col=self._text, epoch=upto_epoch,
+            lineage=self._lineage,
+        )
         self.folds_done += 1
         self.cycle += 1
         if upto_epoch is not None:
@@ -1139,17 +1047,12 @@ class IncrementFoldRunner:
         the work_dir — a NEW runner on the same work_dir resumes the
         open increment, and replayed epochs are skipped or rewritten
         idempotently (see ``process_batch``)."""
-        writer = self._source.writeStream.foreachBatch(self.process_batch)
         if checkpoint_dir is not None:
             self.bind_checkpoint(checkpoint_dir)
-            writer = writer.option("checkpointLocation", checkpoint_dir)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_seconds is not None:
-            writer = writer.trigger(
-                processingTime=f"{trigger_seconds} seconds"
-            )
-        return writer.start()
+        return _start_foreach_batch(
+            self._source, self.process_batch, checkpoint_dir,
+            available_now, trigger_seconds,
+        )
 
     # ------------------------------------------------------------- results
 

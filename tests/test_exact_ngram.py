@@ -221,6 +221,7 @@ def test_exactngram_fold_replay_idempotent(spark, tmp_path):
     """exactngram_index_fold(epoch=...): committed epochs skip,
     half-written ones overwrite — gram counts never double."""
     from cdp_spark.datapipe import dedup_index as di
+    from cdp_spark.datapipe import fold_commit as fc
 
     docs = load_table(spark, SF, "documents")
     corpus = docs.where(F.col("doc_id") % 5 != 0)
@@ -231,8 +232,8 @@ def test_exactngram_fold_replay_idempotent(spark, tmp_path):
 
     # half-written: the delta lands, the watermark does not
     import os as _os
-    meta = di._read_meta(path, "exactngram")
-    di._fold_write(
+    meta = fc.read_meta(path, "exactngram")
+    fc.fold_write(
         di._gram_counts(inc, "doc_id", "text", 20),
         _os.path.join(path, "df"),
         epoch=4,

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from cdp_spark.datapipe import dedup as ddp
 from cdp_spark.datapipe import dedup_index as di
+from cdp_spark.datapipe import fold_commit as fc
 from cdp_spark.datapipe import retrieval_index as ri
 from cdp_spark.session import load_table
 from cdp_spark.streaming.fold_runner import IncrementFoldRunner
@@ -186,8 +187,8 @@ def test_dedup_fold_half_written_crash_replays_clean(spark, tmp_path):
     flagged = b0.select("doc_id").limit(0)
 
     # half-written: the fold's signature write lands, meta does not
-    meta = di._read_meta(path, "minhash")
-    di._fold_write(
+    meta = fc.read_meta(path, "minhash")
+    fc.fold_write(
         di._signature_frame(
             b0, "doc_id", "text", meta["num_perm"], meta["n"],
             di._HASH_FNS[meta["hash"]],
@@ -271,9 +272,9 @@ def test_multi_lineage_streams_share_one_bm25_index(spark, tmp_path):
     # read-modify-write race between concurrently-folding lineages)
     import json
     for lin in ("src-a", "src-b"):
-        with open(di._watermark_sidecar(path, lin)) as f:
+        with open(fc._watermark_path(path, lin)) as f:
             assert json.load(f)["last_epoch"] == 1
-    meta = json.load(open(os.path.join(path, ri._META_NAME)))
+    meta = json.load(open(os.path.join(path, fc.META_NAME)))
     assert "last_epoch:src-a" not in meta and "last_epoch:src-b" not in meta
 
 
@@ -288,22 +289,17 @@ def test_lineage_watermark_commits_cannot_clobber_each_other(spark, tmp_path):
     path = str(tmp_path / "bm25")
     ri.bm25_index_init(path)
     import json
-    with open(os.path.join(path, ri._META_NAME)) as f:
+    with open(os.path.join(path, fc.META_NAME)) as f:
         meta_a = json.load(f)  # lineage A's stale in-memory meta
     # B commits first; A then commits with its STALE meta copy — the
     # exact interleaving that lost B's watermark under the meta key
-    di._commit_epoch(path, dict(meta_a), 7, lineage="lin-b")
-    di._commit_epoch(path, meta_a, 4, lineage="lin-a")
-    with open(os.path.join(path, ri._META_NAME)) as f:
+    fc.commit_epoch(path, dict(meta_a), 7, lineage="lin-b")
+    fc.commit_epoch(path, meta_a, 4, lineage="lin-a")
+    with open(os.path.join(path, fc.META_NAME)) as f:
         fresh_meta = json.load(f)
-    assert di._epoch_already_folded(path, fresh_meta, 7, lineage="lin-b")
-    assert di._epoch_already_folded(path, fresh_meta, 4, lineage="lin-a")
-    assert not di._epoch_already_folded(path, fresh_meta, 8, lineage="lin-b")
-    # legacy pre-sidecar indexes: the meta key still honored
-    legacy = dict(fresh_meta)
-    legacy["last_epoch:lin-old"] = 2
-    assert di._epoch_already_folded(path, legacy, 2, lineage="lin-old")
-    assert not di._epoch_already_folded(path, legacy, 3, lineage="lin-old")
+    assert fc.already_committed(path, fresh_meta, 7, lineage="lin-b")
+    assert fc.already_committed(path, fresh_meta, 4, lineage="lin-a")
+    assert not fc.already_committed(path, fresh_meta, 8, lineage="lin-b")
 
 
 def _drive_available_now(runner, checkpoint_dir):
@@ -406,10 +402,43 @@ def test_checkpoint_id_resolves_single_slash_uris(spark, tmp_path):
 
 
 def test_lineage_tag_validated(spark, tmp_path):
+    """A lineage becomes a directory-name component: every fold kind
+    refuses a tag that is not [alnum-_.] before writing anything."""
     import pytest
 
+    from cdp_spark.datapipe import similarity as sim
+    from cdp_spark.datapipe import sketch_index as si
+    from cdp_spark.streaming.fold_runner import run_bloom_gate_stream
+
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    path = str(tmp_path / "bm25")
-    ri.bm25_index_init(path)
-    with pytest.raises(ValueError, match="lineage"):
-        ri.bm25_index_fold(docs.limit(1), path, epoch=0, lineage="a/b")
+    emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+    bm25 = str(tmp_path / "bm25")
+    ri.bm25_index_init(bm25)
+    sketch = str(tmp_path / "sketch")
+    si.sketch_index_write(
+        docs.limit(5), sketch, col="doc_id", bloom_col="doc_id",
+        bloom_bits=1024,
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema("doc_id long, text string").json(
+        str(src)
+    )
+    flags = str(tmp_path / "flags")
+    ivf = str(tmp_path / "ivf")
+    sim.ivf_index_init(ivf, dim=64, n_centroids=4, seed=7)
+    folds = [
+        (bm25, lambda lin: ri.bm25_index_fold(
+            docs.limit(1), bm25, epoch=0, lineage=lin)),
+        (sketch, lambda lin: si.sketch_index_fold(
+            docs.limit(1), sketch, epoch=0, lineage=lin)),
+        (ivf, lambda lin: sim.ivf_index_fold(
+            emb.limit(1), ivf, epoch=0, lineage=lin)),
+        (tmp_path, lambda lin: run_bloom_gate_stream(
+            stream, sketch, flags, lineage=lin)),
+    ]
+    for path, fold in folds:
+        before = sorted(os.listdir(path))
+        with pytest.raises(ValueError, match="lineage"):
+            fold("a/b")
+        assert sorted(os.listdir(path)) == before, path

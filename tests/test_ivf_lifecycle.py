@@ -87,13 +87,13 @@ def test_ivf_fold_replay_and_half_written_crash(spark, tmp_path):
     sim.ivf_index_fold(b0, path, epoch=0)
 
     # half-written epoch 1: the assigned rows land, meta does not
-    from cdp_spark.datapipe.dedup_index import _read_meta
+    from cdp_spark.datapipe.fold_commit import read_meta
 
-    meta = _read_meta(path, "ivf")
+    meta = read_meta(path, "ivf")
     sim.ivf_assign(b1, 64, 16, "vec_id", "embedding", 7).write.mode(
         "overwrite"
     ).partitionBy("centroid").parquet(os.path.join(path, "fold=e1"))
-    assert _read_meta(path, "ivf").get("last_epoch") == 0  # not committed
+    assert read_meta(path, "ivf").get("last_epoch") == 0  # not committed
     # replay re-runs the full fold
     sim.ivf_index_fold(b1, path, epoch=1)
     ids = [r["vec_id"] for r in spark.read.parquet(path).select("vec_id").collect()]

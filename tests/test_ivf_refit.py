@@ -18,6 +18,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from cdp_spark.datapipe import fold_commit as fc
 from cdp_spark.datapipe import similarity as sim
 from cdp_spark.session import load_table
 
@@ -67,10 +68,8 @@ def test_post_refit_folds_assign_to_trained_lists(spark, tmp_path):
     sim.ivf_serving_fold(later, root, epoch=1)
 
     # the increment's rows landed in the trained argmin lists
-    from cdp_spark.datapipe.dedup_index import _read_meta
-
     gen = sim.ivf_serving_path(root)
-    meta = _read_meta(gen, "ivf")
+    meta = fc.read_meta(gen, "ivf")
     assert meta["centroids"] == [[float(x) for x in c] for c in cents]
     folded = spark.read.parquet(os.path.join(gen, "fold=e1"))
     expect = sim._ivf_meta_assign(later, meta).select("vec_id", "centroid")
@@ -170,8 +169,6 @@ def test_occupancy_derivation_survives_fold_crash_and_replay(
     fold between its data/sidecar writes and the epoch commit, then
     replay.  The derived occupancy must converge to the true counts —
     no loss, no double count."""
-    from cdp_spark.datapipe import dedup_index as di
-
     emb = _emb(spark)
     root = str(tmp_path / "serve")
     sim.ivf_serving_init(root, dim=64, n_centroids=8, seed=7)
@@ -179,18 +176,17 @@ def test_occupancy_derivation_survives_fold_crash_and_replay(
     b1 = emb.where(F.col("vec_id") % 2 == 1)
     sim.ivf_serving_fold(b0, root, epoch=0, lineage="s1")
 
-    real_commit = di._commit_epoch
+    real_commit = fc.commit_epoch
 
     def _boom(path, meta, epoch, lineage=None):
         raise RuntimeError("injected crash before the epoch commit")
 
-    monkeypatch.setattr(sim, "_commit_epoch", _boom, raising=False)
-    monkeypatch.setattr(di, "_commit_epoch", _boom)
+    monkeypatch.setattr(fc, "commit_epoch", _boom)
     try:
         sim.ivf_serving_fold(b1, root, epoch=1, lineage="s1")
     except RuntimeError:
         pass
-    monkeypatch.setattr(di, "_commit_epoch", real_commit)
+    monkeypatch.setattr(fc, "commit_epoch", real_commit)
 
     # the torn fold's data+sidecar exist; occupancy counts what the
     # index actually serves (the torn fold is readable until replay
@@ -290,7 +286,7 @@ def test_post_check_fold_watermark_not_carried(spark, tmp_path, monkeypatch):
     sim.ivf_serving_init(root, dim=64, n_centroids=8, seed=7)
     sim.ivf_serving_fold(early, root, epoch=0, lineage="a")
 
-    real_state = sim._ivf_watermark_state
+    real_state = fc.watermarks
     calls = {"n": 0}
 
     def _racy_state(gen_path):
@@ -303,7 +299,7 @@ def test_post_check_fold_watermark_not_carried(spark, tmp_path, monkeypatch):
             sim.ivf_serving_fold(racer, root, epoch=0, lineage="b")
         return snap
 
-    monkeypatch.setattr(sim, "_ivf_watermark_state", _racy_state)
+    monkeypatch.setattr(fc, "watermarks", _racy_state)
     sim.ivf_serving_refit(spark, root, iters=1)
     gen = sim.ivf_serving_path(root)
     assert gen.endswith("gen-1")
@@ -353,9 +349,7 @@ def test_retry_carries_default_lineage_meta_watermark_fresh(
     assert fired["n"] == 1
     assert sum(counts.values()) == emb.count()
     gen = sim.ivf_serving_path(root)
-    from cdp_spark.datapipe.dedup_index import _read_meta
-
-    assert int(_read_meta(gen, "ivf")["last_epoch"]) == 5
+    assert int(fc.read_meta(gen, "ivf")["last_epoch"]) == 5
     # replay of the racer's epoch skips — its vectors are already in
     # the rebuild and its watermark carried fresh
     n_before = spark.read.parquet(gen).count()
@@ -377,26 +371,6 @@ def test_manual_refit_refreshes_gen_stamped_occupancy(spark, tmp_path):
     assert occ["gen"] == 1
     assert occ["since_refit"] == 0
     assert occ["total"] == emb.count()
-
-
-def test_occupancy_footer_fallback_for_presidecar_folds(spark, tmp_path):
-    """A pre-r13 fold (no _foldcounts sidecar) still counts — from
-    parquet footers, driver-side only."""
-    emb = _emb(spark)
-    root = str(tmp_path / "serve")
-    sim.ivf_serving_init(root, dim=64, n_centroids=8, seed=7)
-    sim.ivf_serving_fold(emb.where(F.col("vec_id") % 2 == 0), root, epoch=0)
-    sim.ivf_serving_fold(emb.where(F.col("vec_id") % 2 == 1), root, epoch=1)
-    gen = sim.ivf_serving_path(root)
-    before = sim.ivf_index_occupancy(gen)
-    removed = 0
-    for entry in os.listdir(gen):
-        if entry.startswith("_foldcounts."):
-            os.remove(os.path.join(gen, entry))
-            removed += 1
-    assert removed == 2
-    after = sim.ivf_index_occupancy(gen)
-    assert after == before
 
 
 def test_epochless_appends_visible_to_derived_occupancy(spark, tmp_path):
@@ -430,6 +404,35 @@ def test_epochless_appends_visible_to_derived_occupancy(spark, tmp_path):
         ).collect()
     }
     assert occ["counts"] == actual
+
+
+def test_second_epochless_appender_fails_loudly(spark, tmp_path):
+    """Two concurrent epoch-less appends would each count the other's
+    part files into their occupancy delta and race the
+    _foldcounts.base.json read-modify-write.  The append holds an
+    O_EXCL lock: a second appender fails naming it and leaves the
+    data and the derived occupancy untouched."""
+    import pytest
+
+    emb = _emb(spark)
+    a = emb.where(F.col("vec_id") % 2 == 0)
+    b = emb.where(F.col("vec_id") % 2 == 1)
+    path = str(tmp_path / "ivf")
+    sim.ivf_index_init(path, dim=64, n_centroids=8, seed=7)
+    sim.ivf_index_fold(a, path, epoch=None)
+    before = sim.ivf_index_occupancy(path)
+    lock = os.path.join(path, "_append.lock")
+    with open(lock, "w") as f:
+        f.write("999999")  # another appender mid-write
+    with pytest.raises(RuntimeError, match="_append.lock"):
+        sim.ivf_index_fold(b, path, epoch=None)
+    assert os.path.isfile(lock)  # the holder's lock stays
+    assert sim.ivf_index_occupancy(path) == before
+    assert spark.read.parquet(path).count() == a.count()
+    os.remove(lock)
+    sim.ivf_index_fold(b, path, epoch=None)
+    assert sim.ivf_index_occupancy(path)["total"] == emb.count()
+    assert not os.path.exists(lock)
 
 
 def test_foldcounts_compaction_keeps_policy_reads_o1_at_120_folds(
@@ -582,8 +585,7 @@ def test_stale_lock_break_verifies_identity_after_rename(
 def test_fold_auto_compaction_in_the_real_lifecycle(spark, tmp_path):
     """The automatic every-Nth-fold trigger, end to end on real data:
     folds past compact_every leave at most compact_every-1 sidecars,
-    occupancy stays exact vs the data's actual layout, legacy
-    (footer-fallback) folds compact only once committed, and queries
+    occupancy stays exact vs the data's actual layout, and queries
     over the compacted index are unchanged."""
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
@@ -613,13 +615,6 @@ def test_fold_auto_compaction_in_the_real_lifecycle(spark, tmp_path):
     }
     assert occ["counts"] == actual
     assert occ["total"] == emb.count()
-    # a legacy fold (sidecar lost, pre-r13 shape): footer-compacted
-    # only once its watermark commits
-    os.remove(sim._foldcounts_path(path, "s-e5")) if os.path.isfile(
-        sim._foldcounts_path(path, "s-e5")
-    ) else None
-    sim.compact_foldcounts(path)
-    assert sim.ivf_index_occupancy(path)["counts"] == actual
     qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
     assert _rows(
         sim.ivf_index_topk(spark, path, qv, k=10, n_probe=8,

@@ -9,6 +9,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from cdp_spark.datapipe import fold_commit as fc
 from cdp_spark.datapipe import sketch_index as si
 from cdp_spark.datapipe import sketches as sk
 from cdp_spark.session import load_table
@@ -164,7 +165,7 @@ def test_estimate_reads_single_snapshot(spark, tmp_path):
     )
     path = str(tmp_path / "idx")
     _build(spark, path, ev, cms=False)
-    meta = si._read_meta(path, "sketch")
+    meta = fc.read_meta(path, "sketch")
     regs = spark.read.parquet(
         os.path.join(path, "hll", si._read_state(path)["dir"])
     )
@@ -343,3 +344,13 @@ def test_cms_only_index_skips_hll_state(spark, tmp_path):
         )
     )
     assert got == want and len(got) > 0
+    # the stats it was written without raise a clear error, not a
+    # raw KeyError from the meta
+    import pytest
+
+    with pytest.raises(ValueError, match="without an HLL column"):
+        si.sketch_index_hll_estimate(spark, path)
+    with pytest.raises(ValueError, match="without a Bloom column"):
+        si.sketch_index_bloom_contains(spark, path, items, "user_id")
+    with pytest.raises(ValueError, match="without a histogram column"):
+        si.sketch_index_hist_quantiles(spark, path)
