@@ -2634,13 +2634,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(src)
     )
-    # key_buckets: most (band, bucket) LSH groups hold 1-2 rows per
-    # trigger — per-group state paid ~2000 Python calls + state rows
-    # per batch of pure overhead (optimization r17, guide §4); the
-    # emitted pair set is bucket-count invariant (pinned by test).
     pair_stream = stream_incremental_near_dups(
         stream, corpus, num_perm=32, bands=8, hash_fn=ddp.md5_hash60,
-        key_buckets=64,
     )
     pairs = _drive_memory_stream(
         spark, pair_stream, "cdp_stream_incdup_", src
@@ -2941,7 +2936,7 @@ steps:
 def q_stream_pipeline_keyed_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MANAGED RUNNER's keyed stateful window path as a driver
     query (VERDICT r6 item 7): a YAML template with ``window.key``
-    lowers through run_pipeline_stream(stateful_windows=True) under a
+    lowers through run_pipeline_stream's stateful window path under a
     CONTINUOUS processing-time trigger — the production shape, not
     AvailableNow — with the jq reduce applied per flushed window by
     the per-batch DAG compiler (reference semantics src/step.ts:70-151
@@ -4884,13 +4879,8 @@ def q_stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .json(src)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    # key_buckets (optimization r17): ~15k users x 4 triggers paid one
-    # Python call + pandas frame PER USER; 2 buckets/core amortizes the
-    # call overhead while the in-bucket recurrence stays per-user
-    # (bit-identical, pinned by tests/test_round17_kernels.py).
     out = stream_ewma(
         stream, "user_id", ["ts", "event_id"], "value", alpha=0.5,
-        key_buckets=2 * spark.sparkContext.defaultParallelism,
     )
     # applyInPandasWithState here is PYTHON-bound; unlike the
     # JVM-stateful streams the work is constant and wants every core,
@@ -5247,7 +5237,6 @@ def q_stream_holt_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_holt(
         stream, "user_id", ["ts", "event_id"], "value",
         alpha=0.5, beta=0.5,
-        key_buckets=2 * spark.sparkContext.defaultParallelism,
     )
     # python-bound per-key state, like stream_ewma: keep full cores
     mat = _drive_memory_stream(

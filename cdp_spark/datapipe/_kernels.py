@@ -85,6 +85,29 @@ def attach_kernel_column_batch(
     return src.mapInPandas(run, schema)
 
 
+def _on_rows_of_len(col: pd.Series, dim: int, kernel, fill):
+    """Run ``kernel`` (an (m, dim) float64 matrix -> m int64 ids) on
+    the rows of ``col`` holding a vector of length ``dim``; every other
+    row (NULL, shorter, longer) gets ``fill`` (None = NULL) — what the
+    Column fold yields for it, where ``zip_with`` pads the shorter side
+    with NULLs so every distance/score is NULL.  Stacking such rows
+    into one matrix would raise and kill the task (ADVICE r17)."""
+    ok = np.fromiter(
+        (v is not None and len(v) == dim for v in col),
+        dtype=bool,
+        count=len(col),
+    )
+    ids = np.empty(0, dtype=np.int64)
+    if ok.any():
+        V = np.array([np.asarray(v, dtype=np.float64) for v in col[ok]])
+        ids = kernel(V)
+    if ok.all():
+        return ids
+    out = pd.array([fill] * len(col), dtype="Int64")
+    out[ok] = ids
+    return out
+
+
 def centroid_argmin_fn(cents):
     """Batch kernel: embedding column -> squared-L2 argmin centroid id
     (int64), ties to the LOWEST id — the exact twin of
@@ -97,11 +120,8 @@ def centroid_argmin_fn(cents):
     C = np.asarray(cents, dtype=np.float64)
     k, dim = C.shape
 
-    def run(col: pd.Series) -> np.ndarray:
-        n = len(col)
-        if n == 0:
-            return np.empty(0, dtype=np.int64)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in col])
+    def argmin(V: np.ndarray) -> np.ndarray:
+        n = len(V)
         D = np.zeros((n, k), dtype=np.float64)
         for j in range(k):
             acc = np.zeros(n, dtype=np.float64)
@@ -111,7 +131,7 @@ def centroid_argmin_fn(cents):
             D[:, j] = acc
         return np.argmin(D, axis=1).astype(np.int64)
 
-    return run
+    return lambda col: _on_rows_of_len(col, dim, argmin, None)
 
 
 def anchor_argmax_fn(anchors):
@@ -123,11 +143,8 @@ def anchor_argmax_fn(anchors):
     A = np.asarray(anchors, dtype=np.float64)
     k, dim = A.shape
 
-    def run(col: pd.Series) -> np.ndarray:
-        n = len(col)
-        if n == 0:
-            return np.empty(0, dtype=np.int64)
-        V = np.array([np.asarray(v, dtype=np.float64) for v in col])
+    def argmax(V: np.ndarray) -> np.ndarray:
+        n = len(V)
         S = np.zeros((n, k), dtype=np.float64)
         for j in range(k):
             acc = np.zeros(n, dtype=np.float64)
@@ -137,7 +154,9 @@ def anchor_argmax_fn(anchors):
         # first max over reversed columns == last max == highest id
         return (k - 1 - np.argmax(S[:, ::-1], axis=1)).astype(np.int64)
 
-    return run
+    # a NULL or wrong-length row scores NULL against every anchor, and
+    # the fold's struct max over (NULL, i) picks the highest index
+    return lambda col: _on_rows_of_len(col, dim, argmax, k - 1)
 
 
 def minhash_sig_row_fn(num_perm: int, seed: int, permutation_params):

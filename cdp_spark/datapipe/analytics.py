@@ -19,8 +19,19 @@ plans sized for the 100 TB tier:
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    IntegralType,
+    StructField,
+    StructType,
+)
 
 
 def _stable_avg(col: Column, scale: int = 4) -> Column:
@@ -649,6 +660,128 @@ def resample_interp(
     )
 
 
+class _Recurrence(NamedTuple):
+    """A sequential per-key recurrence over one value column.
+    ``step(xs, carry) -> (outs, carry)`` consumes one key's run of
+    values (Python floats, in order) starting from the key's carry
+    (``None`` before the key's first row) and returns one list per
+    ``out_cols`` name plus the key's new carry; ``carry_type`` is the
+    Spark type a carry is stored as in streaming state."""
+
+    out_cols: tuple
+    step: Callable
+    carry_type: DataType
+
+
+def _recur_key_runs(pdf, key_col, value_col, int_key, carries, rec):
+    """Run ``rec`` over a key-sorted pandas frame: walk its contiguous
+    key runs, continue each from its carry in ``carries`` (updated in
+    place) and write ``rec.out_cols`` into ``pdf``.  Returns the last
+    run's key.
+
+    Null keys share one slot, ``carries[None]`` — a nullable numeric
+    key arrives as float64 with NaN, and NaN != NaN must not split the
+    null rows into one-row runs (ADVICE r16).  An integral key that
+    pandas coerced to float64 (a batch holding nulls) goes back to
+    ``int``, so it finds the carry stored under its exact value."""
+    kser = pdf[key_col]
+    isna = kser.isna().to_numpy()
+    keys = kser.to_numpy()
+    new_run = np.ones(len(keys), dtype=bool)
+    new_run[1:] = (isna[1:] != isna[:-1]) | (
+        ~isna[1:] & (keys[1:] != keys[:-1])
+    )
+    starts = np.flatnonzero(new_run).tolist()
+    heads = kser.iloc[starts].tolist()
+    xs = pdf[value_col].to_numpy(dtype=np.float64).tolist()
+    outs = [[] for _ in rec.out_cols]
+    k = None
+    for s, e, head in zip(starts, starts[1:] + [len(xs)], heads):
+        k = None if isna[s] else int(head) if int_key else head
+        run_outs, carries[k] = rec.step(xs[s:e], carries.get(k))
+        for out, run_out in zip(outs, run_outs):
+            out.extend(run_out)
+    for c, out in zip(rec.out_cols, outs):
+        pdf[c] = out
+    return k
+
+
+def _map_key_runs(df, key_col, order_cols, value_col, rec) -> DataFrame:
+    """Batch driver of ``rec``: one shuffle on the key, one key-sorted
+    ``mapInPandas`` pass per partition (one Python call per Arrow
+    batch, not per key — the per-group applyInPandas path paid
+    ~3.4 ms x 1500 keys at sf0.1, optimization r16).  The input is
+    key-sorted, so an earlier key never comes back: between Arrow
+    batches only the last key's carry is kept, one carry per task."""
+    schema = StructType(
+        list(df.schema.fields)
+        + [StructField(c, DoubleType()) for c in rec.out_cols]
+    )
+    cols = list(df.columns) + list(rec.out_cols)
+    int_key = isinstance(df.schema[key_col].dataType, IntegralType)
+
+    def _fn(batches):
+        carries = {}
+        for pdf in batches:
+            last = _recur_key_runs(
+                pdf, key_col, value_col, int_key, carries, rec
+            )
+            if len(pdf):
+                carries = {last: carries[last]}
+            yield pdf[cols]
+
+    part = df.repartition(F.col(key_col)).sortWithinPartitions(
+        key_col, *order_cols
+    )
+    return part.mapInPandas(_fn, schema)
+
+
+def _ewma_recurrence(alpha: float, out_col: str = "ewma") -> _Recurrence:
+    """``y_0 = x_0``, ``y_i = alpha*x_i + (1-alpha)*y_{i-1}``; the
+    carry is the last ``y``."""
+    a = float(alpha)
+    one_minus = 1.0 - a
+
+    def step(xs, prev):
+        ys = []
+        for x in xs:
+            prev = x if prev is None else a * x + one_minus * prev
+            ys.append(prev)
+        return (ys,), prev
+
+    return _Recurrence((out_col,), step, DoubleType())
+
+
+def _holt_recurrence(alpha: float, beta: float) -> _Recurrence:
+    """Holt's (level, trend) recurrence; the carry is the last
+    ``[level, trend]``."""
+    a = float(alpha)
+    one_minus_a = 1.0 - a
+    be = float(beta)
+    one_minus_b = 1.0 - be
+
+    def step(xs, carry):
+        seen = carry is not None
+        l_prev, b_prev = carry if seen else (0.0, 0.0)
+        lev, tre = [], []
+        for x in xs:
+            if not seen:
+                l_new = x
+                b_new = 0.0
+                seen = True
+            else:
+                l_new = a * x + one_minus_a * (l_prev + b_prev)
+                b_new = be * (l_new - l_prev) + one_minus_b * b_prev
+            lev.append(l_new)
+            tre.append(b_new)
+            l_prev, b_prev = l_new, b_new
+        return (lev, tre), [l_prev, b_prev]
+
+    return _Recurrence(
+        ("level", "trend"), step, ArrayType(DoubleType())
+    )
+
+
 def ewma(
     df: DataFrame,
     key_col: str,
@@ -667,8 +800,8 @@ def ewma(
     needs (1-alpha)^(-i) factors that overflow beyond ~1e3 rows) — so
     it crosses the Python boundary: one shuffle on the key, one
     key-sorted ``mapInPandas`` pass per partition (one Python call
-    per Arrow batch, not per key).  State per task is one (prev,
-    seen) carry, never corpus-sized.
+    per Arrow batch, not per key; :func:`_map_key_runs`).  State per
+    task is one carry, never corpus-sized.
 
     The recurrence is written EXPLICITLY as
     ``alpha * x + (1 - alpha) * y`` rather than via pandas'
@@ -684,57 +817,9 @@ def ewma(
     ``(ts, event_id)``): ``sortWithinPartitions`` is not a stable
     sort, so rows tied on every order col may come back in either
     order and the recurrence result would be nondeterministic."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, DoubleType())]
+    return _map_key_runs(
+        df, key_col, order_cols, value_col, _ewma_recurrence(alpha, out_col)
     )
-    cols = list(df.columns)
-    a = float(alpha)
-    one_minus = 1.0 - a
-
-    # One mapInPandas over key-partitioned, key-sorted partitions
-    # instead of groupBy().applyInPandas (optimization r16): the
-    # per-GROUP pandas path paid a Python call + frame construction
-    # per key (measured ~3.4 ms x 1500 keys at sf0.1 — the whole
-    # query's cost); here one Python call handles a whole Arrow batch
-    # and key changes are detected in the row loop.  The recurrence
-    # arithmetic, per-key row order, and output schema are identical —
-    # a key's rows are contiguous and ordered within its partition,
-    # and the (prev, seen) carry survives Arrow batch boundaries
-    # inside the task.
-    def _fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        # Null-aware key-change test (ADVICE r16): a nullable numeric
-        # key arrives in pandas as float64 with NaN, and NaN != NaN
-        # would reset the recurrence on EVERY null-key row — the old
-        # groupBy().applyInPandas path treated all null keys as one
-        # group, and the repartition/sort above co-locates them the
-        # same way.  Two nulls compare equal here for parity.
-        cur_key, prev, seen = None, 0.0, False
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            keys = pdf[key_col].astype(object).to_numpy()
-            out = np.empty_like(vals)
-            for i in range(len(vals)):
-                k = keys[i]
-                if not seen or (
-                    k != cur_key
-                    and not (pd.isna(k) and pd.isna(cur_key))
-                ):
-                    cur_key, seen = k, False
-                prev = vals[i] if not seen else a * vals[i] + one_minus * prev
-                seen = True
-                out[i] = prev
-            pdf[out_col] = out
-            yield pdf[cols + [out_col]]
-
-    part = df.repartition(F.col(key_col)).sortWithinPartitions(
-        key_col, *order_cols
-    )
-    return part.mapInPandas(_fn, schema)
 
 
 def hopping_window_agg(
@@ -1023,60 +1108,9 @@ def holt(
     ``order_cols`` must be a TOTAL order within each key — see
     ewma's note on ``sortWithinPartitions`` instability under ties.
     """
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType(
-        list(df.schema.fields)
-        + [StructField("level", DoubleType()),
-           StructField("trend", DoubleType())]
+    return _map_key_runs(
+        df, key_col, order_cols, value_col, _holt_recurrence(alpha, beta)
     )
-    cols = list(df.columns)
-    a = float(alpha)
-    one_minus_a = 1.0 - a
-    be = float(beta)
-    one_minus_b = 1.0 - be
-
-    # Same mapInPandas-over-sorted-partitions shape as ewma
-    # (optimization r16): one Python call per Arrow batch instead of
-    # per key, identical arithmetic and per-key order, (level, trend)
-    # carry survives batch boundaries inside the task.
-    def _fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        # Null-aware key-change test — see ewma._fn for why two nulls
-        # must compare equal (ADVICE r16).
-        cur_key, l_prev, b_prev, seen = None, 0.0, 0.0, False
-        for pdf in batches:
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            keys = pdf[key_col].astype(object).to_numpy()
-            lev = np.empty_like(vals)
-            tre = np.empty_like(vals)
-            for i in range(len(vals)):
-                k = keys[i]
-                if not seen or (
-                    k != cur_key
-                    and not (pd.isna(k) and pd.isna(cur_key))
-                ):
-                    cur_key, seen = k, False
-                if not seen:
-                    l_new = vals[i]
-                    b_new = 0.0
-                else:
-                    l_new = a * vals[i] + one_minus_a * (l_prev + b_prev)
-                    b_new = be * (l_new - l_prev) + one_minus_b * b_prev
-                seen = True
-                lev[i] = l_new
-                tre[i] = b_new
-                l_prev, b_prev = l_new, b_new
-            pdf["level"] = lev
-            pdf["trend"] = tre
-            yield pdf[cols + ["level", "trend"]]
-
-    part = df.repartition(F.col(key_col)).sortWithinPartitions(
-        key_col, *order_cols
-    )
-    return part.mapInPandas(_fn, schema)
 
 
 def ntile_profile(

@@ -2576,9 +2576,6 @@ def ivf_kmeans_write(
     with ``_`` are invisible to the parquet reader).  Trained lists
     follow the data distribution, so probes cover better than the
     random-anchor :func:`ivf_write` at equal ``n_probe``."""
-    import json as _json
-    import os as _os
-
     cents, assigned = kmeans_fit(
         df, dim, id_col, vec_col, k=n_centroids, iters=iters, seed=seed
     )
@@ -2590,8 +2587,7 @@ def ivf_kmeans_write(
         .partitionBy("centroid")
         .parquet(path)
     )
-    with open(_os.path.join(path, "_centroids.json"), "w", encoding="utf-8") as fh:
-        _json.dump(cents, fh)
+    fc.write_json_atomic(os.path.join(path, "_centroids.json"), cents)
     return cents
 
 

@@ -158,6 +158,13 @@ def parse_lines(
     return events, dead_json.unionByName(dead_events)
 
 
+def _quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), so generated ``selectExpr`` strings parse any column
+    name — spaces, hyphens, reserved words."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def variants_to_events(
     df: DataFrame,
     variant_col: str = "_v",
@@ -170,7 +177,8 @@ def variants_to_events(
     the value is a valid event; else a drop reason).  Shared by NDJSON
     ingestion and the send-receive transforms' output parsing
     (parseVector, src/event.ts:276-297)."""
-    keep = list(keep_cols or [])
+    keep = [_quote_ident(c) for c in keep_cols or []]
+    v = _quote_ident(variant_col)
     flat = df
     # ONE Generate instead of max_array_depth stacked explodes
     # (optimization r17): every DataFrame op re-analyzes the whole
@@ -190,10 +198,10 @@ def variants_to_events(
         "THEN from_json(to_json({x}), 'array<variant>') "
         "ELSE array({x}) END"
     )
-    expr = arr_t.format(x=variant_col)
+    expr = arr_t.format(x=v)
     for i in range(1, max_array_depth):
         expr = f"flatten(transform({expr}, x{i} -> {arr_t.format(x=f'x{i}')}))"
-    flat = flat.selectExpr(*keep, f"explode({expr}) AS {variant_col}")
+    flat = flat.selectExpr(*keep, f"explode({expr}) AS {v}")
 
     # Same single-parse selectExpr trade as the flatten loop above;
     # expression-for-expression the Column form's tree (distinguish
@@ -201,10 +209,10 @@ def variants_to_events(
     # is 'null', of SQL NULL is NULL).
     extracted = flat.selectExpr(
         *keep,
-        f"try_variant_get({variant_col}, '$.n', 'string') AS n",
-        f"to_json(try_variant_get({variant_col}, '$.d', 'variant')) AS d",
-        f"try_variant_get({variant_col}, '$.t', 'variant') AS _traw",
-        f"schema_of_variant({variant_col}) AS _sch",
+        f"try_variant_get({v}, '$.n', 'string') AS n",
+        f"to_json(try_variant_get({v}, '$.d', 'variant')) AS d",
+        f"try_variant_get({v}, '$.t', 'variant') AS _traw",
+        f"schema_of_variant({v}) AS _sch",
     )
     trace_ddl = TRACE_TYPE.simpleString()
     # SQL string literals eat single backslashes — double them so the

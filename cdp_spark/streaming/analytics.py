@@ -29,6 +29,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Keyed streaming state (stream_ewma, stream_holt, the new x new leg of
+# stream_incremental_near_dups) is grouped by
+# pmod(xxhash64(key), STATE_BUCKETS): one Python call and one state row
+# per bucket per trigger instead of per key (optimization r17: 15.4 s ->
+# 8.8 s on the ~15k-user driver stream).  A constant, not derived from
+# parallelism: the checkpoint stores state per bucket, so a count that
+# changed between restarts would move keys away from their carries and
+# their recurrences would silently start over.
+STATE_BUCKETS = 64
+
+
+def _state_bucket(*cols: Column) -> Column:
+    return F.pmod(F.xxhash64(*cols), F.lit(STATE_BUCKETS))
+
 
 def stream_time_window_agg(
     stream: DataFrame,
@@ -271,7 +285,6 @@ def stream_incremental_near_dups(
     n: int = 3,
     hash_fn=None,
     max_bucket_members: int | None = None,
-    key_buckets: int | None = None,
 ) -> DataFrame:
     """FULL streaming incremental near-dedup: flag streamed documents
     that duplicate the static corpus OR an EARLIER streamed document
@@ -322,19 +335,11 @@ def stream_incremental_near_dups(
       (fold-then-flag == flag-against-rebuilt-corpus, oracled by the
       ``fold_incremental_dedup`` driver query).
 
-    ``key_buckets`` (optimization r17, guide §4): most (band, bucket)
-    groups hold one or two rows per trigger, so per-GROUP state pays
-    one Python call + one state-store row per occupied bucket per
-    batch — thousands of calls of pure overhead.  Pass a bucket count
-    to group by ``pmod(xxhash64(band, bucket), key_buckets)`` and run
-    the SAME per-(band, bucket) pairing inside the physical bucket:
-    state becomes one JSON object mapping "band:bucket" -> members,
-    each logical bucket keeps its own member list, cap, and
-    ascending-id processing order, so the emitted candidate set is
-    IDENTICAL (pinned by test) at O(key_buckets) Python calls and
-    state rows per trigger.  Trade: a changed physical bucket
-    re-encodes its whole map (the per-logical-bucket skip only
-    applies bucket-internally), the usual bucketing trade.
+    State is grouped into :data:`STATE_BUCKETS` buckets by
+    (band, bucket): each logical (band, bucket) keeps its own member
+    list, cap and ascending-id processing order inside its state
+    bucket, and the count is a constant so that a restarted checkpoint
+    finds every bucket's members.
     """
     import json as _json
 
@@ -416,52 +421,11 @@ def stream_incremental_near_dups(
     )
     state_schema = T.StructType([T.StructField("members", T.StringType())])
 
-    def pair_fn(key, pdfs, state: GroupState):
-        members: list[tuple[int, list[str]]]
-        if state.exists:
-            members = [
-                (int(i), sh) for i, sh in _json.loads(state.get[0])
-            ]
-        else:
-            members = []
-        rows_in = []
-        for pdf in pdfs:
-            for i, sh in zip(pdf["_new_id"], pdf["_new_sh"]):
-                rows_in.append((int(i), list(sh)))
-        rows_in.sort(key=lambda t: t[0])
-        out = []
-        changed, capped = _pair_bucket(members, rows_in, out)
-        if capped:
-            # Cap hit: arrivals above still flagged against the held
-            # members, but not retained as future partners (bounded
-            # state, bounded recall loss — executor log, once per
-            # bucket per batch).
-            import logging as _logging
-
-            _logging.getLogger(__name__).warning(
-                "stream_incremental_near_dups bucket %s at "
-                "max_bucket_members=%d: new arrivals flag against "
-                "held members but are not retained; fold the "
-                "increment into the corpus index to reset state",
-                tuple(key),
-                max_bucket_members,
-            )
-        # Only re-encode state when membership actually changed — a
-        # hot capped bucket must not re-serialize its blob per batch
-        # (ADVICE r8).
-        if changed:
-            state.update((_json.dumps(members),))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["id", "partner", "inter_n", "union_n"]
-            )
-
     def _pair_bucket(members, rows_in, out):
-        """The per-(band, bucket) pairing shared verbatim by the
-        per-group and bucketed state functions: rows_in ascending by
-        id, each arrival pairs against every held member, then joins
-        the member list unless the cap holds it out.  Returns
-        (changed, capped)."""
+        """The pairing of one logical (band, bucket): rows_in
+        ascending by id, each arrival pairs against every held member,
+        then joins the member list unless the cap holds it out.
+        Returns (changed, capped)."""
         changed = False
         capped = False
         for nid, nsh in rows_in:
@@ -486,11 +450,9 @@ def stream_incremental_near_dups(
                 capped = True
         return changed, capped
 
-    def pair_fn_bucketed(key, pdfs, state: GroupState):
+    def pair_fn(key, pdfs, state: GroupState):
         # state = one JSON object "band:bucket" -> members for every
-        # logical bucket hashed into this physical bucket; the pairing
-        # per logical bucket is _pair_bucket, identical to the
-        # per-group path.
+        # logical bucket hashed into this state bucket
         buckets: dict[str, list]
         if state.exists:
             buckets = {
@@ -528,6 +490,8 @@ def stream_incremental_near_dups(
                 capped_keys,
                 max_bucket_members,
             )
+        # Re-encode state only when membership changed: a capped hot
+        # bucket must not re-serialize its map every batch (ADVICE r8).
         if changed:
             state.update((_json.dumps(buckets),))
         if out:
@@ -535,20 +499,11 @@ def stream_incremental_near_dups(
                 out, columns=["id", "partner", "inter_n", "union_n"]
             )
 
-    if key_buckets is not None:
-        grouped = banded.withColumn(
-            "_kb",
-            F.pmod(
-                F.xxhash64(F.col("band"), F.col("bucket")),
-                F.lit(int(key_buckets)),
-            ),
-        ).groupBy("_kb")
-        state_fn = pair_fn_bucketed
-    else:
-        grouped = banded.groupBy("band", "bucket")
-        state_fn = pair_fn
+    grouped = banded.withColumn(
+        "_kb", _state_bucket(F.col("band"), F.col("bucket"))
+    ).groupBy("_kb")
     new_new = grouped.applyInPandasWithState(
-        state_fn,
+        pair_fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
@@ -780,6 +735,71 @@ def stream_quality_gate(
     )
 
 
+def _stream_key_runs(
+    stream: DataFrame, key_col, order_cols, value_col, rec
+) -> DataFrame:
+    """Streaming driver of a per-key recurrence (the kernel the batch
+    operators run, :func:`~cdp_spark.datapipe.analytics._recur_key_runs`):
+    one ``applyInPandasWithState`` group per state bucket
+    (:data:`STATE_BUCKETS`).  A bucket's rows are sorted by
+    (key, ``order_cols``), so each key's rows form one run consumed in
+    ``order_cols`` order from the carry of the key's previous rows.
+    State per bucket = the map key -> carry plus the null keys' carry
+    (Spark maps forbid null keys); no timeout."""
+    import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from ..datapipe.analytics import _recur_key_runs
+
+    kt = stream.schema[key_col].dataType
+    int_key = isinstance(kt, T.IntegralType)
+    bucketed = stream.withColumn("_kb", _state_bucket(F.col(key_col)))
+    cols = list(bucketed.columns) + list(rec.out_cols)
+    out_schema = T.StructType(
+        list(bucketed.schema.fields)
+        + [T.StructField(c, T.DoubleType()) for c in rec.out_cols]
+    )
+    state_schema = T.StructType(
+        [
+            T.StructField("m", T.MapType(kt, rec.carry_type)),
+            T.StructField("null_carry", rec.carry_type),
+        ]
+    )
+
+    def _fn(key, pdfs, state: GroupState):
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        pdf = (
+            pd.concat(chunks, ignore_index=True)
+            if len(chunks) > 1
+            else chunks[0]
+        )
+        pdf = pdf.sort_values([key_col] + order_cols, kind="mergesort")
+        carries = {}
+        if state.exists:
+            m, null_carry = state.get
+            carries = dict(m or {})
+            carries[None] = null_carry
+        _recur_key_runs(pdf, key_col, value_col, int_key, carries, rec)
+        null_carry = carries.pop(None, None)
+        state.update((carries, null_carry))
+        yield pdf[cols]
+
+    return (
+        bucketed.groupBy("_kb")
+        .applyInPandasWithState(
+            _fn,
+            outputStructType=out_schema,
+            stateStructType=state_schema,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        .drop("_kb")
+    )
+
+
 def stream_ewma(
     stream: DataFrame,
     key_col: str,
@@ -787,13 +807,12 @@ def stream_ewma(
     value_col: str,
     alpha: float,
     out_col: str = "ewma",
-    key_buckets: int | None = None,
 ) -> DataFrame:
     """STREAMING per-key EWMA — the telemetry-smoothing recurrence
     ``y_0 = x_0``, ``y_i = alpha*x_i + (1-alpha)*y_{i-1}`` carried
     across micro-batches (VERDICT r15 next #5): the canonical
     ``applyInPandasWithState`` use, where the whole cross-batch state
-    is two numbers per key (the last smoothed value + a seen flag).
+    is one number per key (the last smoothed value).
 
     Semantics contract: the recurrence consumes each key's rows in
     ``order_cols`` order WITHIN a micro-batch (sorted inside the
@@ -806,171 +825,20 @@ def stream_ewma(
     arrivals smooth in arrival order, the standard streaming-EWMA
     behavior.
 
-    The recurrence is the explicit ``a*x + (1-a)*y`` form for the
-    same bitwise-reproducibility reasons as the batch operator (with
-    (1-alpha) exactly representable the stream equals the batch and
-    any IEEE oracle bit-for-bit).  State is bounded by key
-    cardinality — two doubles per key, never corpus-sized; no
-    timeout (a key's baseline persists for its next reading).
-
-    ``key_buckets`` (optimization r17, guide §4): with very many keys
-    and a handful of rows per key per trigger, per-KEY grouping pays
-    one Python call + pandas frame per key per batch — pure call
-    overhead.  Pass a bucket count to group by
-    ``pmod(xxhash64(key), key_buckets)`` instead and run the SAME
-    per-key recurrence inside the bucket (rows sorted by (key,
-    order_cols); cross-batch state is a per-bucket MAP key -> prev,
-    null keys carried in a separate slot because Spark maps forbid
-    null keys).  Bit-identical output — pinned by test — at
-    O(key_buckets) Python calls per trigger instead of O(keys);
-    measured 15.4s -> 8.8s on the 100k-row / ~15k-user driver stream
-    at 64 buckets.
+    The step arithmetic is the batch operator's own (one recurrence
+    kernel for both), so with (1-alpha) exactly representable the
+    stream equals the batch and any IEEE oracle bit-for-bit.  State
+    is bounded by key cardinality — one double per key, never
+    corpus-sized; no timeout (a key's baseline persists for its next
+    reading).  Keys share :data:`STATE_BUCKETS` state buckets, a
+    constant so that a restarted checkpoint finds every key's carry.
 
     Output: the input columns + ``out_col``, append mode."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..datapipe.analytics import _ewma_recurrence
 
-    cols = list(stream.columns)
-    a = float(alpha)
-    one_minus = 1.0 - a
-
-    if key_buckets is not None:
-        kt = stream.schema[key_col].dataType
-        int_key = isinstance(
-            kt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        )
-        bucketed = stream.withColumn(
-            "_kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(int(key_buckets)))
-        )
-        cols_b = list(bucketed.columns)
-        out_schema_b = T.StructType(
-            list(bucketed.schema.fields) + [T.StructField(out_col, T.DoubleType())]
-        )
-        state_schema_b = T.StructType(
-            [
-                T.StructField("m", T.MapType(kt, T.DoubleType())),
-                T.StructField("null_prev", T.DoubleType()),
-                T.StructField("null_seen", T.BooleanType()),
-            ]
-        )
-
-        def _fn_bucket(key, pdfs, state: GroupState):
-            import numpy as np
-
-            if state.exists:
-                m_raw, null_prev, null_seen = state.get
-                m = dict(m_raw or {})
-            else:
-                m, null_prev, null_seen = {}, 0.0, False
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if not chunks:
-                return
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            )
-            # sort by (key, order): each key's rows form one contiguous
-            # run consumed in order_cols order — the per-key semantics
-            pdf = pdf.sort_values([key_col] + order_cols, kind="mergesort")
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            kser = pdf[key_col]
-            isna = kser.isna().to_numpy()
-            keys = kser.to_numpy()
-            out = np.empty_like(vals)
-            n = len(vals)
-            start = 0
-            for i in range(1, n + 1):
-                if (
-                    i < n
-                    and isna[i] == isna[i - 1]
-                    and (isna[i] or keys[i] == keys[i - 1])
-                ):
-                    continue
-                if isna[start]:
-                    prev, seen = null_prev, null_seen
-                else:
-                    k = keys[start]
-                    k = k.item() if hasattr(k, "item") else k
-                    if int_key and not isinstance(k, int):
-                        # a batch containing nulls arrives with the key
-                        # column coerced to float64; the state map's
-                        # declared key type is integral, and float keys
-                        # silently fail the map round trip (exact for
-                        # |key| < 2^53, the pandas-nullable limit)
-                        k = int(k)
-                    if k in m:
-                        prev, seen = m[k], True
-                    else:
-                        prev, seen = 0.0, False
-                for j in range(start, i):
-                    prev = a * vals[j] + one_minus * prev if seen else vals[j]
-                    seen = True
-                    out[j] = prev
-                if isna[start]:
-                    null_prev, null_seen = float(prev), True
-                else:
-                    m[k] = float(prev)
-                start = i
-            state.update((m, float(null_prev), bool(null_seen)))
-            pdf[out_col] = out
-            yield pdf[cols_b + [out_col]]
-
-        return (
-            bucketed.groupBy("_kb")
-            .applyInPandasWithState(
-                _fn_bucket,
-                outputStructType=out_schema_b,
-                stateStructType=state_schema_b,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .drop("_kb")
-        )
-
-    out_schema = T.StructType(
-        list(stream.schema.fields)
-        + [T.StructField(out_col, T.DoubleType())]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("prev", T.DoubleType()),
-            T.StructField("seen", T.BooleanType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        prev, seen = (state.get if state.exists else (0.0, False))
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        out = np.empty_like(vals)
-        for i in range(len(vals)):
-            prev = (
-                a * vals[i] + one_minus * prev if seen else vals[i]
-            )
-            seen = True
-            out[i] = prev
-        state.update((float(prev), True))
-        pdf[out_col] = out
-        yield pdf[cols + [out_col]]
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stream_key_runs(
+        stream, key_col, order_cols, value_col,
+        _ewma_recurrence(alpha, out_col),
     )
 
 
@@ -981,7 +849,6 @@ def stream_holt(
     value_col: str,
     alpha: float = 0.5,
     beta: float = 0.5,
-    key_buckets: int | None = None,
 ) -> DataFrame:
     """STREAMING per-key Holt double exponential smoothing — the
     two-state (level, trend) recurrence of
@@ -995,185 +862,15 @@ def stream_holt(
     order WITHIN a batch (sorted in the state function) and arrival
     order ACROSS batches, equal to the batch operator whenever each
     key's rows arrive in non-decreasing order across batches.  State
-    per key is three numbers (level, trend, seen) — bounded by key
-    cardinality, no timeout.  The arithmetic repeats the batch
-    operator's exact parenthesisation, so with exactly-representable
-    complements the stream, the batch operator, and a recursive-CTE
-    oracle agree bit-for-bit.
+    per key is (level, trend) — bounded by key cardinality, no
+    timeout.  The step is the batch operator's own, so with
+    exactly-representable complements the stream, the batch
+    operator, and a recursive-CTE oracle agree bit-for-bit.  Keys
+    share :data:`STATE_BUCKETS` state buckets, a constant so that a
+    restarted checkpoint finds every key's carry."""
+    from ..datapipe.analytics import _holt_recurrence
 
-    ``key_buckets``: same bucketed-state option as
-    :func:`stream_ewma` (one Python call per bucket per trigger
-    instead of per key; per-bucket map key -> (level, trend), null
-    keys in a separate slot; bit-identical output, pinned by test)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    cols = list(stream.columns)
-    a = float(alpha)
-    one_minus_a = 1.0 - a
-    be = float(beta)
-    one_minus_b = 1.0 - be
-
-    if key_buckets is not None:
-        kt = stream.schema[key_col].dataType
-        int_key = isinstance(
-            kt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-        )
-        bucketed = stream.withColumn(
-            "_kb", F.pmod(F.xxhash64(F.col(key_col)), F.lit(int(key_buckets)))
-        )
-        cols_b = list(bucketed.columns)
-        out_schema_b = T.StructType(
-            list(bucketed.schema.fields)
-            + [T.StructField("level", T.DoubleType()),
-               T.StructField("trend", T.DoubleType())]
-        )
-        state_schema_b = T.StructType(
-            [
-                T.StructField("m", T.MapType(kt, T.ArrayType(T.DoubleType()))),
-                T.StructField("null_lt", T.ArrayType(T.DoubleType())),
-            ]
-        )
-
-        def _fn_bucket(key, pdfs, state: GroupState):
-            import numpy as np
-
-            if state.exists:
-                m_raw, null_lt = state.get
-                m = {k: (v[0], v[1]) for k, v in dict(m_raw or {}).items()}
-            else:
-                m, null_lt = {}, None
-            null_state = (
-                (null_lt[0], null_lt[1]) if null_lt is not None else None
-            )
-            chunks = [pdf for pdf in pdfs if len(pdf)]
-            if not chunks:
-                return
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            )
-            pdf = pdf.sort_values([key_col] + order_cols, kind="mergesort")
-            vals = pdf[value_col].to_numpy(dtype=np.float64)
-            kser = pdf[key_col]
-            isna = kser.isna().to_numpy()
-            keys = kser.to_numpy()
-            lev = np.empty_like(vals)
-            tre = np.empty_like(vals)
-            n = len(vals)
-            start = 0
-            for i in range(1, n + 1):
-                if (
-                    i < n
-                    and isna[i] == isna[i - 1]
-                    and (isna[i] or keys[i] == keys[i - 1])
-                ):
-                    continue
-                if isna[start]:
-                    prior = null_state
-                else:
-                    k = keys[start]
-                    k = k.item() if hasattr(k, "item") else k
-                    if int_key and not isinstance(k, int):
-                        # float64-coerced integral key (null-bearing
-                        # batch): restore the exact int for the map
-                        k = int(k)
-                    prior = m.get(k)
-                if prior is None:
-                    l_prev, b_prev, seen = 0.0, 0.0, False
-                else:
-                    l_prev, b_prev, seen = prior[0], prior[1], True
-                for j in range(start, i):
-                    if not seen:
-                        l_new = vals[j]
-                        b_new = 0.0
-                        seen = True
-                    else:
-                        l_new = a * vals[j] + one_minus_a * (l_prev + b_prev)
-                        b_new = be * (l_new - l_prev) + one_minus_b * b_prev
-                    lev[j] = l_new
-                    tre[j] = b_new
-                    l_prev, b_prev = l_new, b_new
-                if isna[start]:
-                    null_state = (float(l_prev), float(b_prev))
-                else:
-                    m[k] = (float(l_prev), float(b_prev))
-                start = i
-            state.update(
-                (
-                    {k: [v[0], v[1]] for k, v in m.items()},
-                    list(null_state) if null_state is not None else None,
-                )
-            )
-            pdf["level"] = lev
-            pdf["trend"] = tre
-            yield pdf[cols_b + ["level", "trend"]]
-
-        return (
-            bucketed.groupBy("_kb")
-            .applyInPandasWithState(
-                _fn_bucket,
-                outputStructType=out_schema_b,
-                stateStructType=state_schema_b,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .drop("_kb")
-        )
-
-    out_schema = T.StructType(
-        list(stream.schema.fields)
-        + [T.StructField("level", T.DoubleType()),
-           T.StructField("trend", T.DoubleType())]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("seen", T.BooleanType()),
-        ]
-    )
-
-    def _fn(key, pdfs, state: GroupState):
-        import numpy as np
-
-        l_prev, b_prev, seen = (
-            state.get if state.exists else (0.0, 0.0, False)
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        lev = np.empty_like(vals)
-        tre = np.empty_like(vals)
-        for i in range(len(vals)):
-            if not seen:
-                l_new = vals[i]
-                b_new = 0.0
-                seen = True
-            else:
-                l_new = a * vals[i] + one_minus_a * (l_prev + b_prev)
-                b_new = be * (l_new - l_prev) + one_minus_b * b_prev
-            lev[i] = l_new
-            tre[i] = b_new
-            l_prev, b_prev = l_new, b_new
-        state.update((float(l_prev), float(b_prev), True))
-        pdf["level"] = lev
-        pdf["trend"] = tre
-        yield pdf[cols + ["level", "trend"]]
-
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stream_key_runs(
+        stream, key_col, order_cols, value_col,
+        _holt_recurrence(alpha, beta),
     )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from ..datapipe.curate import filter_contaminated
+from .runner import start_foreach_batch
 
 
 def curate_stream(
@@ -38,9 +39,4 @@ def curate_stream(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         sink(filter_contaminated(batch_df, eval_set, id_col, text_col, n), epoch_id)
 
-    writer = stream_docs.writeStream.foreachBatch(process)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_docs, process, checkpoint, available_now)

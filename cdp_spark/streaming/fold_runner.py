@@ -90,29 +90,9 @@ from pyspark.sql.streaming import StreamingQuery
 from ..datapipe import dedup_index as di
 from ..datapipe import fold_commit as fc
 from ..session import iter_checkpoint
+from .runner import start_foreach_batch
 
 logger = logging.getLogger(__name__)
-
-
-def _start_foreach_batch(
-    source_stream: DataFrame,
-    body,
-    checkpoint_dir: Optional[str],
-    available_now: bool,
-    trigger_seconds: Optional[float],
-) -> StreamingQuery:
-    """Start ``body(batch_df, epoch_id)`` as the foreachBatch sink of
-    ``source_stream``: checkpointed when ``checkpoint_dir`` is given,
-    drained once with ``available_now``, else every
-    ``trigger_seconds`` (Spark's default trigger when None)."""
-    writer = source_stream.writeStream.foreachBatch(body)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def run_bm25_ingest_stream(
@@ -158,7 +138,7 @@ def run_bm25_ingest_stream(
             epoch=epoch_id, lineage=lineage,
         )
 
-    return _start_foreach_batch(
+    return start_foreach_batch(
         source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
     )
 
@@ -195,7 +175,7 @@ def run_sketch_ingest_stream(
             batch_df, index_path, epoch=epoch_id, lineage=lineage
         )
 
-    return _start_foreach_batch(
+    return start_foreach_batch(
         source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
     )
 
@@ -283,7 +263,7 @@ def run_bloom_gate_stream(
             batch, index_path, epoch=epoch_id, lineage=lineage
         )
 
-    return _start_foreach_batch(
+    return start_foreach_batch(
         source_stream, _step, checkpoint_dir, available_now, trigger_seconds
     )
 
@@ -326,7 +306,7 @@ def run_ivf_ingest_stream(
             return
         si.ivf_index_fold(batch_df, index_path, epoch=epoch_id, lineage=lineage)
 
-    return _start_foreach_batch(
+    return start_foreach_batch(
         source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
     )
 
@@ -565,7 +545,7 @@ def run_ivf_serving_stream(
             recall_n_probe=recall_n_probe,
         )
 
-    return _start_foreach_batch(
+    return start_foreach_batch(
         source_stream, _fold, checkpoint_dir, available_now, trigger_seconds
     )
 
@@ -1049,7 +1029,7 @@ class IncrementFoldRunner:
         idempotently (see ``process_batch``)."""
         if checkpoint_dir is not None:
             self.bind_checkpoint(checkpoint_dir)
-        return _start_foreach_batch(
+        return start_foreach_batch(
             self._source, self.process_batch, checkpoint_dir,
             available_now, trigger_seconds,
         )

@@ -13,11 +13,10 @@ Semantics vs the reference:
   stamps every event in one poll with a single wall-clock read
   (``arrivalTimestamp`` box, src/event.ts:198-206); here every event
   in a micro-batch gets the trigger's wall-clock read.
-- With ``stateful_windows=True`` (the default) under a CONTINUOUS
-  trigger, a pipeline whose first windowed step is a count-or-time
-  ``reduce`` reachable from the input through pattern filters and
-  renames runs that window as the REAL stateful operator
-  (:func:`cdp_spark.streaming.streaming_count_or_time`,
+- Under a CONTINUOUS trigger, a pipeline whose first windowed step
+  is a count-or-time ``reduce`` reachable from the input through
+  pattern filters and renames runs that window as the REAL stateful
+  operator (:func:`cdp_spark.streaming.streaming_count_or_time`,
   ``applyInPandasWithState``): buffers span micro-batches exactly
   like the reference's per-step vectors span polls
   (src/step.ts:70-151) — a 100-event window fed 40+40+20 across
@@ -52,6 +51,27 @@ from ..metrics import PipelineMetrics
 from ..pipeline.compiler import compile_pipeline
 from ..pipeline.template import PipelineTemplate
 from .sources import stream_generator, stream_ndjson_files
+
+
+def start_foreach_batch(
+    source_stream: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint_dir: Optional[str],
+    available_now: bool,
+    trigger_seconds: Optional[float] = None,
+) -> StreamingQuery:
+    """Start ``body(batch_df, epoch_id)`` as the foreachBatch sink of
+    ``source_stream``: checkpointed when ``checkpoint_dir`` is given,
+    drained once with ``available_now``, else every
+    ``trigger_seconds`` (Spark's default trigger when None)."""
+    writer = source_stream.writeStream.foreachBatch(body)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def _input_stream(
@@ -182,18 +202,15 @@ def run_pipeline_stream(
     checkpoint_dir: Optional[str] = None,
     trigger_seconds: Optional[float] = None,
     available_now: bool = False,
-    stateful_windows: bool = True,
 ) -> StreamingQuery:
     """Start the pipeline as a streaming query and return it.
 
     ``input_stream`` overrides the template's input form (the library
     entry point, like ``input_df`` in batch).  ``on_batch`` receives
     each micro-batch's terminal output (already trace-stamped); sinks
-    declared in the template run every batch regardless.
-
-    ``stateful_windows``: run the first eligible count-or-time window
-    as the cross-batch stateful operator (see module notes); pass
-    False to force per-batch window assembly for every step.
+    declared in the template run every batch regardless.  Under a
+    continuous trigger the first eligible count-or-time window runs as
+    the cross-batch stateful operator (see module notes).
     """
     if input_stream is None:
         if spark is None:
@@ -205,11 +222,7 @@ def run_pipeline_stream(
     # everything), while the stateful operator would strand its last
     # partial buffer in the state store.  Cross-batch state therefore
     # engages only for continuous triggers.
-    plan = (
-        _stateful_window_plan(template)
-        if stateful_windows and not available_now
-        else None
-    )
+    plan = None if available_now else _stateful_window_plan(template)
     applied: Optional[set] = None
     prewindowed: Optional[str] = None
     if plan is not None:
@@ -310,14 +323,10 @@ def run_pipeline_stream(
         # (src/dead-letter.ts:19-32); no-op otherwise.
         ship_dead_letters(result.dead_letters)
 
-    writer = input_stream.writeStream.foreachBatch(process_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return start_foreach_batch(
+        input_stream, process_batch, checkpoint_dir, available_now,
+        trigger_seconds,
+    )
 
 
 class PipelineRunner:

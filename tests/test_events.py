@@ -143,3 +143,23 @@ def test_signature_and_envsubst():
         "k": "v-f",
         "f": [""],
     }
+
+
+def test_variants_to_events_quotes_identifiers(spark):
+    """Generated SQL quotes every identifier: keep columns named with a
+    space, a hyphen and a reserved word, and a variant column holding a
+    backtick, pass through unchanged."""
+    from cdp_spark.events import variants_to_events
+
+    df = spark.createDataFrame(
+        [(1, 2, 3, '[{"n":"a","d":1},{"n":"b"}]'), (4, 5, 6, '{"n":"c"}')],
+        ["a b", "a-b", "select", "raw"],
+    ).select("a b", "a-b", "select", F.parse_json("raw").alias("v`x"))
+    keep = ["a b", "a-b", "select"]
+    out = variants_to_events(df, variant_col="v`x", keep_cols=keep)
+    assert out.columns == keep + ["n", "d", "t", "_reason"]
+    rows = sorted(
+        (r["a b"], r["a-b"], r["select"], r["n"], r["_reason"])
+        for r in out.collect()
+    )
+    assert rows == [(1, 2, 3, "a", None), (1, 2, 3, "b", None), (4, 5, 6, "c", None)]

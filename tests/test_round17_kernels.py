@@ -110,7 +110,11 @@ def test_centroid_argmin_kernel_matches_column_fold(spark):
     cents_tie = [list(c) for c in cents]
     cents_tie[5] = list(cents_tie[2])
     tie_rows = spark.createDataFrame(
-        [(100001, [float(x) for x in cents_tie[2]])],
+        [
+            (100001, [float(x) for x in cents_tie[2]]),
+            (100002, None),  # NULL embedding
+            (100003, [1.0, 2.0]),  # shorter than the model's dim
+        ],
         "vec_id long, embedding array<float>",
     )
     docs = emb.unionByName(tie_rows)
@@ -153,7 +157,12 @@ def test_anchor_argmax_kernel_matches_column_fold(spark):
 
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
     extra = spark.createDataFrame(
-        [(100001, [0.0] * 64)], "vec_id long, embedding array<float>"
+        [
+            (100001, [0.0] * 64),
+            (100002, None),  # NULL embedding
+            (100003, [1.0, 2.0]),  # shorter than the model's dim
+        ],
+        "vec_id long, embedding array<float>",
     )
     docs = emb.unionByName(extra)
     anchors = _anchor_set(64, 16, 7)
@@ -283,16 +292,18 @@ def test_stream_results_invariant_to_shuffle_partitions(spark, tmp_path):
 
 
 @pytest.mark.parametrize("op", ["ewma", "holt"])
-def test_bucketed_stream_state_equals_per_key(spark, tmp_path, op):
-    """optimization r17: stream_ewma/stream_holt(key_buckets=K) groups
-    state by pmod(xxhash64(key), K) and runs the per-key recurrence
-    inside the bucket — the output must be BIT-IDENTICAL to the
-    per-key form, including null keys (carried in the map-less slot)
-    and cross-batch state carry, at any bucket count."""
+def test_bucketed_stream_state_equals_per_key(spark, tmp_path, monkeypatch, op):
+    """stream_ewma/stream_holt group state by pmod(xxhash64(key), K)
+    and run the per-key recurrence inside the bucket: on rows that
+    arrive in order, the stream must be BIT-IDENTICAL to the batch
+    operator, including null keys (carried in the map-less slot) and
+    cross-batch state carry — at the shipped K and at K = 1, where
+    every key, null included, shares one bucket."""
     import json
     import os
 
-    from cdp_spark.streaming.analytics import stream_ewma, stream_holt
+    from cdp_spark.datapipe.analytics import ewma, holt
+    from cdp_spark.streaming import analytics as sa
 
     src = tmp_path / "src"
     src.mkdir(parents=True)
@@ -310,22 +321,21 @@ def test_bucketed_stream_state_equals_per_key(spark, tmp_path, op):
         p.write_text("\n".join(json.dumps(r) for r in rows) + "\n")
         mt[0] += 10
         os.utime(p, (mt[0], mt[0]))
+    schema = "event_id long, user_id long, value double"
 
-    def run(key_buckets, name):
+    def run(name):
         stream = (
-            spark.readStream.schema("event_id long, user_id long, value double")
+            spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .json(str(src))
         )
         if op == "ewma":
-            out = stream_ewma(
-                stream, "user_id", ["event_id"], "value", alpha=0.5,
-                key_buckets=key_buckets,
+            out = sa.stream_ewma(
+                stream, "user_id", ["event_id"], "value", alpha=0.5
             )
         else:
-            out = stream_holt(
-                stream, "user_id", ["event_id"], "value", alpha=0.5,
-                beta=0.5, key_buckets=key_buckets,
+            out = sa.stream_holt(
+                stream, "user_id", ["event_id"], "value", alpha=0.5, beta=0.5
             )
         q = (
             out.writeStream.format("memory")
@@ -338,7 +348,13 @@ def test_bucketed_stream_state_equals_per_key(spark, tmp_path, op):
         assert q.awaitTermination(240), q.status
         return sorted(map(tuple, spark.sql(f"SELECT * FROM {name}").collect()))
 
-    per_key = run(None, f"bk_{op}_ref")
-    assert len(per_key) == 120
-    for k in (1, 5):
-        assert run(k, f"bk_{op}_{k}") == per_key
+    rows = spark.read.schema(schema).json(str(src))
+    if op == "ewma":
+        batch = ewma(rows, "user_id", ["event_id"], "value", 0.5)
+    else:
+        batch = holt(rows, "user_id", ["event_id"], "value", 0.5, 0.5)
+    want = sorted(map(tuple, batch.collect()))
+    assert len(want) == 120
+    assert run(f"bk_{op}_default") == want
+    monkeypatch.setattr(sa, "STATE_BUCKETS", 1)
+    assert run(f"bk_{op}_1") == want

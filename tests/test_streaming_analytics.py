@@ -252,21 +252,26 @@ def test_stream_simhash_gate_flags_closest_partner(spark, tmp_path):
     assert rows[10]["hamming"] == 0
 
 
-@pytest.mark.parametrize("key_buckets", [None, 4])
+@pytest.mark.parametrize("state_buckets", [None, 4, 1])
 def test_stream_incremental_dedup_new_new_across_batches(
-    spark, tmp_path, key_buckets
+    spark, tmp_path, monkeypatch, state_buckets
 ):
     """The stateful path: a streamed doc duplicating an EARLIER
     streamed doc (in a previous micro-batch, no corpus partner) is
     flagged with the smaller streamed id; when both a corpus and a
     streamed partner match, the corpus partner wins (precedence
     (is_corpus, id), independent of arrival order).  Parametrized over
-    ``key_buckets`` (r17): the bucketed state path must emit the
-    identical result."""
+    the state-bucket count (None = the module default, 1 = every
+    (band, bucket) shares one state map): the result must not depend
+    on how (band, bucket) keys are grouped into state."""
+    from cdp_spark.streaming import analytics as sa
     from cdp_spark.streaming.analytics import (
         reduce_incremental_pairs,
         stream_incremental_near_dups,
     )
+
+    if state_buckets is not None:
+        monkeypatch.setattr(sa, "STATE_BUCKETS", state_buckets)
 
     basis = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     other = "red orange yellow green blue indigo violet umber ochre teal"
@@ -296,12 +301,10 @@ def test_stream_incremental_dedup_new_new_across_batches(
         .option("maxFilesPerTrigger", 1)
         .json(str(tmp_path / "src"))
     )
-    pair_stream = stream_incremental_near_dups(
-        stream, corpus, key_buckets=key_buckets
-    )
+    pair_stream = stream_incremental_near_dups(stream, corpus)
     query = (
         pair_stream.writeStream.format("memory")
-        .queryName(f"sid_test_{key_buckets or 0}")
+        .queryName(f"sid_test_{state_buckets or 0}")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
@@ -309,15 +312,15 @@ def test_stream_incremental_dedup_new_new_across_batches(
     )
     _await_done(query)
     out = reduce_incremental_pairs(
-        spark.sql(f"SELECT * FROM sid_test_{key_buckets or 0}"), threshold=0.5, id_col="doc_id"
+        spark.sql(f"SELECT * FROM sid_test_{state_buckets or 0}"), threshold=0.5, id_col="doc_id"
     )
     rows = {r["doc_id"]: r["dup_of"] for r in out.collect()}
     assert rows == {20: 1, 30: 22}
 
 
-@pytest.mark.parametrize("key_buckets", [None, 4])
+@pytest.mark.parametrize("state_buckets", [None, 4, 1])
 def test_stream_incremental_dedup_bucket_cap_bounds_state(
-    spark, tmp_path, key_buckets
+    spark, tmp_path, monkeypatch, state_buckets
 ):
     """ADVICE r8: with max_bucket_members=1 only the FIRST streamed
     member of each bucket is retained.  Three identical texts (so all
@@ -326,12 +329,17 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
     member 21, but the (23, 22) pair an uncapped run emits never
     appears — 22 was not retained anywhere.  Bounded state, the only
     loss is dropped members as future partners.  Parametrized over
-    ``key_buckets`` (r17): the cap is per LOGICAL (band, bucket) and
-    must bound state identically under bucketed grouping."""
+    the state-bucket count (None = the module default, 1 = one shared
+    state map): the cap is per LOGICAL (band, bucket) however the
+    (band, bucket) keys are grouped into state."""
+    from cdp_spark.streaming import analytics as sa
     from cdp_spark.streaming.analytics import (
         reduce_incremental_pairs,
         stream_incremental_near_dups,
     )
+
+    if state_buckets is not None:
+        monkeypatch.setattr(sa, "STATE_BUCKETS", state_buckets)
 
     fam = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     corpus = spark.createDataFrame(
@@ -348,11 +356,11 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
         .json(str(tmp_path / "src"))
     )
     pair_stream = stream_incremental_near_dups(
-        stream, corpus, max_bucket_members=1, key_buckets=key_buckets
+        stream, corpus, max_bucket_members=1
     )
     query = (
         pair_stream.writeStream.format("memory")
-        .queryName(f"sid_cap_test_{key_buckets or 0}")
+        .queryName(f"sid_cap_test_{state_buckets or 0}")
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
@@ -361,11 +369,11 @@ def test_stream_incremental_dedup_bucket_cap_bounds_state(
     _await_done(query)
     pairs = {
         (r["id"], r["partner"])
-        for r in spark.sql(f"SELECT * FROM sid_cap_test_{key_buckets or 0}").collect()
+        for r in spark.sql(f"SELECT * FROM sid_cap_test_{state_buckets or 0}").collect()
     }
     assert pairs == {(22, 21), (23, 21)}, pairs  # no (23, 22): 22 dropped
     out = reduce_incremental_pairs(
-        spark.sql(f"SELECT * FROM sid_cap_test_{key_buckets or 0}"), threshold=0.5,
+        spark.sql(f"SELECT * FROM sid_cap_test_{state_buckets or 0}"), threshold=0.5,
         id_col="doc_id",
     )
     rows = {r["doc_id"]: r["dup_of"] for r in out.collect()}
