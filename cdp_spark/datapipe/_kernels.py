@@ -110,9 +110,10 @@ def _on_rows_of_len(col: pd.Series, dim: int, kernel, fill):
 
 def centroid_argmin_fn(cents):
     """Batch kernel: embedding column -> squared-L2 argmin centroid id
-    (int64), ties to the LOWEST id — the exact twin of
-    ``array_position(dists, array_min(dists)) - 1`` over
-    ``_sq_dists_to``.  The accumulation is per-dimension SEQUENTIAL
+    (int64), ties to the LOWEST id — the exact twin of the Column
+    fold ``array_position(dists, array_min(dists)) - 1`` over the
+    squared-L2 distance array (tests/test_round17_kernels.py keeps that
+    fold as its oracle).  The accumulation is per-dimension SEQUENTIAL
     (``acc += (v_d - c_d)^2`` in dimension order), reproducing the
     Catalyst fold's left-to-right double summation bit-for-bit, so
     ulp-level distance ties resolve identically (guide §4.2; the

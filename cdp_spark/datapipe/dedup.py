@@ -189,53 +189,12 @@ def md5_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def shingle_hashes(col: Column, n: int = 3, hash_fn=default_hash64) -> Column:
-    """Shingle set hashed to non-negative longs."""
-    return F.transform(
-        shingles(col, n),
-        lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)),
-    )
-
-
 def _permutation_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for h_i(x) = (a*x + b) mod p."""
     import random
 
     rnd = random.Random(seed)
     return [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE)) for _ in range(num_perm)]
-
-
-def signature_from_shingles(
-    sh: Column, num_perm: int = 64, seed: int = 42, hash_fn=default_hash64
-) -> Column:
-    """MinHash signature from a precomputed shingle array — lets a
-    caller that also needs the shingles (e.g. the verify join) pay
-    the tokenize/shingle cost once.
-
-    This is the all-Column REFERENCE implementation (interpreted
-    higher-order fold — correct anywhere a Column composes, but
-    O(shingles x num_perm) interpreted steps per document).  The hot
-    operators attach signatures with :func:`attach_minhash_signature`
-    instead — one vectorized Arrow pass, bit-identical results
-    (tests/test_round16_kernels.py)."""
-    params = _permutation_params(num_perm, seed)
-    consts = F.array(
-        *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params]
-    )
-    init = F.array(*[F.lit(_MERSENNE).cast("long") for _ in range(num_perm)])
-    # pmod, not %: JVM % is sign-preserving while the numpy kernel's %
-    # is floor-mod, so a hash_fn that can return a negative long (the
-    # abs(Long.MIN_VALUE) corner of default_hash64, or a user fn) would
-    # make the two paths diverge (ADVICE r16).  With x in [0, p) the
-    # (a*x + b) % p fold below is already non-negative everywhere.
-    hashes = F.transform(sh, lambda s: F.pmod(hash_fn(s), F.lit(_MERSENNE)))
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, x: F.zip_with(
-            acc, consts, lambda m, c: F.least(m, (c["a"] * x + c["b"]) % F.lit(_MERSENNE))
-        ),
-    )
 
 
 def attach_minhash_signature(
@@ -265,19 +224,6 @@ def attach_minhash_signature(
         StructField(out, ArrayType(LongType())),
         minhash_sig_row_fn(num_perm, seed, _permutation_params),
     )
-
-
-def minhash_signature(
-    col: Column, num_perm: int = 64, n: int = 3, seed: int = 42, hash_fn=default_hash64
-) -> Column:
-    """MinHash signature: array<long> of length num_perm.
-
-    Single-pass construction: ONE aggregate over the shingle-hash
-    array updates all permutation minima together via zip_with —
-    the shingle pipeline is evaluated once per row, not once per
-    permutation (num_perm-fold re-evaluation would dominate at scale).
-    """
-    return signature_from_shingles(shingles(col, n), num_perm, seed, hash_fn)
 
 
 def lsh_band_keys(signature: Column, bands: int, rows: int, hash_fn=None) -> Column:
@@ -749,43 +695,6 @@ def incremental_near_dups(
     )
 
 
-_SIMHASH_MASKS = [1 << b for b in range(63)] + [-(1 << 63)]
-
-
-def simhash64(col: Column, hash_fn=None) -> Column:
-    """64-bit SimHash over whitespace tokens: for each bit, sum +1/-1
-    across token hashes, take the sign.
-
-    Single-pass: one aggregate over the token-hash array carries all
-    64 bit counters (zip_with against a constant mask array), then a
-    final fold ORs the positive-counter masks together.  Evaluating
-    the token pipeline per bit would be a 64x re-evaluation.
-
-    This is the all-Column REFERENCE implementation; the hot
-    operators attach fingerprints with :func:`attach_simhash` (one
-    vectorized Arrow pass, bit-identical —
-    tests/test_round16_kernels.py).
-
-    With ``hash_fn=md5_hash60`` the hash has only 60 useful bits (the
-    top 4 always vote -1 → 0) — accepted for cross-engine parity."""
-    tk = tokens(col)
-    token_hash = hash_fn if hash_fn is not None else F.xxhash64
-    hashes = F.transform(tk, lambda t: token_hash(t))
-    masks = F.array(*[F.lit(m).cast("long") for m in _SIMHASH_MASKS])
-    init = F.array(*[F.lit(0).cast("long") for _ in _SIMHASH_MASKS])
-    votes = F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda cnt, m: cnt + F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)),
-        ),
-    )
-    signed = F.zip_with(votes, masks, lambda cnt, m: F.when(cnt > 0, m).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(signed, F.lit(0).cast("long"), lambda acc, m: acc.bitwiseOR(m))
-
-
 def attach_simhash(
     df: DataFrame,
     carry: list[str],
@@ -793,11 +702,16 @@ def attach_simhash(
     hash_fn=None,
     out: str = "s",
 ) -> DataFrame:
-    """``df.select(*carry, simhash64(text_col) AS out)`` with the
-    64-wide vote fold in the vectorized Arrow kernel (ONE mapInPandas
-    pass over JVM-hashed tokens; _kernels.py explains why this is a
-    plan node rather than a scalar UDF expression).  Bit-identical to
-    :func:`simhash64` (tests/test_round16_kernels.py)."""
+    """``df.select(*carry, simhash(text_col) AS out)``: the 64-bit
+    SimHash over whitespace tokens (per bit, sum +1/-1 across token
+    hashes and take the sign), with the 64-wide vote fold in the
+    vectorized Arrow kernel (ONE mapInPandas pass over JVM-hashed
+    tokens; _kernels.py explains why this is a plan node rather than
+    a scalar UDF expression).  Bit-identical to the Column fold
+    tests/test_round16_kernels.py keeps as its oracle.
+
+    With ``hash_fn=md5_hash60`` the hash has only 60 useful bits (the
+    top 4 always vote -1 → 0) — accepted for cross-engine parity."""
     from pyspark.sql.types import LongType, StructField
 
     from ._kernels import attach_kernel_column, simhash_row_fn

@@ -111,6 +111,30 @@ def _survivors(
     )
 
 
+def _fold_survivors(
+    increment_docs: DataFrame,
+    flagged_ids: DataFrame,
+    path: str,
+    kind: str,
+    id_col: str,
+    epoch,
+    lineage,
+    stats,
+) -> None:
+    """The one survivor fold every dedup index runs: under
+    :func:`.fold_commit.fold_epoch`, drop the increment's flagged
+    documents and write each ``(stat, frame)`` that
+    ``stats(survivors, meta)`` returns as this fold's delta of
+    ``<path>/<stat>``, in order."""
+
+    def write(meta):
+        survivors = _survivors(increment_docs, flagged_ids, id_col)
+        for stat, frame in stats(survivors, meta):
+            fc.fold_write(frame, os.path.join(path, stat), epoch, lineage)
+
+    fc.fold_epoch(path, kind, epoch, lineage, write)
+
+
 def _hash_name(hash_fn) -> str:
     for name, fn in _HASH_FNS.items():
         if hash_fn is fn:
@@ -217,20 +241,17 @@ def minhash_index_fold(
     IDEMPOTENT under at-least-once replay; ``lineage`` tags one of
     several checkpoint lineages folding into ONE index (see
     :mod:`.fold_commit`)."""
-    meta = fc.read_meta(path, "minhash")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return
-    hash_fn = _HASH_FNS[meta["hash"]]
-    survivors = _survivors(increment_docs, flagged_ids, id_col)
-    fc.fold_write(
-        _signature_frame(
-            survivors, id_col, text_col, meta["num_perm"], meta["n"], hash_fn
-        ),
-        os.path.join(path, "sigs"),
-        epoch,
-        lineage,
+
+    def stats(survivors, meta):
+        return [("sigs", _signature_frame(
+            survivors, id_col, text_col, meta["num_perm"], meta["n"],
+            _HASH_FNS[meta["hash"]],
+        ))]
+
+    _fold_survivors(
+        increment_docs, flagged_ids, path, "minhash", id_col, epoch,
+        lineage, stats,
     )
-    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def minhash_banded_index(
@@ -449,18 +470,16 @@ def simhash_index_fold(
     flag-against-rebuilt-corpus; fingerprints are pure functions of
     (text, hash)), same O(increment) cost, same epoch/lineage
     idempotence under at-least-once replay."""
-    meta = fc.read_meta(path, "simhash")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return
-    hash_fn = _HASH_FNS[meta["hash"]]
-    survivors = _survivors(increment_docs, flagged_ids, id_col)
-    fc.fold_write(
-        _fingerprint_frame(survivors, id_col, text_col, hash_fn),
-        os.path.join(path, "fps"),
-        epoch,
-        lineage,
+
+    def stats(survivors, meta):
+        return [("fps", _fingerprint_frame(
+            survivors, id_col, text_col, _HASH_FNS[meta["hash"]]
+        ))]
+
+    _fold_survivors(
+        increment_docs, flagged_ids, path, "simhash", id_col, epoch,
+        lineage, stats,
     )
-    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def flag_against_simhash_index(
@@ -654,22 +673,21 @@ def substring_index_fold(
     ``epoch``: see :func:`minhash_index_fold` — committed epochs skip,
     half-written ones overwrite their own subdirectories (a crash
     between the fps and df writes replays both cleanly)."""
-    meta = fc.read_meta(path, "substring")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return
-    hash_fn = _HASH_FNS[meta["hash"]]
-    survivors = _survivors(increment_docs, flagged_ids, id_col)
-    fps = _doc_fingerprints(
-        survivors, id_col, text_col, meta["k"], meta["w"], hash_fn
+
+    def stats(survivors, meta):
+        fps = _doc_fingerprints(
+            survivors, id_col, text_col, meta["k"], meta["w"],
+            _HASH_FNS[meta["hash"]],
+        )
+        return [
+            ("fps", fps),
+            ("df", fps.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))),
+        ]
+
+    _fold_survivors(
+        increment_docs, flagged_ids, path, "substring", id_col, epoch,
+        lineage, stats,
     )
-    fc.fold_write(fps, os.path.join(path, "fps"), epoch, lineage)
-    fc.fold_write(
-        fps.groupBy("fp").agg(F.count(F.lit(1)).alias("c")),
-        os.path.join(path, "df"),
-        epoch,
-        lineage,
-    )
-    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 # ------------------------------------------------------------ exact n-gram
@@ -745,17 +763,14 @@ def exactngram_index_fold(
     over corpus ∪ survivors.  ``epoch``: see
     :func:`minhash_index_fold` — committed epochs skip, half-written
     ones overwrite their own subdirectory."""
-    meta = fc.read_meta(path, "exactngram")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return
-    survivors = _survivors(increment_docs, flagged_ids, id_col)
-    fc.fold_write(
-        _gram_counts(survivors, id_col, text_col, meta["k"]),
-        os.path.join(path, "df"),
-        epoch,
-        lineage,
+
+    def stats(survivors, meta):
+        return [("df", _gram_counts(survivors, id_col, text_col, meta["k"]))]
+
+    _fold_survivors(
+        increment_docs, flagged_ids, path, "exactngram", id_col, epoch,
+        lineage, stats,
     )
-    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def exactngram_seen_index(df: DataFrame) -> DataFrame:

@@ -23,7 +23,8 @@ Replay rule: a fold writes its epoch directory in overwrite mode and
 commits its lineage's watermark LAST, in one atomic JSON write; a fold
 whose epoch is at or below that watermark is skipped.  A half-written
 epoch therefore rewrites cleanly, and a committed one is never applied
-twice.
+twice.  :func:`fold_epoch` is that sequence; an index supplies only
+its write function.
 
 Lineages: epoch ids are monotone only within one checkpoint.  When
 several streams (or a re-created checkpoint) fold into ONE index, each
@@ -207,6 +208,21 @@ def commit_epoch(path: str, meta: dict, epoch, lineage=None) -> None:
         write_json_atomic(
             _watermark_path(path, lineage), {_WATERMARK_KEY: int(epoch)}
         )
+
+
+def fold_epoch(path: str, kind: str, epoch, lineage, write):
+    """Run one fold in the replay-safe order: read the ``kind`` meta,
+    skip an epoch the lineage already committed (returns None), run
+    ``write(meta)`` — every data and sidecar write of the fold — and
+    commit the watermark LAST.  Returns what ``write`` returned.
+    :func:`already_committed` and :func:`commit_epoch` are looked up
+    at call time, so a test can patch either."""
+    meta = read_meta(path, kind)
+    if already_committed(path, meta, epoch, lineage):
+        return None
+    out = write(meta)
+    commit_epoch(path, meta, epoch, lineage)
+    return out
 
 
 def watermarks(path: str) -> dict:

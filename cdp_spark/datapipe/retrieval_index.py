@@ -137,13 +137,15 @@ def bm25_index_fold(
     stat writes rewrites them cleanly); ``lineage`` tags one of several
     ingest streams folding into ONE index (see :mod:`.fold_commit`).
     Without the epoch key, a replayed batch double-counts tf/df/N."""
-    meta = fc.read_meta(path, "bm25")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return
-    _write_or_fold(
-        increment_docs, path, id_col, text_col, "append", epoch, lineage
+    fc.fold_epoch(
+        path,
+        "bm25",
+        epoch,
+        lineage,
+        lambda meta: _write_or_fold(
+            increment_docs, path, id_col, text_col, "append", epoch, lineage
+        ),
     )
-    fc.commit_epoch(path, meta, epoch, lineage)
 
 
 def bm25_index_topk(

@@ -123,8 +123,9 @@ def _round_half_up(a, digits: int):
     HALF_UP on the value's SHORTEST DECIMAL representation
     (``BigDecimal.valueOf`` goes through ``Double.toString``), not on
     the exact binary value and not numpy's half-to-even — so the
-    vectorized scorer and the pure-Column fallback agree bit-for-bit
-    at ``digits`` even on .5-boundary values (ADVICE r10).
+    vectorized scorer agrees bit-for-bit with ``F.round`` over the
+    Column ``cosine`` at ``digits`` even on .5-boundary values
+    (ADVICE r10).
 
     Fast path: ``floor(|x|*s + 0.5)`` — HALF_UP on the binary value,
     which equals HALF_UP-on-shortest-decimal everywhere except when
@@ -157,7 +158,6 @@ def hard_negatives(
     k: int = 5,
     max_sim: float = 0.95,
     round_digits: int = 4,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Hard-negative mining for contrastive / embedding training
     (e.g. DPR, Karpukhin et al. 2020): for every anchor vector, the
@@ -168,93 +168,77 @@ def hard_negatives(
 
     Scale shape: the anchor set is a bounded QUERY BATCH by contract
     (collected driver-side like the k-means model state), so scoring
-    is one map over the corpus — no corpus shuffle.  The default
-    vectorized path computes all anchor similarities per Arrow batch
-    as ONE numpy matmul ((rows, dim) x (dim, anchors) — the multiband
-    precedent: Catalyst's interpreted higher-order lambdas are ~100x
-    slower at this width) and emits only the per-batch top-k per
-    anchor, so the final exchange carries k rows per anchor per
-    batch.  ``vectorized=False`` keeps the pure-Column
-    BroadcastNestedLoopJoin form (same results; the JVM fold and the
-    numpy matmul agree at ``round_digits``).  For web-scale corpora
+    is one map over the corpus — no corpus shuffle.  All anchor
+    similarities of an Arrow batch are ONE numpy matmul ((rows, dim) x
+    (dim, anchors) — the multiband precedent: Catalyst's interpreted
+    higher-order lambdas are ~100x slower at this width), rounded the
+    way ``F.round`` rounds (:func:`_round_half_up`), and only the
+    per-batch top-k per anchor is emitted, so the final exchange
+    carries k rows per anchor per batch.  For web-scale corpora
     compose with the IVF index to prune candidate cells first.
 
     Output: (anchor_id, id, cosine_sim) — ``k`` rows per anchor,
     ties broken by id.
     """
-    from pyspark.sql import Window
+    import numpy as np
 
+    # the output schema follows the corpus id type, also for the
+    # empty-anchor early return (ADVICE r10)
+    id_type = dict(df.dtypes)[id_col]
+    out_schema = f"anchor_id {id_type}, {id_col} {id_type}, cosine_sim double"
+    a_rows = anchors.select(id_col, vec_col).collect()
+    if not a_rows:
+        return df.sparkSession.createDataFrame([], out_schema)
+    aids = np.array([r[0] for r in a_rows])
+    amat = np.array([list(r[1]) for r in a_rows], dtype=np.float64)
+    anorm = np.linalg.norm(amat, axis=1)
+    # zero-norm anchors score 0 everywhere (cosine()'s convention)
+    safe = np.where(anorm > 0, anorm, 1.0)
+    amat_n = amat / safe[:, None]
+    kk, cut = int(k), float(max_sim)
+
+    def score(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy()
+            x = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
+            xnorm = np.linalg.norm(x, axis=1)
+            xsafe = np.where(xnorm > 0, xnorm, 1.0)
+            sims = (x / xsafe[:, None]) @ amat_n.T  # (rows, anchors)
+            sims[xnorm == 0, :] = 0.0
+            sims[:, anorm == 0] = 0.0
+            sims = _round_half_up(sims, round_digits)
+            frames = []
+            for j, aid in enumerate(aids):
+                col = sims[:, j]
+                keep = (col < cut) & (ids != aid)
+                if not keep.any():
+                    continue
+                cids, csims = ids[keep], col[keep]
+                if len(cids) > kk:
+                    # per-batch partial top-k (ties on id handled
+                    # by the exact global window afterwards; take
+                    # a small safety margin so id-ties at the
+                    # boundary value are never cut early)
+                    order = np.lexsort((cids, -csims))[: kk + 8]
+                    cids, csims = cids[order], csims[order]
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "anchor_id": aid,
+                            id_col: cids,
+                            "cosine_sim": csims,
+                        }
+                    )
+                )
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    scored = df.select(id_col, vec_col).mapInPandas(score, out_schema)
     w = Window.partitionBy("anchor_id").orderBy(
         F.col("cosine_sim").desc(), F.col(id_col)
     )
-    if vectorized:
-        import numpy as np
-
-        # derive the output schema from the corpus id type BEFORE the
-        # empty-anchor early return, so both paths type identically
-        # for non-long id columns (ADVICE r10)
-        id_type = dict(df.dtypes)[id_col]
-        out_schema = f"anchor_id {id_type}, {id_col} {id_type}, cosine_sim double"
-        a_rows = anchors.select(id_col, vec_col).collect()
-        if not a_rows:
-            return df.sparkSession.createDataFrame([], out_schema)
-        aids = np.array([r[0] for r in a_rows])
-        amat = np.array([list(r[1]) for r in a_rows], dtype=np.float64)
-        anorm = np.linalg.norm(amat, axis=1)
-        # zero-norm anchors score 0 everywhere (cosine()'s convention)
-        safe = np.where(anorm > 0, anorm, 1.0)
-        amat_n = amat / safe[:, None]
-        kk, cut = int(k), float(max_sim)
-
-        def score(batches):
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                ids = pdf[id_col].to_numpy()
-                x = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-                xnorm = np.linalg.norm(x, axis=1)
-                xsafe = np.where(xnorm > 0, xnorm, 1.0)
-                sims = (x / xsafe[:, None]) @ amat_n.T  # (rows, anchors)
-                sims[xnorm == 0, :] = 0.0
-                sims[:, anorm == 0] = 0.0
-                sims = _round_half_up(sims, round_digits)
-                frames = []
-                for j, aid in enumerate(aids):
-                    col = sims[:, j]
-                    keep = (col < cut) & (ids != aid)
-                    if not keep.any():
-                        continue
-                    cids, csims = ids[keep], col[keep]
-                    if len(cids) > kk:
-                        # per-batch partial top-k (ties on id handled
-                        # by the exact global window afterwards; take
-                        # a small safety margin so id-ties at the
-                        # boundary value are never cut early)
-                        order = np.lexsort((cids, -csims))[: kk + 8]
-                        cids, csims = cids[order], csims[order]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "anchor_id": aid,
-                                id_col: cids,
-                                "cosine_sim": csims,
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        scored = df.select(id_col, vec_col).mapInPandas(score, out_schema)
-    else:
-        a = anchors.select(
-            F.col(id_col).alias("anchor_id"), F.col(vec_col).alias("_avec")
-        )
-        sim = F.round(cosine(F.col(vec_col), F.col("_avec")), round_digits)
-        scored = (
-            df.join(F.broadcast(a), F.col(id_col) != F.col("anchor_id"))
-            .select(F.col("anchor_id"), F.col(id_col), sim.alias("cosine_sim"))
-            .filter(F.col("cosine_sim") < float(max_sim))
-        )
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= int(k))
@@ -753,25 +737,6 @@ def ivf_knn_join(
     )
 
 
-def _sq_dists_to(vec_col: Column, cents: list[list[float]]) -> Column:
-    """Array of squared-L2 distances from a vector column to each
-    centroid literal — pure codegen expression, no shuffle."""
-    return F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    vec_col,
-                    F.array(*[F.lit(float(x)) for x in c]),
-                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for c in cents
-        ]
-    )
-
-
 def kmeans_fit(
     df: DataFrame,
     dim: int,
@@ -787,12 +752,11 @@ def kmeans_fit(
     training seam (the IVF-from-kmeans query builds its index lists
     from it)."""
     # Assignment via the vectorized Arrow argmin kernel (optimization
-    # r17, guide §4.2): the Column form —
-    # (array_position(dists, array_min(dists)) - 1) over _sq_dists_to —
+    # r17, guide §4.2): a Column argmin over k squared distances
     # evaluates k x dim x 2 INTERPRETED higher-order lambda steps per
-    # row; the kernel reproduces its per-dimension sequential double
-    # summation and first-minimum tie-break bit-for-bit
-    # (tests/test_round17_kernels.py).
+    # row; the kernel sums each distance per dimension in sequence and
+    # breaks ties to the first minimum, bit-for-bit the Column fold
+    # that tests/test_round17_kernels.py keeps as its oracle.
     def _assign(cents_now):
         from pyspark.sql.types import LongType, StructField
 
@@ -1002,9 +966,10 @@ def embedding_outliers(
     encoder glitches, and genuinely novel content surface here (the
     complement of SemDeDup, which looks at the closest pairs).
 
-    Scale shape: the distance is the same codegen argmin array the
-    assignment already evaluates (:func:`kmeans_fit`); per-cluster
-    top-k is a window rank whose limit Spark pushes map-side
+    Scale shape: one codegen squared-L2 fold per row, to the assigned
+    centroid only (summed in the order :func:`kmeans_fit`'s argmin
+    kernel sums, so the distance is the one the assignment ranked);
+    per-cluster top-k is a window rank whose limit Spark pushes map-side
     (WindowGroupLimit), so the shuffle carries ~top_k rows per
     partition per cluster.  Deterministic: fixed-iteration seeded
     training, rounded L2 distance, ties broken by id.
@@ -1012,14 +977,25 @@ def embedding_outliers(
     Output: (id, cid, dist) — one row per retained outlier.
     """
     cents, assigned = prefit or kmeans_fit(df, dim, id_col, vec_col, k, iters, seed)
-    dists = _sq_dists_to(F.col("_v"), cents)
+    # squared L2 to the ASSIGNED centroid only, summed per dimension in
+    # sequence (the order the argmin kernel sums in)
+    cent = F.element_at(
+        F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents]),
+        F.col("cid").cast("int") + 1,
+    )
+    sq = F.aggregate(
+        F.zip_with(
+            F.col("_v"),
+            cent,
+            lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
     d = assigned.select(
         F.col(id_col),
         F.col("cid").cast("long").alias("cid"),
-        F.round(
-            F.sqrt(F.element_at(dists, F.col("cid").cast("int") + 1)),
-            round_digits,
-        ).alias("dist"),
+        F.round(F.sqrt(sq), round_digits).alias("dist"),
     )
     w = Window.partitionBy("cid").orderBy(F.col("dist").desc(), F.col(id_col))
     return (
@@ -1834,9 +1810,8 @@ def _ivf_meta_assign(df: DataFrame, meta: dict) -> DataFrame:
 
     from ._kernels import attach_kernel_column_batch, centroid_argmin_fn
 
-    # vectorized argmin kernel (optimization r17) — exact twin of
-    # (array_position(dists, array_min(dists)) - 1) over _sq_dists_to,
-    # see kmeans_fit._assign
+    # vectorized argmin kernel (optimization r17), the one kmeans_fit
+    # assigns with
     return attach_kernel_column_batch(
         df,
         list(df.columns),
@@ -1846,13 +1821,16 @@ def _ivf_meta_assign(df: DataFrame, meta: dict) -> DataFrame:
     )
 
 
+# per-fold _foldcounts sidecars an epoch fold tolerates before it
+# merges them into _foldcounts_compact.json
+FOLDCOUNTS_COMPACT_EVERY = 32
+
+
 def ivf_index_fold(
     increment: DataFrame,
     path: str,
     epoch: int | None = None,
     lineage: str | None = None,
-    return_counts: bool = False,
-    compact_every: int | None = 32,
 ) -> dict[int, int] | None:
     """FOLD an embedding increment into the persisted IVF index:
     assign against the meta-pinned model (trained centroids or the
@@ -1861,11 +1839,10 @@ def ivf_index_fold(
     half-written ones overwrite their own fold directory (see
     :mod:`.fold_commit`).
 
-    ``return_counts=True`` additionally returns the increment's rows
-    per centroid (the occupancy delta the refit policy accumulates —
-    n_centroids small ints, model-state-sized) or None when the epoch
-    was skipped as already committed, so a replay never double-counts
-    occupancy.
+    Returns the increment's rows per centroid (the occupancy delta the
+    refit policy accumulates — n_centroids small ints,
+    model-state-sized), or None when the epoch was skipped as already
+    committed, so a replay never double-counts occupancy.
 
     Every EPOCH fold also persists its per-centroid counts in a
     ``_foldcounts.<fold>.json`` sidecar written atomically BEFORE the
@@ -1880,46 +1857,49 @@ def ivf_index_fold(
     other's part files as its own and race the sidecar
     read-modify-write, so a second appender fails loudly instead.
 
-    Every ``compact_every`` epoch folds the sidecars are merged into
-    the single ``_foldcounts_compact.json`` (:func:`compact_foldcounts`)
-    so a never-refitted deployment's occupancy derivation reads O(1)
-    files, not O(#folds); ``compact_every=None`` disables the
-    automatic compaction."""
-    meta = fc.read_meta(path, "ivf")
-    if fc.already_committed(path, meta, epoch, lineage):
-        return None
-    assigned = _ivf_meta_assign(
-        increment.select(meta["id_col"], meta["vec_col"]), meta
-    )
-    fc.migrate_to_fold_layout(path)
-    # Per-centroid counts come from the PARQUET FOOTERS of the files
-    # this fold just wrote: the write already materialized every row,
-    # so the file metadata states the counts without a second job.
-    if epoch is None:
-        fold_dir = os.path.join(path, fc.fold_dir_name(fc.BASE))
-        with fc.exclusive_lock(
-            os.path.join(path, "_append.lock"),
-            "concurrent epoch-less appends would count each other's "
-            "part files into their occupancy deltas",
-        ):
-            # append mode: count only the part files NEW in this write
-            # (part file names are unique per task attempt)
-            before = _fold_part_files(fold_dir)
-            assigned.write.mode("append").partitionBy("centroid").parquet(
-                fold_dir
-            )
-            counts = _fold_footer_counts(
-                fold_dir, only=_fold_part_files(fold_dir) - before
-            )
-            _bump_base_foldcounts(path, counts)
-        return counts if return_counts else None
-    name = fc.fold_name(epoch, lineage)
-    fold_dir = os.path.join(path, fc.fold_dir_name(name))
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(fold_dir)
-    counts = _fold_footer_counts(fold_dir)
-    _write_foldcounts(path, name, counts)
-    fc.commit_epoch(path, meta, epoch, lineage)
-    if compact_every is not None:
+    Every :data:`FOLDCOUNTS_COMPACT_EVERY` epoch folds the sidecars are
+    merged into the single ``_foldcounts_compact.json``
+    (:func:`compact_foldcounts`) so a never-refitted deployment's
+    occupancy derivation reads O(1) files, not O(#folds)."""
+
+    def write(meta):
+        assigned = _ivf_meta_assign(
+            increment.select(meta["id_col"], meta["vec_col"]), meta
+        )
+        fc.migrate_to_fold_layout(path)
+        # Per-centroid counts come from the PARQUET FOOTERS of the
+        # files this fold just wrote: the write already materialized
+        # every row, so the file metadata states the counts without a
+        # second job.
+        if epoch is None:
+            fold_dir = os.path.join(path, fc.fold_dir_name(fc.BASE))
+            with fc.exclusive_lock(
+                os.path.join(path, "_append.lock"),
+                "concurrent epoch-less appends would count each other's "
+                "part files into their occupancy deltas",
+            ):
+                # append mode: count only the part files NEW in this
+                # write (part file names are unique per task attempt)
+                before = _fold_part_files(fold_dir)
+                assigned.write.mode("append").partitionBy(
+                    "centroid"
+                ).parquet(fold_dir)
+                counts = _fold_footer_counts(
+                    fold_dir, only=_fold_part_files(fold_dir) - before
+                )
+                _bump_base_foldcounts(path, counts)
+            return counts
+        name = fc.fold_name(epoch, lineage)
+        fold_dir = os.path.join(path, fc.fold_dir_name(name))
+        assigned.write.mode("overwrite").partitionBy("centroid").parquet(
+            fold_dir
+        )
+        counts = _fold_footer_counts(fold_dir)
+        _write_foldcounts(path, name, counts)
+        return counts
+
+    counts = fc.fold_epoch(path, "ivf", epoch, lineage, write)
+    if counts is not None and epoch is not None:
         n_sidecars = sum(
             1
             for e in os.listdir(path)
@@ -1927,9 +1907,9 @@ def ivf_index_fold(
             and e.endswith(".json")
             and e != "_foldcounts.base.json"
         )
-        if n_sidecars >= int(compact_every):
+        if n_sidecars >= FOLDCOUNTS_COMPACT_EVERY:
             compact_foldcounts(path)
-    return counts if return_counts else None
+    return counts
 
 
 def _fold_part_files(fold_dir: str) -> set[str]:
@@ -1955,7 +1935,12 @@ def _fold_footer_counts(
     directory, summed from the parquet FOOTERS — exact file-level
     metadata, no Spark job.  ``only`` restricts the sum to the given
     relative paths (the append-mode delta); centroids with zero
-    counted rows are omitted."""
+    counted rows are omitted.
+
+    ``fold_dir`` must be a LOCAL (POSIX) path: the listing goes
+    through ``os`` and the footers are read by pyarrow from the local
+    file system, like every fold, watermark, lock and count sidecar of
+    :mod:`.fold_commit`.  Object-store indexes are not supported."""
     import pyarrow.parquet as _pq
 
     counts: dict[int, int] = {}
@@ -2039,10 +2024,10 @@ def compact_foldcounts(path: str) -> bool:
     ``_foldcounts_compact.json`` and delete the merged sidecars, so a
     never-refitted deployment's policy check reads O(1) files instead
     of O(#folds).  :func:`ivf_index_fold` calls this automatically
-    every ``compact_every`` epoch folds; safe to run manually any
-    time.  A fold directory without a sidecar is still in progress
-    (every epoch fold writes its sidecar before its watermark) and is
-    left for a later compaction.
+    every :data:`FOLDCOUNTS_COMPACT_EVERY` epoch folds; safe to run
+    manually any time.  A fold directory without a sidecar is still in
+    progress (every epoch fold writes its sidecar before its
+    watermark) and is left for a later compaction.
 
     Crash-safe by construction: the compact file lists the covered
     fold names, and the derivation skips covered folds even when
@@ -2393,20 +2378,13 @@ def ivf_serving_fold(
     root: str,
     epoch: int | None = None,
     lineage: str | None = None,
-    return_counts: bool = False,
-    compact_every: int | None = 32,
 ) -> dict[int, int] | None:
     """Fold an increment into the SERVED generation — assignment
     follows the generation's pinned model (anchors before the first
     re-fit, trained centroids after), everything else is
     :func:`ivf_index_fold`."""
     return ivf_index_fold(
-        increment,
-        ivf_serving_path(root),
-        epoch=epoch,
-        lineage=lineage,
-        return_counts=return_counts,
-        compact_every=compact_every,
+        increment, ivf_serving_path(root), epoch=epoch, lineage=lineage
     )
 
 

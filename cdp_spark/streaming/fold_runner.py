@@ -377,8 +377,7 @@ def ivf_serving_policy_step(
     if not batch_df.take(1):
         return
     delta = si.ivf_serving_fold(
-        batch_df, root, epoch=epoch_id, lineage=lineage,
-        return_counts=True,
+        batch_df, root, epoch=epoch_id, lineage=lineage
     )
     if delta is None:  # replayed committed epoch — already counted
         return

@@ -93,8 +93,7 @@ def test_committed_epochs_skip_replay_across_the_swap(spark, tmp_path):
     gen = sim.ivf_serving_path(root)
     n_before = spark.read.parquet(gen).count()
     # replay of the pre-refit epoch: watermark carried -> no-op
-    assert sim.ivf_serving_fold(b0, root, epoch=0, lineage="s1",
-                                return_counts=True) is None
+    assert sim.ivf_serving_fold(b0, root, epoch=0, lineage="s1") is None
     assert spark.read.parquet(gen).count() == n_before
 
 
@@ -196,18 +195,73 @@ def test_occupancy_derivation_survives_fold_crash_and_replay(
     assert occ["total"] == spark.read.parquet(gen).count()
 
     # replay commits epoch 1 idempotently: derived occupancy == truth
-    delta = sim.ivf_serving_fold(
-        b1, root, epoch=1, lineage="s1", return_counts=True
-    )
+    delta = sim.ivf_serving_fold(b1, root, epoch=1, lineage="s1")
     assert delta is not None
     occ = sim.ivf_index_occupancy(gen)
     assert occ["total"] == emb.count()
     assert occ["total"] - occ["base_total"] == emb.count()
     # and a second replay of the committed epoch changes nothing
-    assert sim.ivf_serving_fold(
-        b1, root, epoch=1, lineage="s1", return_counts=True
-    ) is None
+    assert sim.ivf_serving_fold(b1, root, epoch=1, lineage="s1") is None
     assert sim.ivf_index_occupancy(gen)["total"] == emb.count()
+
+
+def test_fold_crash_before_sidecar_is_served_but_not_counted(
+    spark, tmp_path, monkeypatch
+):
+    """An epoch fold writes data, then its _foldcounts sidecar, then
+    its watermark.  A crash between the data and the sidecar leaves
+    rows that queries serve but occupancy does not count, with the
+    watermark still at the previous epoch; the replay counts them
+    exactly once."""
+    import numpy as np
+
+    vecs = np.random.default_rng(5).standard_normal((40, 4)).round(3)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    b0 = emb.where(F.col("vec_id") < 20)
+    b1 = emb.where(F.col("vec_id") >= 20)
+    path = str(tmp_path / "ivf")
+    sim.ivf_index_init(path, dim=4, n_centroids=4, seed=7)
+    sim.ivf_index_fold(b0, path, epoch=0)
+
+    def _boom(path, fold_name, counts):
+        raise RuntimeError("injected crash before the sidecar write")
+
+    real_sidecar = sim._write_foldcounts
+    monkeypatch.setattr(sim, "_write_foldcounts", _boom)
+    try:
+        sim.ivf_index_fold(b1, path, epoch=1)
+    except RuntimeError:
+        pass
+    monkeypatch.setattr(sim, "_write_foldcounts", real_sidecar)
+
+    def served_ids():
+        return {
+            r.vec_id
+            for r in sim.ivf_index_topk(
+                spark, path, [1.0, 0.0, 0.0, 0.0], k=40, n_probe=4
+            ).collect()
+        }
+
+    assert served_ids() == set(range(40))
+    assert sim.ivf_index_occupancy(path)["total"] == 20
+    assert fc.watermarks(path) == {None: 0}
+
+    assert sim.ivf_index_fold(b1, path, epoch=1) is not None
+    assert fc.watermarks(path) == {None: 1}
+    occ = sim.ivf_index_occupancy(path)
+    assert occ["total"] == 40
+    actual = {
+        int(r["centroid"]): int(r["n"])
+        for r in spark.read.parquet(path)
+        .groupBy("centroid")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert occ["counts"] == actual
+    assert served_ids() == set(range(40))
 
 
 def test_refit_lock_excludes_concurrent_refit(spark, tmp_path):
@@ -263,9 +317,7 @@ def test_refit_retries_when_a_fold_commits_mid_rebuild(
     assert spark.read.parquet(gen).count() == emb.count()
     # the racer's watermark carried AND its vectors are present, so
     # its replay skips without loss
-    assert sim.ivf_serving_fold(
-        racer, root, epoch=0, lineage="b", return_counts=True
-    ) is None
+    assert sim.ivf_serving_fold(racer, root, epoch=0, lineage="b") is None
     qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
@@ -307,9 +359,9 @@ def test_post_check_fold_watermark_not_carried(spark, tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(gen, "_watermark.b.json"))
     # so its epoch REPLAYS into the new generation (not skipped) and
     # nothing is lost
-    assert sim.ivf_serving_fold(
-        racer, root, epoch=0, lineage="b", return_counts=True
-    ) is not None
+    assert (
+        sim.ivf_serving_fold(racer, root, epoch=0, lineage="b") is not None
+    )
     assert spark.read.parquet(gen).count() == emb.count()
     qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
     assert _rows(
@@ -353,8 +405,7 @@ def test_retry_carries_default_lineage_meta_watermark_fresh(
     # replay of the racer's epoch skips — its vectors are already in
     # the rebuild and its watermark carried fresh
     n_before = spark.read.parquet(gen).count()
-    assert sim.ivf_serving_fold(racer, root, epoch=5,
-                                return_counts=True) is None
+    assert sim.ivf_serving_fold(racer, root, epoch=5) is None
     assert spark.read.parquet(gen).count() == n_before == emb.count()
 
 
@@ -582,18 +633,20 @@ def test_stale_lock_break_verifies_identity_after_rename(
     assert not os.path.isfile(sim._foldcounts_path(path, "s-e0"))
 
 
-def test_fold_auto_compaction_in_the_real_lifecycle(spark, tmp_path):
+def test_fold_auto_compaction_in_the_real_lifecycle(
+    spark, tmp_path, monkeypatch
+):
     """The automatic every-Nth-fold trigger, end to end on real data:
-    folds past compact_every leave at most compact_every-1 sidecars,
-    occupancy stays exact vs the data's actual layout, and queries
-    over the compacted index are unchanged."""
+    folds past FOLDCOUNTS_COMPACT_EVERY leave at most that many minus
+    one sidecars, occupancy stays exact vs the data's actual layout,
+    and queries over the compacted index are unchanged."""
+    monkeypatch.setattr(sim, "FOLDCOUNTS_COMPACT_EVERY", 4)
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
     sim.ivf_index_init(path, dim=64, n_centroids=8, seed=7)
     for i in range(6):
         sim.ivf_index_fold(
-            emb.where(F.col("vec_id") % 6 == i), path,
-            epoch=i, lineage="s", compact_every=4,
+            emb.where(F.col("vec_id") % 6 == i), path, epoch=i, lineage="s"
         )
     sidecars = [
         e for e in os.listdir(path)

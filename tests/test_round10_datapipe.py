@@ -384,12 +384,28 @@ def test_hard_negatives_vectorized_equals_column_path(spark):
     fast = sorted(
         map(tuple, hard_negatives(df, anchors, k=6, max_sim=0.9).collect())
     )
+    # oracle: the pure-Column broadcast join over the same rounding
+    from pyspark.sql import Window
+
+    from cdp_spark.datapipe.similarity import cosine
+
+    a = anchors.select(
+        F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("_avec")
+    )
+    sim = F.round(cosine(F.col("embedding"), F.col("_avec")), 4)
+    w = Window.partitionBy("anchor_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("vec_id")
+    )
     slow = sorted(
         map(
             tuple,
-            hard_negatives(
-                df, anchors, k=6, max_sim=0.9, vectorized=False
-            ).collect(),
+            df.join(F.broadcast(a), F.col("vec_id") != F.col("anchor_id"))
+            .select("anchor_id", "vec_id", sim.alias("cosine_sim"))
+            .filter(F.col("cosine_sim") < 0.9)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= 6)
+            .drop("_rn")
+            .collect(),
         )
     )
     assert fast == slow

@@ -127,8 +127,7 @@ def test_hard_negatives_scores_in_one_vectorized_map(spark):
     Arrow-batched numpy matmul map over the corpus — no join of the
     corpus at all — and rank the per-anchor top-k as WindowGroupLimit,
     so the only exchange carries at most ~k rows per anchor per
-    batch.  The pure-Column fallback keeps the broadcast join shape
-    (the corpus still never shuffles for scoring)."""
+    batch."""
     from cdp_spark.datapipe.similarity import hard_negatives
 
     emb = load_table(spark, SF, "embeddings")
@@ -137,13 +136,6 @@ def test_hard_negatives_scores_in_one_vectorized_map(spark):
     assert "MapInPandas" in plan, plan[:3000]
     assert "WindowGroupLimit" in plan, plan[:3000]
     assert "Join" not in plan, plan[:3000]
-
-    fallback = _executed(
-        hard_negatives(emb, anchors, k=5, max_sim=0.95, vectorized=False)
-    )
-    assert "BroadcastNestedLoopJoin" in fallback, fallback[:3000]
-    assert "WindowGroupLimit" in fallback, fallback[:3000]
-    assert "SortMergeJoin" not in fallback
 
 
 def test_temperature_mix_broadcasts_weights(spark):

@@ -83,9 +83,8 @@ def test_simhash_combo_equals_bruteforce(spark):
     got = sorted(tuple(r) for r in out.collect())
 
     filtered = docs.filter(F.length(F.trim("text")) > 0)
-    sh = filtered.select(
-        "doc_id",
-        ddp.simhash64(F.col("text"), hash_fn=ddp.md5_hash60).alias("s"),
+    sh = ddp.attach_simhash(
+        filtered, ["doc_id"], "text", hash_fn=ddp.md5_hash60, out="s"
     )
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))

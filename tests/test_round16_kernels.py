@@ -1,8 +1,8 @@
 """Optimization r16: the vectorized Arrow kernels (minhash signature,
 simhash fingerprint — attach_minhash_signature / attach_simhash, one
 mapInPandas pass) must be BIT-IDENTICAL to the Catalyst
-higher-order-function reference folds (signature_from_shingles /
-simhash64, still shipped as the composable Column API) — same int64
+higher-order-function folds they replaced (kept here as the oracles
+``_legacy_signature_from_shingles`` / ``_legacy_simhash64``) — same int64
 arithmetic, same null/empty semantics, same element order.  Each test
 runs both on real corpus text plus adversarial edge rows and asserts
 exact equality; a further test pins the ewma/holt mapInPandas rewrite
@@ -41,12 +41,20 @@ def _docs(spark):
 
 
 def _legacy_signature_from_shingles(sh, num_perm, seed, hash_fn):
+    """MinHash signature of a shingle array as one Catalyst fold: ONE
+    aggregate over the shingle-hash array updates all permutation
+    minima together via zip_with."""
     params = ddp._permutation_params(num_perm, seed)
     consts = F.array(
         *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params]
     )
     init = F.array(*[F.lit(ddp._MERSENNE).cast("long") for _ in range(num_perm)])
-    hashes = F.transform(sh, lambda s: hash_fn(s) % F.lit(ddp._MERSENNE))
+    # pmod, not %: JVM % is sign-preserving while the numpy kernel's %
+    # is floor-mod, so a hash_fn that can return a negative long (the
+    # abs(Long.MIN_VALUE) corner of default_hash64, or a user fn) would
+    # make the two paths diverge (ADVICE r16).  With x in [0, p) the
+    # (a*x + b) % p fold below is already non-negative everywhere.
+    hashes = F.transform(sh, lambda s: F.pmod(hash_fn(s), F.lit(ddp._MERSENNE)))
     return F.aggregate(
         hashes,
         init,
@@ -58,12 +66,19 @@ def _legacy_signature_from_shingles(sh, num_perm, seed, hash_fn):
     )
 
 
+_SIMHASH_MASKS = [1 << b for b in range(63)] + [-(1 << 63)]
+
+
 def _legacy_simhash64(col, hash_fn):
+    """64-bit SimHash as one Catalyst fold: one aggregate over the
+    token-hash array carries all 64 bit counters (zip_with against a
+    constant mask array), then a final fold ORs the positive-counter
+    masks together."""
     tk = ddp.tokens(col)
     token_hash = hash_fn if hash_fn is not None else F.xxhash64
     hashes = F.transform(tk, lambda t: token_hash(t))
-    masks = F.array(*[F.lit(m).cast("long") for m in ddp._SIMHASH_MASKS])
-    init = F.array(*[F.lit(0).cast("long") for _ in ddp._SIMHASH_MASKS])
+    masks = F.array(*[F.lit(m).cast("long") for m in _SIMHASH_MASKS])
+    init = F.array(*[F.lit(0).cast("long") for _ in _SIMHASH_MASKS])
     votes = F.aggregate(
         hashes,
         init,

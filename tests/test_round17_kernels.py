@@ -69,9 +69,26 @@ def test_winnow_kernel_explode_join_shape_runs(spark):
     assert pairs.count() > 0
 
 
-def _legacy_sq_argmin(vec_col, cents):
-    from cdp_spark.datapipe.similarity import _sq_dists_to
+def _sq_dists_to(vec_col, cents):
+    """Array of squared-L2 distances from a vector column to each
+    centroid literal, each summed per dimension in sequence."""
+    return F.array(
+        *[
+            F.aggregate(
+                F.zip_with(
+                    vec_col,
+                    F.array(*[F.lit(float(x)) for x in c]),
+                    lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            for c in cents
+        ]
+    )
 
+
+def _legacy_sq_argmin(vec_col, cents):
     dists = _sq_dists_to(vec_col, cents)
     return (F.array_position(dists, F.array_min(dists)) - 1).cast("long")
 
@@ -146,6 +163,24 @@ def test_centroid_argmin_kernel_matches_column_fold(spark):
         ).collect()
     }
     assert got_fit == want_fit
+    # embedding_outliers computes only the assigned centroid's
+    # distance; it must equal that entry of the full distance array
+    from cdp_spark.datapipe.similarity import embedding_outliers
+
+    out = embedding_outliers(emb, 64, k=8, top_k=3, prefit=(cents, assigned))
+    got_d = {(r.vec_id, r.cid): r.dist for r in out.collect()}
+    dists = _sq_dists_to(F.col("_v"), cents)
+    want_d = {
+        (r.vec_id, r.cid): r.dist
+        for r in assigned.select(
+            "vec_id",
+            "cid",
+            F.round(
+                F.sqrt(F.element_at(dists, F.col("cid").cast("int") + 1)), 6
+            ).alias("dist"),
+        ).collect()
+    }
+    assert got_d and all(want_d[key] == d for key, d in got_d.items())
 
 
 def test_anchor_argmax_kernel_matches_column_fold(spark):
