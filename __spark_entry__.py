@@ -1666,11 +1666,14 @@ def _ensure_ann_index(spark: SparkSession, sf_dir: str, kind: str) -> str:
         atexit.register(shutil.rmtree, root, ignore_errors=True)
         path = os.path.join(root, "idx")
         if kind == "ivf":
-            sim.ivf_write(emb, path, dim=64)
+            sim.ivf_index_init(path, dim=64, n_centroids=16, seed=7)
+            sim.ivf_index_fold(emb, path)
         elif kind == "ivfpq":
             sim.ivf_pq_write(emb, path, dim=64)
         elif kind == "ivfkm":
-            sim.ivf_kmeans_write(emb, path, dim=64, n_centroids=8, iters=2, seed=7)
+            cents, _ = sim.kmeans_fit(emb, 64, k=8, iters=2, seed=7)
+            sim.ivf_index_init(path, dim=64, n_centroids=8, seed=7, centroids=cents)
+            sim.ivf_index_fold(emb, path)
         else:
             sim.lsh_write(emb, path, dim=64)
         _ANN_INDEX_CACHE[key] = path
@@ -1684,13 +1687,13 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_ann_index(spark, sf_dir, "ivf")
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sim.ivf_topk_indexed(spark, path, qvec, k=10, n_centroids=16, n_probe=4, round_digits=4)
+    return sim.ivf_index_topk(spark, path, qvec, k=10, n_probe=4, round_digits=4)
 
 
 def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance: build the index over the
-    corpus (vec_id % 5 != 0), APPEND the increment (vec_id % 5 == 0)
-    with ivf_append — same anchors, no re-cluster, no rewrite — then
+    corpus (vec_id % 5 != 0), FOLD the increment (vec_id % 5 == 0)
+    into it — same anchors, no re-cluster, no rewrite — then
     query the updated index.  The result must equal ann_ivf over the
     FULL table (shared oracle): assignment is a pure function of
     (vector, anchors), so append-then-probe sees exactly what a
@@ -1706,24 +1709,23 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect — reclaim at interpreter exit.
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     path = os.path.join(root, "idx")
-    sim.ivf_write(emb.where(F.col("vec_id") % 5 != 0), path, dim=64)
-    sim.ivf_append(emb.where(F.col("vec_id") % 5 == 0), path, dim=64)
+    sim.ivf_index_init(path, dim=64, n_centroids=16, seed=7)
+    sim.ivf_index_fold(emb.where(F.col("vec_id") % 5 != 0), path)
+    sim.ivf_index_fold(emb.where(F.col("vec_id") % 5 == 0), path)
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sim.ivf_topk_indexed(
-        spark, path, qvec, k=10, n_centroids=16, n_probe=4, round_digits=4
-    )
+    return sim.ivf_index_topk(spark, path, qvec, k=10, n_probe=4, round_digits=4)
 
 
 def q_ann_ivf_kmeans_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained-IVF top-k against the persisted index: Lloyd's runs
-    once at build, the query loads the centroid artifact, and the
+    once at build, the index meta pins the trained centroids, and the
     scan reads only the 4 probed lists (PartitionFilters).  Same
     training parameters as ann_ivf_kmeans — identical results, so
     they share the oracle SQL."""
     path = _ensure_ann_index(spark, sf_dir, "ivfkm")
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sim.ivf_kmeans_topk_indexed(spark, path, qvec, k=10, n_probe=4, round_digits=4)
+    return sim.ivf_index_topk(spark, path, qvec, k=10, n_probe=4, round_digits=4)
 
 
 def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1733,7 +1735,7 @@ def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_ann_index(spark, sf_dir, "lsh")
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sim.lsh_topk_indexed(spark, path, qvec, k=10, n_planes=8, probe_hamming=2, round_digits=4)
+    return sim.lsh_topk_indexed(spark, path, qvec, k=10, probe_hamming=2, round_digits=4)
 
 
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1761,7 +1763,7 @@ def q_ann_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_ann_index(spark, sf_dir, "ivfpq")
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return sim.ivf_pq_topk_indexed(spark, path, qvec, k=10, n_centroids=16, n_probe=4, round_digits=6)
+    return sim.ivf_pq_topk_indexed(spark, path, qvec, k=10, n_probe=4, round_digits=6)
 
 
 def q_multimodal_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2875,7 +2877,7 @@ def q_stream_keyed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from cdp_spark.events import TRACE_TYPE
-    from cdp_spark.streaming.count_or_time import streaming_count_or_time_meta
+    from cdp_spark.streaming.count_or_time import streaming_count_or_time
 
     ms = 64
     ev = load_table(spark, sf_dir, "events")
@@ -2902,7 +2904,7 @@ def q_stream_keyed_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast(TRACE_TYPE).alias("t"),
         )
     )
-    flushed = streaming_count_or_time_meta(stream, ms, 0, key_expr=F.col("n"))
+    flushed = streaming_count_or_time(stream, ms, 0, key_expr=F.col("n"))
     table = _drive_memory_stream(spark, flushed, "cdp_kw_", src)
     per_w = (
         table

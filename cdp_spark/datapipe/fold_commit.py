@@ -1,7 +1,10 @@
 """The fold-commit protocol every persisted index shares.
 
-The persisted indexes (``dedup_index``, ``retrieval_index``,
-``sketch_index``, the IVF index in ``similarity``) grow by FOLDS that
+Every persisted index pins its kind and model in the meta file
+below, which its readers validate and take the model from — the
+ANN indexes in ``similarity`` (IVF, IVF-PQ, LSH) included.  The
+folded ones (``dedup_index``, ``retrieval_index``, ``sketch_index``,
+the IVF index in ``similarity``) grow by FOLDS that
 ``streaming.fold_runner`` drives from ``foreachBatch``, which is
 AT-LEAST-ONCE: a crash between a fold's writes and the stream's
 checkpoint commit replays the batch.  This module owns every on-disk

@@ -7,10 +7,11 @@
 - Random-hyperplane LSH buckets: sign-bit signature per vector via
   fixed seeded projections; same-bucket join gives the ANN candidate
   set (the scale path: the shuffle carries (id, bucket) only).
-- IVF-style coarse quantization over seeded anchor points for
-  partition pruning at query time; the persisted IVF index folds
-  increments under the shared replay-safe protocol of
-  :mod:`.fold_commit`.
+- IVF-style coarse quantization over seeded anchor points (or
+  trained k-means lists) for partition pruning at query time.
+- Persisted ANN indexes (IVF, IVF-PQ, LSH) pin their model in the
+  :mod:`.fold_commit` meta file; the IVF index also folds increments
+  under that module's replay-safe protocol.
 """
 
 from __future__ import annotations
@@ -878,11 +879,7 @@ def ann_topk_ivf_kmeans(
         float(x)
         for x in df.where(F.col(id_col) == query_id).select(vec_col).first()[0]
     ]
-    qd = [
-        (cid, sum((a - b) ** 2 for a, b in zip(qvec, c)))
-        for cid, c in enumerate(cents)
-    ]
-    probe = [cid for cid, _ in sorted(qd, key=lambda t: (t[1], t[0]))[:n_probe]]
+    probe = _centroid_probe(qvec, cents, n_probe)
     return (
         assigned.where(F.col("cid").isin(probe))
         .select(
@@ -1023,10 +1020,7 @@ def ann_topk_lsh(
     dim = len(query_vector)
     planes = random_hyperplanes(dim, n_planes, seed)
     bucketed = df.withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
-    qb = 0
-    for i, plane in enumerate(planes):
-        if sum(q * p for q, p in zip(query_vector, plane)) >= 0:
-            qb |= 1 << i
+    qb = _query_bucket(query_vector, planes)
     probe = bucketed.filter(F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qb))) <= probe_hamming)
     sim = F.round(cosine_to(F.col(vec_col), query_vector), round_digits)
     return (
@@ -1081,6 +1075,33 @@ def _anchor_set(dim: int, n_centroids: int, seed: int) -> list[list[float]]:
     return anchors
 
 
+def _anchor_probe(
+    query_vector: list[float], n_centroids: int, seed: int, n_probe: int
+) -> list[int]:
+    """The ``n_probe`` seeded anchors nearest the query by cosine (the
+    stable sort keeps the lower id on ties) — the probe ranking every
+    anchor-based IVF query shares."""
+    anchors = _anchor_set(len(query_vector), n_centroids, seed)
+    qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
+    return sorted(
+        range(n_centroids),
+        key=lambda i: -sum(a * b for a, b in zip(anchors[i], query_vector)) / qn,
+    )[:n_probe]
+
+
+def _centroid_probe(
+    query_vector: list[float], cents: list[list[float]], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` trained centroids nearest the query by squared
+    L2, ties to the lower id — the probe ranking every trained-IVF
+    query shares (the per-element sum the DuckDB oracles use)."""
+    qd = [
+        (cid, sum((a - b) ** 2 for a, b in zip(query_vector, c)))
+        for cid, c in enumerate(cents)
+    ]
+    return [cid for cid, _ in sorted(qd, key=lambda t: (t[1], t[0]))[:n_probe]]
+
+
 def ivf_topk(
     df: DataFrame,
     query_vector: list[float],
@@ -1098,15 +1119,9 @@ def ivf_topk(
     written partitioned-by-centroid this prunes (n_centroids-n_probe)/
     n_centroids of the scan — the ANN shape that survives 100 TB.
     Same anchor seed as :func:`ivf_assign` so assignments agree."""
-    anchors = _anchor_set(len(query_vector), n_centroids, seed)
-    qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-    scored = sorted(
-        range(n_centroids),
-        key=lambda i: -sum(a * b for a, b in zip(anchors[i], query_vector)) / qn,
-    )
-    probe = scored[:n_probe]
+    probe = _anchor_probe(query_vector, n_centroids, seed, n_probe)
     assigned = ivf_assign(df, len(query_vector), n_centroids, id_col, vec_col, seed)
-    pruned = assigned.filter(F.col("centroid").isin(*[int(i) for i in probe]))
+    pruned = assigned.filter(F.col("centroid").isin(*probe))
     sim = F.round(cosine_to(F.col(vec_col), query_vector), round_digits)
     return (
         pruned.select(F.col(id_col), sim.alias("cosine_sim"))
@@ -1303,18 +1318,7 @@ def ivf_index_recall(
         # differ in the last ulp and flip a probe ranking)
         for j in range(len(qids)):
             qv = [float(x) for x in qmat[:, j]]
-            qd = [
-                (cid, sum((a - b) ** 2 for a, b in zip(qv, c)))
-                for cid, c in enumerate(cents)
-            ]
-            probe_sets.append(
-                {
-                    int(cid)
-                    for cid, _ in sorted(qd, key=lambda t: (t[1], t[0]))[
-                        :n_probe
-                    ]
-                }
-            )
+            probe_sets.append(set(_centroid_probe(qv, cents, n_probe)))
     else:
         anchors = _anchor_set(dim, n_centroids, int(meta["seed"]))
         for j in range(len(qids)):
@@ -1522,14 +1526,9 @@ def ivf_pq_topk(
     query reads n_probe/n_centroids of the files at ~n_sub bytes per
     vector."""
     dim = len(query_vector)
-    anchors = _anchor_set(dim, n_centroids, ivf_seed)
-    qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-    probe = sorted(
-        range(n_centroids),
-        key=lambda i: -sum(a * b for a, b in zip(anchors[i], query_vector)) / qn,
-    )[:n_probe]
+    probe = _anchor_probe(query_vector, n_centroids, ivf_seed, n_probe)
     assigned = ivf_assign(df, dim, n_centroids, id_col, vec_col, ivf_seed)
-    pruned = assigned.filter(F.col("centroid").isin(*[int(i) for i in probe]))
+    pruned = assigned.filter(F.col("centroid").isin(*probe))
     cbs = pq_codebooks(dim, n_sub, n_codes, pq_seed)
     adc = adc_distance(pq_encode_col(F.col(vec_col), cbs), _adc_lut(query_vector, cbs))
     return (
@@ -1598,6 +1597,20 @@ def ivf_pq_refine_topk(
     )
 
 
+def _read_ann_meta(path: str, kind: str, query_vector: list[float]) -> dict:
+    """The model a persisted ANN index at ``path`` pins in its meta;
+    raises ValueError when the query's dim is not the index's — a
+    mismatched query would silently probe a different space."""
+    meta = fc.read_meta(path, kind)
+    if len(query_vector) != int(meta["dim"]):
+        raise ValueError(
+            f"query vector has dim {len(query_vector)}, but the index at "
+            f"{path} pins dim {meta['dim']} — a mismatched query would "
+            "silently probe a different space"
+        )
+    return meta
+
+
 def ivf_pq_write(
     df: DataFrame,
     path: str,
@@ -1612,13 +1625,27 @@ def ivf_pq_write(
 ) -> None:
     """Build the IVF-PQ index: centroid assignment + PQ codes, written
     partitioned by centroid WITHOUT the embedding column — the read
-    side scans ids+codes only (the 100 TB IO win)."""
+    side scans ids+codes only (the 100 TB IO win).  The meta file,
+    written after the data, pins the model the query reads back."""
     assigned = ivf_assign(df, dim, n_centroids, id_col, vec_col, ivf_seed)
     cbs = pq_codebooks(dim, n_sub, n_codes, pq_seed)
     coded = assigned.withColumn("codes", pq_encode_col(F.col(vec_col), cbs))
     coded.select(id_col, "centroid", "codes").write.mode("overwrite").partitionBy(
         "centroid"
     ).parquet(path)
+    fc.write_meta(
+        path,
+        {
+            "kind": "ivfpq",
+            "dim": dim,
+            "n_centroids": n_centroids,
+            "ivf_seed": ivf_seed,
+            "n_sub": n_sub,
+            "n_codes": n_codes,
+            "pq_seed": pq_seed,
+            "id_col": id_col,
+        },
+    )
 
 
 def ivf_pq_topk_indexed(
@@ -1626,30 +1653,22 @@ def ivf_pq_topk_indexed(
     path: str,
     query_vector: list[float],
     k: int = 10,
-    n_centroids: int = 16,
     n_probe: int = 4,
-    n_sub: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    ivf_seed: int = 7,
-    pq_seed: int = 11,
     round_digits: int = 6,
 ) -> DataFrame:
     """Query a persisted IVF-PQ index: partition-pruned scan of the
     probed lists' (id, codes) rows, ADC ranking — no embeddings read
-    anywhere.  Same seeds as ivf_pq_write, so results equal
-    :func:`ivf_pq_topk` over the original table."""
-    dim = len(query_vector)
-    anchors = _anchor_set(dim, n_centroids, ivf_seed)
-    qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-    probe = [
-        int(i)
-        for i in sorted(
-            range(n_centroids),
-            key=lambda i: -sum(a * b for a, b in zip(anchors[i], query_vector)) / qn,
-        )[:n_probe]
-    ]
-    cbs = pq_codebooks(dim, n_sub, n_codes, pq_seed)
+    anywhere.  The anchors and codebooks come from the meta-pinned
+    model, so results equal :func:`ivf_pq_topk` over the original
+    table."""
+    meta = _read_ann_meta(path, "ivfpq", query_vector)
+    id_col = meta["id_col"]
+    probe = _anchor_probe(
+        query_vector, meta["n_centroids"], meta["ivf_seed"], n_probe
+    )
+    cbs = pq_codebooks(
+        len(query_vector), meta["n_sub"], meta["n_codes"], meta["pq_seed"]
+    )
     pruned = spark.read.parquet(path).filter(F.col("centroid").isin(*probe))
     adc = adc_distance(F.col("codes"), _adc_lut(query_vector, cbs))
     return (
@@ -1677,59 +1696,21 @@ def recall_at_k(approx: DataFrame, exact: DataFrame, id_col: str = "vec_id") -> 
 # Persisted indexes: the 100 TB path.  Assignment/bucketing is a
 # one-time build cost; queries read back partition-pruned — the scan
 # touches only the probed lists' files, which is what makes either
-# structure an *index* rather than a full-scan rerank.
-
-
-def ivf_write(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> None:
-    """Build the IVF index once: assign centroids and write
-    partitioned by ``centroid``.  Partition values become directories,
-    so a query's ``centroid IN (probed)`` filter prunes at file-listing
-    time (PartitionFilters in the scan node, zero IO for unprobed
-    lists)."""
-    assigned = ivf_assign(df, dim, n_centroids, id_col, vec_col, seed)
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
-
-
-def ivf_append(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> None:
-    """Incrementally add NEW vectors to a persisted IVF index WITHOUT
-    re-clustering or rewriting existing data — the daily-increment
-    shape for a growing embedding corpus: assign the increment against
-    the SAME seed-derived anchor set (the index's model state, no
-    training job) and append into the centroid-partitioned layout.
-    Parquet partition directories gain new files; probed reads see
-    corpus + increment, unprobed lists still cost zero IO
-    (PartitionFilters prune at file-listing time).  A query over the
-    appended index equals the same query over a from-scratch index of
-    the full table — assignment is a pure function of (vector,
-    anchors).  Re-cluster only when drift degrades list balance
-    (monitor with :func:`ivf_counts`-style occupancy)."""
-    assigned = ivf_assign(df, dim, n_centroids, id_col, vec_col, seed)
-    assigned.write.mode("append").partitionBy("centroid").parquet(path)
+# structure an *index* rather than a full-scan rerank.  Every persisted
+# ANN index (IVF, IVF-PQ, LSH) pins its model in the ``fold_commit``
+# meta file, so a query reads the model from the index, never from
+# its own arguments; only the IVF index grows by folds.
 
 
 # -------------------------------------------- IVF index fold lifecycle
 #
-# The runner-managed form of ivf_write/ivf_append (VERDICT r10 next
-# #3): a meta file pins the assignment model (dim, anchors seed,
+# The one persisted IVF index (VERDICT r10 next #3): a meta file pins
+# the assignment model (dim, anchors seed or trained centroids,
 # n_centroids, columns) so folds can never silently mix assignment
 # spaces, and folds given an ``epoch`` are IDEMPOTENT under
-# foreachBatch replay — the shared protocol of ``fold_commit``.
+# foreachBatch replay — the shared protocol of ``fold_commit``.  A
+# one-shot build is an init plus one epoch-less fold; a trained build
+# passes :func:`kmeans_fit`'s centroids to the init.
 # Layout:
 #
 #     <path>/_cdp_index_meta.json           model + ``base_counts``
@@ -1743,10 +1724,11 @@ def ivf_append(
 # query's ``centroid IN (probed)`` still prunes at file-listing time
 # across every fold (PartitionFilters), and an increment append stays
 # O(increment): assign + write, no re-cluster, no rewrite.  Re-fit
-# stays a deliberate operation: monitor list occupancy (ivf_counts)
-# and rebuild with ivf_kmeans_write when drift degrades balance —
-# assignment is a pure function of (vector, anchors), so until then
-# the folded index equals a from-scratch build over the union.
+# stays a deliberate operation: monitor list occupancy
+# (ivf_index_occupancy) and re-fit (ivf_serving_refit) when drift
+# degrades balance — assignment is a pure function of (vector,
+# model), so until then the folded index equals a from-scratch build
+# over the union.
 
 
 def ivf_index_init(
@@ -2249,43 +2231,22 @@ def ivf_index_topk(
     n_probe: int = 4,
     round_digits: int = 6,
 ) -> DataFrame:
-    """Query a fold-lifecycle IVF index: rank the meta-pinned lists
+    """Query the persisted IVF index: rank the meta-pinned lists
     driver-side — trained centroids by squared-L2 (ties to the lower
-    id, :func:`ivf_kmeans_topk_indexed`'s rule) when the meta pins
-    them, else the anchors by cosine — read ONLY the probed centroid
+    id, :func:`ann_topk_ivf_kmeans`'s rule) when the meta pins them,
+    else the anchors by cosine — read ONLY the probed centroid
     partitions (the ``centroid IN`` filter prunes at file-listing
     time across every fold directory), exact cosine top-k within
-    them.  Equals :func:`ivf_topk` / the trained probe over the union
-    of all folded increments."""
-    meta = fc.read_meta(path, "ivf")
-    if len(query_vector) != int(meta["dim"]):
-        raise ValueError(
-            f"query vector has dim {len(query_vector)}, but the index at "
-            f"{path} pins dim {meta['dim']} — a mismatched query would "
-            "silently probe a different anchor space (ADVICE r11)"
-        )
+    them.  Equals :func:`ivf_topk` / :func:`ann_topk_ivf_kmeans` over
+    the union of all folded increments."""
+    meta = _read_ann_meta(path, "ivf", query_vector)
     cents = meta.get("centroids")
     if cents is not None:
-        qd = [
-            (cid, sum((a - b) ** 2 for a, b in zip(query_vector, c)))
-            for cid, c in enumerate(cents)
-        ]
-        probe = [
-            int(cid)
-            for cid, _ in sorted(qd, key=lambda t: (t[1], t[0]))[:n_probe]
-        ]
+        probe = _centroid_probe(query_vector, cents, n_probe)
     else:
-        anchors = _anchor_set(
-            int(meta["dim"]), meta["n_centroids"], meta["seed"]
+        probe = _anchor_probe(
+            query_vector, meta["n_centroids"], meta["seed"], n_probe
         )
-        qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-        scored = sorted(
-            range(meta["n_centroids"]),
-            key=lambda i: -sum(
-                a * b for a, b in zip(anchors[i], query_vector)
-            ) / qn,
-        )
-        probe = [int(i) for i in scored[:n_probe]]
     pruned = spark.read.parquet(path).filter(F.col("centroid").isin(*probe))
     sim = F.round(cosine_to(F.col(meta["vec_col"]), query_vector), round_digits)
     return (
@@ -2421,9 +2382,10 @@ def ivf_serving_refit(
 
     The rebuilt generation IS a from-scratch trained build over the
     union of all folded increments (assignment is :func:`kmeans_fit`'s
-    own final assignment), so the served top-k afterwards equals
-    :func:`ivf_kmeans_write` + :func:`ivf_kmeans_topk_indexed` over
-    the same data — pinned by test.  Epoch watermarks (meta keys AND
+    own final assignment), so the served top-k afterwards equals a
+    trained build (:func:`kmeans_fit` centroids into
+    :func:`ivf_index_init`, one :func:`ivf_index_fold`) over the same
+    data — pinned by test.  Epoch watermarks (meta keys AND
     per-lineage sidecars) carry over to the new generation: the
     rebuild already contains every committed epoch, so a replayed
     epoch must keep skipping after the swap.  O(all folded data) by
@@ -2537,105 +2499,6 @@ def ivf_serving_refit(
     return cents, counts
 
 
-def ivf_kmeans_write(
-    df: DataFrame,
-    path: str,
-    dim: int,
-    n_centroids: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-) -> list[list[float]]:
-    """Train Lloyd's (:func:`kmeans_fit`) and persist the index
-    partitioned by the TRAINED list id; returns the centroids — the
-    model artifact a deployment stores alongside the index (also
-    written as ``_centroids.json`` in the index root; files starting
-    with ``_`` are invisible to the parquet reader).  Trained lists
-    follow the data distribution, so probes cover better than the
-    random-anchor :func:`ivf_write` at equal ``n_probe``."""
-    cents, assigned = kmeans_fit(
-        df, dim, id_col, vec_col, k=n_centroids, iters=iters, seed=seed
-    )
-    (
-        assigned.select(
-            F.col(id_col), F.col("_v").alias(vec_col), F.col("cid").alias("centroid")
-        )
-        .write.mode("overwrite")
-        .partitionBy("centroid")
-        .parquet(path)
-    )
-    fc.write_json_atomic(os.path.join(path, "_centroids.json"), cents)
-    return cents
-
-
-def ivf_kmeans_topk_indexed(
-    spark,
-    path: str,
-    query_vector: list[float],
-    k: int = 10,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Query a persisted trained-IVF index: load the centroid model
-    artifact, rank lists driver-side by squared L2 (ties to the lower
-    id — same rule as :func:`ann_topk_ivf_kmeans`), read back ONLY the
-    probed partitions (``PartitionFilters`` prune at file-listing
-    time), exact cosine top-k within them.  Results equal the direct
-    train→probe query."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_centroids.json"), encoding="utf-8") as fh:
-        cents = _json.load(fh)
-    qd = [
-        (cid, sum((a - b) ** 2 for a, b in zip(query_vector, c)))
-        for cid, c in enumerate(cents)
-    ]
-    probe = [cid for cid, _ in sorted(qd, key=lambda t: (t[1], t[0]))[:n_probe]]
-    pruned = spark.read.parquet(path).filter(F.col("centroid").isin(*probe))
-    score = F.round(cosine_to(F.col(vec_col), query_vector), round_digits)
-    return (
-        pruned.select(F.col(id_col), score.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query_vector: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Query a persisted IVF index: rank centroids driver-side (tiny
-    math, no job), read back only the probed partitions, exact cosine
-    top-k within them.  Same anchors as :func:`ivf_write`, so results
-    equal :func:`ivf_topk` over the original table."""
-    anchors = _anchor_set(len(query_vector), n_centroids, seed)
-    qn = math.sqrt(sum(x * x for x in query_vector)) or 1.0
-    scored = sorted(
-        range(n_centroids),
-        key=lambda i: -sum(a * b for a, b in zip(anchors[i], query_vector)) / qn,
-    )
-    probe = [int(i) for i in scored[:n_probe]]
-    pruned = spark.read.parquet(path).filter(F.col("centroid").isin(*probe))
-    sim = F.round(cosine_to(F.col(vec_col), query_vector), round_digits)
-    return (
-        pruned.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def lsh_write(
     df: DataFrame,
     path: str,
@@ -2646,9 +2509,32 @@ def lsh_write(
     seed: int = 42,
 ) -> None:
     """Build the hyperplane-LSH index once: bucket each vector and
-    write partitioned by ``bucket`` (2^n_planes partitions)."""
+    write partitioned by ``bucket`` (2^n_planes partitions).  The meta
+    file, written after the data, pins the planes the query reads
+    back."""
     bucketed = lsh_bucketed(df, dim, id_col, vec_col, n_planes, seed)
     bucketed.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    fc.write_meta(
+        path,
+        {
+            "kind": "lsh",
+            "dim": dim,
+            "n_planes": n_planes,
+            "seed": seed,
+            "id_col": id_col,
+            "vec_col": vec_col,
+        },
+    )
+
+
+def _query_bucket(query_vector: list[float], planes: list[list[float]]) -> int:
+    """The query's sign-bit bucket under ``planes`` (bit i set when
+    the query is on the non-negative side of plane i)."""
+    qb = 0
+    for i, plane in enumerate(planes):
+        if sum(q * p for q, p in zip(query_vector, plane)) >= 0:
+            qb |= 1 << i
+    return qb
 
 
 def _probe_buckets(qb: int, n_planes: int, probe_hamming: int) -> list[int]:
@@ -2671,24 +2557,21 @@ def lsh_topk_indexed(
     path: str,
     query_vector: list[float],
     k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
     probe_hamming: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     round_digits: int = 6,
 ) -> DataFrame:
     """Query a persisted LSH index: enumerate the multi-probe buckets
-    driver-side and read only those partitions.  Results equal
-    :func:`ann_topk_lsh` over the original table."""
-    planes = random_hyperplanes(len(query_vector), n_planes, seed)
-    qb = 0
-    for i, plane in enumerate(planes):
-        if sum(q * p for q, p in zip(query_vector, plane)) >= 0:
-            qb |= 1 << i
-    probe = _probe_buckets(qb, n_planes, probe_hamming)
+    of the meta-pinned planes driver-side and read only those
+    partitions.  Results equal :func:`ann_topk_lsh` over the original
+    table."""
+    meta = _read_ann_meta(path, "lsh", query_vector)
+    id_col, n_planes = meta["id_col"], meta["n_planes"]
+    planes = random_hyperplanes(len(query_vector), n_planes, meta["seed"])
+    probe = _probe_buckets(
+        _query_bucket(query_vector, planes), n_planes, probe_hamming
+    )
     pruned = spark.read.parquet(path).filter(F.col("bucket").isin(*probe))
-    sim = F.round(cosine_to(F.col(vec_col), query_vector), round_digits)
+    sim = F.round(cosine_to(F.col(meta["vec_col"]), query_vector), round_digits)
     return (
         pruned.select(F.col(id_col), sim.alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col))

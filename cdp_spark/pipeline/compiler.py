@@ -83,7 +83,6 @@ class _Ctx:
     template: PipelineTemplate
     signature: str
     sinks: list[tuple[str, Callable[[], None]]]
-    distributed_sinks: bool = False
 
 
 def _with_order(df: DataFrame) -> DataFrame:
@@ -250,15 +249,14 @@ def _attach_sink(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
         action = make_stdout_action(lines)
     elif fn == "send-file":
         path = opts if isinstance(opts, str) else o["path"]
-        # Per-step `spark-dir` / compile-level distributed_sinks pick
-        # the executor-parallel directory writer; the driver-side
-        # single-file append is the reference-parity default for
-        # local/debug use (exact byte-order append to ONE file).
-        use_dir = bool(o.get("spark-dir")) or (
-            ctx.distributed_sinks and "spark-dir" not in o
-        )
+        # Per-step `spark-dir` picks the executor-parallel directory
+        # writer; the driver-side single-file append is the
+        # reference-parity default for local/debug use (exact
+        # byte-order append to ONE file).
         action = (
-            make_file_dir_action(lines, path) if use_dir else make_file_action(lines, path)
+            make_file_dir_action(lines, path)
+            if o.get("spark-dir")
+            else make_file_action(lines, path)
         )
     elif fn == "send-http":
         target = opts if isinstance(opts, str) else o["target"]
@@ -335,7 +333,6 @@ def compile_pipeline(
     input_df: Optional[DataFrame] = None,
     arrival_ts: Optional[float] = None,
     observe: bool = False,
-    distributed_sinks: bool = False,
     applied_steps: Optional[set] = None,
     prewindowed_step: Optional[str] = None,
 ) -> PipelineResult:
@@ -356,7 +353,6 @@ def compile_pipeline(
         template=template,
         signature=signature,
         sinks=[],
-        distributed_sinks=distributed_sinks,
     )
 
     dead = None

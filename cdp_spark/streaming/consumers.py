@@ -74,7 +74,11 @@ def _bool_opt(v: Any, default: bool) -> bool:
 class MessageSpool:
     """One message body -> one atomically-renamed NDJSON file; the
     backlog gate is the consumer-side backpressure signal (the analog
-    of src/backpressure.ts's queue saturation)."""
+    of src/backpressure.ts's queue saturation).  Sequence numbers are
+    taken under a lock because writers run concurrently (the HTTP
+    server handles POSTs on a thread each).  The backlog counts files
+    awaiting pickup, a pending-work gauge only because the consuming
+    stream runs with ``cleanSource=delete``."""
 
     def __init__(self, spool_dir: str, max_backlog_files: int = 1024):
         os.makedirs(spool_dir, exist_ok=True)

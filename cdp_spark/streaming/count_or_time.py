@@ -8,10 +8,11 @@ timeout, and the final partial on stream end (close-truncation,
 src/step.ts:136-148).
 
 Implementation: ``applyInPandasWithState`` with a processing-time
-timeout.  State = (buffered rows as JSON, first-event wall time,
-next window id).  Output rows carry (key, window id ``w``, the event
-payload) — the same ``_w`` convention as the batch windower, so the
-same downstream operators apply per micro-batch.
+timeout.  State = (buffered rows as JSON ``[[n, d, t_json], ...]``,
+first-event wall time, next window id).  Output rows carry (key,
+window id ``w``, within-window flush index ``i``, the event payload
+and its serialized trace) — the same ``_w`` convention as the batch
+windower, so the same downstream operators apply per micro-batch.
 
 Scale: state is per-key and bounded by max_size events; timeouts are
 Spark-managed.  This is the one operator that genuinely needs custom
@@ -31,19 +32,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 
-OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("w", T.LongType()),
-        T.StructField("n", T.StringType()),
-        T.StructField("d", T.StringType()),
-    ]
-)
-
-# Meta variant for the DAG runner: adds the within-window flush index
-# ``i`` (so downstream rebuilds arrival order as (w, i)) and the
-# serialized trace column so events survive the state round-trip whole.
-OUTPUT_SCHEMA_META = T.StructType(
+# Flushed rows: the within-window flush index ``i`` lets downstream
+# rebuild arrival order as (w, i), and the serialized trace column lets
+# events survive the state round-trip whole.
+FLUSH_SCHEMA = T.StructType(
     [
         T.StructField("key", T.StringType()),
         T.StructField("w", T.LongType()),
@@ -56,22 +48,19 @@ OUTPUT_SCHEMA_META = T.StructType(
 
 STATE_SCHEMA = T.StructType(
     [
-        T.StructField("buffered", T.StringType()),  # JSON [[n, d], ...]
+        T.StructField("buffered", T.StringType()),  # JSON [[n, d, t_json], ...]
         T.StructField("first_ms", T.LongType()),
         T.StructField("next_w", T.LongType()),
     ]
 )
 
 
-def make_count_or_time_fn(max_size: int, max_seconds: float, with_meta: bool = False):
+def make_count_or_time_fn(max_size: int, max_seconds: float):
     """Build the applyInPandasWithState function (factored out so
-    batch tests can exercise the state-machine logic directly).
-    ``with_meta`` emits OUTPUT_SCHEMA_META rows (flush index + trace
-    passthrough) for the DAG runner."""
+    batch tests can exercise the state-machine logic directly); it
+    emits :data:`FLUSH_SCHEMA` rows."""
     timeout_ms = int(max_seconds * 1000) if max_seconds > 0 else None
-    columns = (
-        ["key", "w", "i", "n", "d", "t_json"] if with_meta else ["key", "w", "n", "d"]
-    )
+    columns = FLUSH_SCHEMA.fieldNames()
 
     def fn(
         key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -89,12 +78,8 @@ def make_count_or_time_fn(max_size: int, max_seconds: float, with_meta: bool = F
         def flush() -> None:
             nonlocal buffered, next_w
             if buffered:
-                if with_meta:
-                    for i, (n, d, tj) in enumerate(buffered):
-                        out_rows.append((k, next_w, i, n, d, tj))
-                else:
-                    for n, d in buffered:
-                        out_rows.append((k, next_w, n, d))
+                for i, (n, d, tj) in enumerate(buffered):
+                    out_rows.append((k, next_w, i, n, d, tj))
                 next_w += 1
                 buffered = []
 
@@ -106,19 +91,16 @@ def make_count_or_time_fn(max_size: int, max_seconds: float, with_meta: bool = F
             # No new timeout until the next event arrives.
         else:
             for pdf in pdfs:
-                if with_meta:
-                    rows_iter = zip(pdf["n"], pdf["d"], pdf["t_json"])
-                else:
-                    rows_iter = zip(pdf["n"], pdf["d"])
-                for row in rows_iter:
-                    n, d = row[0], row[1]
+                for n, d, tj in zip(pdf["n"], pdf["d"], pdf["t_json"]):
                     if not buffered:
                         first_ms = int(time.time() * 1000)
-                    entry = [n, None if d is None else str(d)]
-                    if with_meta:
-                        tj = row[2]
-                        entry.append(None if tj is None else str(tj))
-                    buffered.append(entry)
+                    buffered.append(
+                        [
+                            n,
+                            None if d is None else str(d),
+                            None if tj is None else str(tj),
+                        ]
+                    )
                     if len(buffered) >= max_size:
                         flush()
             state.update((json.dumps(buffered), first_ms, next_w))
@@ -156,32 +138,13 @@ def streaming_count_or_time(
     events: DataFrame,
     max_size: int,
     max_seconds: float,
-    key_col: str = "n",
-) -> DataFrame:
-    """Apply the count-or-time vector assembly to a streaming event
-    DataFrame, keyed by ``key_col``.  Output: (key, w, n, d) rows in
-    flush order — feed into per-window transforms via foreachBatch."""
-    from pyspark.sql import functions as F
-
-    keyed = events.select(F.col(key_col).alias("key"), "n", "d").groupBy("key")
-    return keyed.applyInPandasWithState(
-        make_count_or_time_fn(max_size, max_seconds),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=_timeout_conf(max_seconds),
-    )
-
-
-def streaming_count_or_time_meta(
-    events: DataFrame,
-    max_size: int,
-    max_seconds: float,
     key_expr=None,
 ) -> DataFrame:
-    """The DAG-runner variant: rows carry the within-window flush
-    index and the serialized trace, so the per-batch compiler can
-    rebuild full (n, d, t, _w, _ord) events from flushed windows.
+    """Apply the count-or-time vector assembly to a streaming (n, d, t)
+    event DataFrame.  Output: :data:`FLUSH_SCHEMA` rows in flush order;
+    the within-window flush index and the serialized trace let the
+    per-batch compiler rebuild full (n, d, t, _w, _ord) events from
+    flushed windows.
 
     ``key_expr`` defaults to a single shared buffer — exact parity
     with the reference's per-step vector assembly (src/step.ts:70-151
@@ -196,8 +159,8 @@ def streaming_count_or_time_meta(
         key.alias("key"), "n", "d", F.to_json("t").alias("t_json")
     ).groupBy("key")
     return keyed.applyInPandasWithState(
-        make_count_or_time_fn(max_size, max_seconds, with_meta=True),
-        outputStructType=OUTPUT_SCHEMA_META,
+        make_count_or_time_fn(max_size, max_seconds),
+        outputStructType=FLUSH_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=_timeout_conf(max_seconds),

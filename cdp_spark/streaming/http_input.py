@@ -27,15 +27,14 @@ cumulative counter — a drained pipeline accepts new POSTs forever.
 from __future__ import annotations
 
 import json
-import os
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..events import WrapDirective
+from .consumers import MessageSpool
 from .sources import stream_ndjson_files
 
 HEALTH_ENDPOINT = "/healthz"  # HTTP_SERVER_HEALTH_ENDPOINT, src/conf.ts:174-178
@@ -43,7 +42,8 @@ DEFAULT_PORT = 8000  # HTTP_SERVER_DEFAULT_PORT, src/conf.ts:143-148
 
 
 class HttpIngestServer:
-    """Accept POSTed NDJSON and spool it for a Spark file stream."""
+    """Accept POSTed NDJSON and spool it for a Spark file stream: one
+    request body -> one file of the shared :class:`MessageSpool`."""
 
     def __init__(
         self,
@@ -53,12 +53,8 @@ class HttpIngestServer:
         max_backlog_files: int = 1024,
         healthy: Optional[callable] = None,
     ):
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
+        self.spool = MessageSpool(spool_dir, max_backlog_files)
         self.endpoint = endpoint if endpoint.startswith("/") else "/" + endpoint
-        self.max_backlog_files = max_backlog_files
-        self.received = 0
-        self._seq_lock = threading.Lock()
         self._healthy = healthy if healthy is not None else (lambda: True)
         server = self
 
@@ -71,12 +67,11 @@ class HttpIngestServer:
                 if path != server.endpoint.rstrip("/"):
                     self.send_error(404)
                     return
-                if server.backlog() >= server.max_backlog_files:
+                if not server.spool.accepting():
                     self.send_error(503)
                     return
                 length = int(self.headers.get("Content-Length", 0))
-                body = self.rfile.read(length)
-                server._spool(body)
+                server.spool.write(self.rfile.read(length))
                 # ctx.body = null -> 204-equivalent empty success
                 self.send_response(200)
                 self.send_header("Content-Length", "0")
@@ -100,33 +95,6 @@ class HttpIngestServer:
         self.port = self._httpd.server_address[1]
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
 
-    def _spool(self, body: bytes) -> None:
-        """One request -> one file, atomic rename so the file stream
-        never reads a partial write.  The sequence number is taken
-        under a lock: ThreadingHTTPServer handles POSTs concurrently,
-        and an unguarded counter could hand two requests the same
-        ordering prefix (and drop increments)."""
-        with self._seq_lock:
-            seq = self.received
-            self.received += 1
-        name = f"{seq:012d}-{uuid.uuid4().hex}.ndjson"
-        tmp = os.path.join(self.spool_dir, "." + name + ".tmp")
-        final = os.path.join(self.spool_dir, name)
-        with open(tmp, "wb") as f:
-            if body and not body.endswith(b"\n"):
-                body += b"\n"
-            f.write(body)
-        os.rename(tmp, final)
-
-    def backlog(self) -> int:
-        """Files awaiting pickup.  Valid as a pending gauge because the
-        consuming stream runs with cleanSource=delete (committed files
-        leave the directory); archived/compacted spool layouts would
-        need a stream-progress gauge instead."""
-        return sum(
-            1 for n in os.listdir(self.spool_dir) if not n.startswith(".")
-        )
-
     def url(self) -> str:
         return f"http://127.0.0.1:{self.port}{self.endpoint}"
 
@@ -146,7 +114,6 @@ def stream_http(
     port: int = 0,
     wrap: WrapDirective = None,
     max_backlog_files: int = 1024,
-    max_files_per_trigger: Optional[int] = None,
 ) -> tuple[DataFrame, HttpIngestServer]:
     """HTTP input: start the ingest server and return (event stream,
     server handle).  The stream is the standard file stream over the
@@ -161,7 +128,6 @@ def stream_http(
         spark,
         spool_dir,
         wrap=wrap,
-        max_files_per_trigger=max_files_per_trigger,
         clean_source="delete",
     )
     return stream, server

@@ -101,43 +101,34 @@ def _input_stream(
         # Default to a per-run unique spool: a fixed shared directory
         # would replay files left by a previous run into a fresh
         # checkpoint (and count them toward the 503 backlog gate).
-        spool = o.get("spool-dir") or tempfile.mkdtemp(prefix="cdp_spark_http_spool_")
-        stream, server = stream_http(
+        spool_dir = o.get("spool-dir") or tempfile.mkdtemp(prefix="cdp_spark_http_spool_")
+        stream, source = stream_http(
             spark,
-            spool_dir=spool,
+            spool_dir=spool_dir,
             endpoint=endpoint,
             port=int(o.get("port", 0)) or 0,
             wrap=o.get("wrap"),
         )
-        if closers is not None:
-            closers.append(server.close)
-        if metrics is not None:
-            # The spool backlog is this input's queued work, and the
-            # 503 gate is its backpressure signal — the same numbers
-            # the reference exports as queued_events / backpressure
-            # gauges (src/metrics.ts:46-117).
-            metrics.register_queue_watcher(server.backlog)
-            metrics.register_backpressure_watcher(
-                lambda: server.backlog() >= server.max_backlog_files
-            )
-        return stream
-    if form in ("amqp", "mqtt", "redis"):
+    elif form in ("amqp", "mqtt", "redis"):
         from .consumers import stream_broker
 
-        stream, consumer = stream_broker(spark, form, opts)
-        if closers is not None:
-            closers.append(consumer.close)
-        if metrics is not None:
-            spool = consumer.spool
-            metrics.register_queue_watcher(spool.backlog)
-            metrics.register_backpressure_watcher(
-                lambda: not spool.accepting()
-            )
-        return stream
-    raise NotImplementedError(
-        f"input form '{form}' has no streaming executor here; poll maps "
-        "to an ingest bridge (cdp_spark.streaming.sources module notes)"
-    )
+        stream, source = stream_broker(spark, form, opts)
+    else:
+        raise NotImplementedError(
+            f"input form '{form}' has no streaming executor here; poll maps "
+            "to an ingest bridge (cdp_spark.streaming.sources module notes)"
+        )
+    if closers is not None:
+        closers.append(source.close)
+    if metrics is not None:
+        # The spool backlog is this input's queued work, and the 503 /
+        # pause gate is its backpressure signal — the same numbers the
+        # reference exports as queued_events / backpressure gauges
+        # (src/metrics.ts:46-117).
+        spool = source.spool
+        metrics.register_queue_watcher(spool.backlog)
+        metrics.register_backpressure_watcher(lambda: not spool.accepting())
+    return stream
 
 
 def _stateful_window_plan(template: PipelineTemplate):
@@ -231,7 +222,7 @@ def run_pipeline_stream(
         from ..operators import rename as rename_op
         from ..patterns import pattern_to_column
         from ..pipeline.compiler import window_key_column
-        from .count_or_time import streaming_count_or_time_meta
+        from .count_or_time import streaming_count_or_time
 
         pre_steps, win = plan
         stream = input_stream
@@ -248,7 +239,7 @@ def run_pipeline_stream(
             )
         if win.pattern is not None:
             stream = stream.filter(pattern_to_column(win.pattern, "n"))
-        input_stream = streaming_count_or_time_meta(
+        input_stream = streaming_count_or_time(
             stream,
             win.window_events,
             win.window_seconds,

@@ -99,10 +99,12 @@ def test_trained_ivf_index_prunes_partitions_and_matches_direct(spark, tmp_path)
     (b) return exactly the direct train->probe query's rows."""
     emb = load_table(spark, SF, "embeddings")
     path = str(tmp_path / "ivfkm")
-    sim.ivf_kmeans_write(emb, path, dim=64, n_centroids=8, iters=2, seed=7)
+    cents, _ = sim.kmeans_fit(emb, 64, k=8, iters=2, seed=7)
+    sim.ivf_index_init(path, dim=64, n_centroids=8, seed=7, centroids=cents)
+    sim.ivf_index_fold(emb, path)
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
 
-    indexed = sim.ivf_kmeans_topk_indexed(spark, path, qvec, k=10, n_probe=4)
+    indexed = sim.ivf_index_topk(spark, path, qvec, k=10, n_probe=4, round_digits=4)
     plan = indexed._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "centroid" in plan.split("PartitionFilters")[1][:120]
 
@@ -127,20 +129,14 @@ def test_ivf_append_equals_from_scratch_and_prunes(spark, tmp_path):
 
     full_path = str(tmp_path / "full")
     inc_path = str(tmp_path / "inc")
-    sim.ivf_write(emb, full_path, dim=16, n_centroids=8)
-    sim.ivf_write(
-        emb.where("vec_id % 4 != 0"), inc_path, dim=16, n_centroids=8
-    )
-    sim.ivf_append(
-        emb.where("vec_id % 4 = 0"), inc_path, dim=16, n_centroids=8
-    )
+    for path in (full_path, inc_path):
+        sim.ivf_index_init(path, dim=16, n_centroids=8)
+    sim.ivf_index_fold(emb, full_path)
+    sim.ivf_index_fold(emb.where("vec_id % 4 != 0"), inc_path)
+    sim.ivf_index_fold(emb.where("vec_id % 4 = 0"), inc_path)
     q = rows[0][1]
-    a = sim.ivf_topk_indexed(
-        spark, full_path, q, k=5, n_centroids=8, n_probe=3
-    ).collect()
-    b = sim.ivf_topk_indexed(
-        spark, inc_path, q, k=5, n_centroids=8, n_probe=3
-    ).collect()
+    a = sim.ivf_index_topk(spark, full_path, q, k=5, n_probe=3).collect()
+    b = sim.ivf_index_topk(spark, inc_path, q, k=5, n_probe=3).collect()
     assert [(r["vec_id"], r["cosine_sim"]) for r in a] == [
         (r["vec_id"], r["cosine_sim"]) for r in b
     ]

@@ -56,12 +56,11 @@ def test_ivf_stream_ingest_equals_from_scratch(spark, tmp_path):
     ]
 
     scratch = str(tmp_path / "scratch")
-    sim.ivf_write(emb, scratch, dim=64, n_centroids=16, seed=7)
+    sim.ivf_index_init(scratch, dim=64, n_centroids=16, seed=7)
+    sim.ivf_index_fold(emb, scratch)
     rebuilt = [
         tuple(r)
-        for r in sim.ivf_topk_indexed(
-            spark, scratch, qvec, k=10, n_centroids=16, n_probe=4, seed=7
-        ).collect()
+        for r in sim.ivf_index_topk(spark, scratch, qvec, k=10, n_probe=4).collect()
     ]
     direct = [
         tuple(r)

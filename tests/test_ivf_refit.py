@@ -48,11 +48,11 @@ def test_refit_equals_from_scratch_trained_build(spark, tmp_path):
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=4, round_digits=4)
     )
     scratch = str(tmp_path / "scratch")
-    sim.ivf_kmeans_write(emb, scratch, dim=64, n_centroids=8, iters=2, seed=7)
+    trained, _ = sim.kmeans_fit(emb, 64, k=8, iters=2, seed=7)
+    sim.ivf_index_init(scratch, dim=64, n_centroids=8, seed=7, centroids=trained)
+    sim.ivf_index_fold(emb, scratch)
     assert served == _rows(
-        sim.ivf_kmeans_topk_indexed(
-            spark, scratch, qv, k=10, n_probe=4, round_digits=4
-        )
+        sim.ivf_index_topk(spark, scratch, qv, k=10, n_probe=4, round_digits=4)
     )
 
 

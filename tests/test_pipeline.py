@@ -297,9 +297,8 @@ def test_stdin_input_form_requires_input_df(spark):
 
 
 def test_distributed_sinks_flag_flips_send_file(spark, tmp_path):
-    # compile-level distributed_sinks=True -> directory writer (the
-    # scale default); explicit spark-dir: false still forces the
-    # driver-side parity append
+    # per-step spark-dir: true -> executor-parallel directory writer
+    # instead of the driver-side single-file parity append
     out_dir = tmp_path / "outdir"
     t = from_yaml(
         f"""
@@ -310,12 +309,11 @@ steps:
     reduce:
       send-file:
         path: {out_dir}
+        spark-dir: true
 """
     )
     df = events_input(spark, [("a", "1"), ("b", "2")])
-    result = compile_pipeline(
-        spark, t, input_df=df, arrival_ts=1000.0, distributed_sinks=True
-    )
+    result = compile_pipeline(spark, t, input_df=df, arrival_ts=1000.0)
     result.run_sinks()
     assert out_dir.is_dir()  # executor-written directory, not one file
     import json as _json

@@ -1,10 +1,14 @@
 """Product quantization: encoding determinism, ADC self-query
-optimality, persisted-index equivalence.  Cross-engine value parity
-is covered by test_oracle (ann_pq / ann_ivf_pq are oracled queries).
+optimality, persisted-index equivalence, and the dim guard every
+meta-pinned ANN index shares.  Cross-engine value parity is covered
+by test_oracle (ann_pq / ann_ivf_pq are oracled queries).
 """
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from cdp_spark.datapipe import similarity as sim
@@ -66,3 +70,27 @@ def test_ivf_pq_indexed_equals_inline(spark, tmp_path):
     # the index must not carry embeddings — codes-only IO is the point
     cols = spark.read.parquet(path).columns
     assert "embedding" not in cols and set(cols) >= {"vec_id", "codes", "centroid"}
+
+
+@pytest.mark.parametrize("kind", ["ivf", "lsh", "ivfpq"])
+def test_indexed_query_rejects_wrong_dim(spark, tmp_path, kind):
+    """Every persisted ANN index pins its model (dim included) in the
+    shared meta file; a query vector of another dim must fail naming
+    both dims instead of silently probing a different space."""
+    rows = [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(8)]) for i in range(12)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path / kind)
+    if kind == "ivf":
+        sim.ivf_index_init(path, dim=8, n_centroids=4)
+        sim.ivf_index_fold(emb, path)
+        query = sim.ivf_index_topk
+    elif kind == "lsh":
+        sim.lsh_write(emb, path, dim=8, n_planes=4)
+        query = sim.lsh_topk_indexed
+    else:
+        sim.ivf_pq_write(emb, path, dim=8, n_centroids=4, n_sub=2, n_codes=4)
+        query = sim.ivf_pq_topk_indexed
+    assert os.path.isfile(os.path.join(path, "_cdp_index_meta.json"))
+    assert query(spark, path, rows[0][1], k=3).count() >= 1  # right dim serves
+    with pytest.raises(ValueError, match=r"dim 6,.* pins dim 8 "):
+        query(spark, path, [1.0] * 6, k=3)

@@ -142,7 +142,9 @@ def test_streaming_count_or_time_flushes_full_windows(spark, tmp_path):
     lines = [json.dumps({"n": "s.ev", "d": i}) for i in range(5)]
     (src / "a.ndjson").write_text("\n".join(lines) + "\n")
     events = stream_ndjson_files(spark, str(src))
-    windows = streaming_count_or_time(events, max_size=2, max_seconds=3600)
+    windows = streaming_count_or_time(
+        events, max_size=2, max_seconds=3600, key_expr=F.col("n")
+    )
     q = (
         windows.writeStream.format("memory").queryName("cot_out")
         .outputMode("append").trigger(availableNow=True).start()
@@ -159,7 +161,7 @@ def test_streaming_count_or_time_flushes_full_windows(spark, tmp_path):
             break
         _time.sleep(1)
     q.stop()
-    rows = spark.sql("SELECT key, w, d FROM cot_out ORDER BY w, d").collect()
+    rows = spark.sql("SELECT key, w, n, d FROM cot_out ORDER BY w, d").collect()
     # 5 events, size-2 windows: [0,1],[2,3] flush; the partial [4]
     # stays buffered awaiting its timeout (processing-time semantics).
     assert [(r.w, r.d) for r in rows] == [(0, "0"), (0, "1"), (1, "2"), (1, "3")]
@@ -239,8 +241,6 @@ def test_streaming_count_or_time_meta_keyed_spans_batches(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from cdp_spark.streaming.count_or_time import streaming_count_or_time_meta
-
     src = tmp_path / "in"
     src.mkdir()
     # 3 files x (2 of key a + 1 of key b): key a fills its 4-window in
@@ -254,7 +254,7 @@ def test_streaming_count_or_time_meta_keyed_spans_batches(spark, tmp_path):
         (src / fname).write_text("\n".join(lines) + "\n")
 
     events = stream_ndjson_files(spark, str(src), max_files_per_trigger=1)
-    flushed = streaming_count_or_time_meta(
+    flushed = streaming_count_or_time(
         events, max_size=4, max_seconds=3600, key_expr=F.col("n")
     )
     q = (
@@ -291,8 +291,6 @@ def test_streaming_count_only_terminates_under_available_now(spark, tmp_path):
     query NEVER terminates (the r6 stream_keyed_windows hang)."""
     import json as _json
 
-    from cdp_spark.streaming.count_or_time import streaming_count_or_time_meta
-
     src = tmp_path / "cot_src"
     src.mkdir()
     for i in range(3):
@@ -301,7 +299,7 @@ def test_streaming_count_only_terminates_under_available_now(spark, tmp_path):
                 f.write(_json.dumps({"n": "ka" if j % 2 else "kb", "d": str(j)}) + "\n")
 
     events = stream_ndjson_files(spark, str(src), max_files_per_trigger=1)
-    flushed = streaming_count_or_time_meta(
+    flushed = streaming_count_or_time(
         events, max_size=4, max_seconds=0, key_expr=F.col("n")
     )
     q = (
