@@ -63,18 +63,19 @@ def main(argv: list[str] | None = None) -> int:
             from cdp_spark.events import serialize_events
             from cdp_spark.pipeline import compile_pipeline
 
-            result = compile_pipeline(spark, template)
-            result.run_sinks()
             from cdp_spark.dead_letter import ship_dead_letters
 
+            def print_events(out) -> None:
+                for row in (
+                    out.select(serialize_events(out).alias("line"), "_ord")
+                    .orderBy("_ord")
+                    .toLocalIterator()
+                ):
+                    print(row["line"])
+
+            result = compile_pipeline(spark, template)
+            result.execute(print_events)
             ship_dead_letters(result.dead_letters)
-            out = result.output
-            for row in (
-                out.select(serialize_events(out).alias("line"), "_ord")
-                .orderBy("_ord")
-                .toLocalIterator()
-            ):
-                print(row["line"])
             return 0
 
         from cdp_spark.streaming import run_pipeline_managed

@@ -83,7 +83,13 @@ class PipelineMetrics:
     def update_from(self, result: "PipelineResult") -> None:
         """Fold one executed pipeline's observations in.  Call only
         after an action has run ``result.output`` — ``Observation.get``
-        blocks until its plan executed."""
+        blocks until its plan executed.
+
+        ``incoming`` counts the rows of the compiled batch's input.
+        Under the streaming runner's stateful window path those are the
+        flushed window members, counted at flush time, not the events
+        read: events buffered in state or dropped before the window
+        are not in it."""
         self.batches += 1
         for name, obs in result.observations.items():
             count = int(obs.get.get("events", 0))

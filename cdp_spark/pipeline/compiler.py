@@ -24,9 +24,11 @@ or use the relational surface.
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -71,10 +73,35 @@ class PipelineResult:
     # step name (or "$input") -> Observation, populated when compiled
     # with observe=True; values readable after output executes.
     observations: dict[str, "Observation"] = field(default_factory=dict)
+    # Frames that more than one action reads: each sink step's input
+    # (its sink action and the forwarded output) and every step output
+    # with more than one successor.  ``execute`` persists them.
+    shared: list[DataFrame] = field(default_factory=list)
 
     def run_sinks(self) -> None:
         for _name, action in self.sinks:
             action()
+
+    def execute(self, consume: Callable[[DataFrame], None]) -> None:
+        """Run the sinks, then ``consume(output)``, with every shared
+        frame persisted for the duration, so each operator runs once:
+        a DataFrame is a plan, and each action re-executes it (window
+        flushes, Jsonnet reduces, HTTP calls) unless it is cached.
+        Spark's CacheManager substitutes cached plans when an action is
+        planned, so the sink and output frames built before the
+        ``persist`` read the cache.  The cache is released whether the
+        run succeeds or raises."""
+        held: list[DataFrame] = []
+        try:
+            for df in self.shared:
+                # two sinks after one step share one cached plan
+                if df.storageLevel == StorageLevel.NONE:
+                    held.append(df.persist())
+            self.run_sinks()
+            consume(self.output)
+        finally:
+            for df in held:
+                df.unpersist()
 
 
 @dataclass
@@ -83,6 +110,7 @@ class _Ctx:
     template: PipelineTemplate
     signature: str
     sinks: list[tuple[str, Callable[[], None]]]
+    shared: list[DataFrame] = field(default_factory=list)
 
 
 def _with_order(df: DataFrame) -> DataFrame:
@@ -290,6 +318,7 @@ def _attach_sink(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
             jsonnet_prelude=ctx.template.jsonnet_prelude,
         )
     ctx.sinks.append((step.name, action))
+    ctx.shared.append(df)
     return df
 
 
@@ -346,7 +375,11 @@ def compile_pipeline(
     streaming runner: steps the runner already applied stream-side
     (pattern filters, renames) pass input through unchanged, and the
     named windowed step consumes the WINDOW_COL/ORDER_COL already on
-    ``input_df`` instead of re-windowing within the micro-batch."""
+    ``input_df`` instead of re-windowing within the micro-batch.
+
+    Nothing is persisted here: the frames that several actions read
+    are listed on ``PipelineResult.shared`` for
+    :meth:`PipelineResult.execute`."""
     signature = get_signature(template.raw)
     ctx = _Ctx(
         spark=spark,
@@ -423,8 +456,11 @@ def compile_pipeline(
         if not progressed:  # pragma: no cover — template validation rejects cycles
             raise ValueError("pipeline steps form a cycle")
 
-    non_terminal = {dep for s in template.steps for dep in s.after}
-    terminals = [s.name for s in template.steps if s.name not in non_terminal]
+    successors = Counter(dep for s in template.steps for dep in s.after)
+    ctx.shared.extend(
+        outputs[name] for name, n in successors.items() if n > 1 and name in outputs
+    )
+    terminals = [s.name for s in template.steps if s.name not in successors]
     if terminals:
         output = outputs[terminals[0]]
         for name in terminals[1:]:
@@ -440,4 +476,5 @@ def compile_pipeline(
         sinks=ctx.sinks,
         dead_letters=dead,
         observations=observations,
+        shared=ctx.shared,
     )

@@ -33,8 +33,21 @@ Semantics vs the reference:
 - Backpressure / queueing are Spark's (trigger intervals, source rate
   limits) — not reimplemented (SURVEY §2.5).
 
+Each trigger executes its plan once.  ``foreachBatch`` hands over a
+plan, not data, and every action on it would run the stateful flush,
+the Jsonnet/jq reduces and the HTTP calls again.  The runner persists
+the batch for the trigger, and :meth:`PipelineResult.execute` persists
+every frame that a sink shares with the output (or that fans out to
+several steps): the sinks run, the output goes to ``on_batch`` or to
+the metrics count, and the cache is released whether the trigger
+succeeds or fails.
+
 Metrics: pass a :class:`cdp_spark.metrics.PipelineMetrics`; per-batch
 observed counters accumulate into the reference's counter families.
+Under the stateful window path the input of the compiled batch is the
+flushed windows, so ``incoming`` counts window members at flush time
+(events still buffered in state, or routed away before the window, are
+not counted yet or at all); per-batch paths count every event read.
 """
 
 from __future__ import annotations
@@ -257,6 +270,16 @@ def run_pipeline_stream(
         prewindow_keyed = win.window_key is not None
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # foreachBatch hands over a plan, not data: the stateful flush
+        # below it would run once per action on the batch.  Persist it
+        # for the trigger; every action reads the one execution.
+        batch_df.persist()
+        try:
+            _run_batch(batch_df, epoch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _run_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # One wall-clock read per micro-batch = the reference's
         # batch-shared arrivalTimestamp (src/event.ts:198-206).
         arrival = time.time()
@@ -302,14 +325,18 @@ def run_pipeline_stream(
             applied_steps=applied,
             prewindowed_step=prewindowed,
         )
-        result.run_sinks()
-        if on_batch is not None:
-            on_batch(result.output, epoch_id)
-        elif metrics is not None:
-            # Observations need the output plan to execute once.
-            result.output.count()
-        if metrics is not None:
-            metrics.update_from(result)
+
+        def consume(output: DataFrame) -> None:
+            if on_batch is not None:
+                on_batch(output, epoch_id)
+            elif metrics is not None:
+                # Observations downstream of every sink fill only when
+                # the output executes.
+                output.count()
+            if metrics is not None:
+                metrics.update_from(result)
+
+        result.execute(consume)
         # Forward dead letters when DEAD_LETTER_TARGET is configured
         # (src/dead-letter.ts:19-32); no-op otherwise.
         ship_dead_letters(result.dead_letters)

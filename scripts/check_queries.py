@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,19 +39,21 @@ def main() -> None:
 
     failed = []
     for name in names:
+        t0 = time.time()
         rec = compare_query(spark, con, queries, oracles, name, SF_DIR)
+        wall = f"wall={time.time() - t0:.1f}s"
         if "err" in rec:
             failed.append(name)
             print(f"{name:32s} ERROR\n{rec['err']}")
         elif rec.get("rows_only"):
-            print(f"{name:32s} rows-only spark={rec['spark_rows']}")
+            print(f"{name:32s} rows-only spark={rec['spark_rows']} {wall}")
         elif rec.get("hash_match"):
             print(f"{name:32s} OK spark={rec['spark_rows']} "
-                  f"oracle={rec['oracle_rows']}")
+                  f"oracle={rec['oracle_rows']} {wall}")
         else:
             failed.append(name)
             print(f"{name:32s} MISMATCH spark={rec['spark_rows']} "
-                  f"oracle={rec.get('oracle_rows')}")
+                  f"oracle={rec.get('oracle_rows')} {wall}")
             print(f"  {rec.get('first_diff', '')}")
     if failed:
         sys.exit(f"FAILED: {failed}")

@@ -73,8 +73,8 @@ def test_http_wrap_and_partial_line(spark, tmp_path):
     assert [(r["n"], json.loads(r["d"])) for r in rows] == [("wrapped", {"k": 1})]
 
 
-def test_http_unknown_path_404():
-    server = HttpIngestServer("/tmp/cdp_spool_404_test", endpoint="/events", port=0).start()
+def test_http_unknown_path_404(tmp_path):
+    server = HttpIngestServer(str(tmp_path / "spool"), endpoint="/events", port=0).start()
     try:
         with pytest.raises(urllib.error.HTTPError) as err:
             _post(f"http://127.0.0.1:{server.port}/other", "{}")

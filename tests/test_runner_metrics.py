@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from cdp_spark.metrics import PipelineMetrics
 from cdp_spark.pipeline import compile_pipeline, from_yaml
 from cdp_spark.streaming import run_pipeline_stream
@@ -369,3 +371,306 @@ def test_keyed_stateful_window_spans_micro_batches(spark, tmp_path):
     assert sorted(flat) == [("m.a", "10"), ("m.b", "100")]
     # the flushes required more than one micro-batch of accumulation
     assert len(batches) >= 2
+
+
+def _counting_server():
+    """Local HTTP service that counts POSTs and answers each with one
+    event holding the number of lines it received."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    posts: list[int] = []
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
+            lines = [l for l in body.decode().splitlines() if l.strip()]
+            with lock:
+                posts.append(len(lines))
+            out = json.dumps({"n": "reply", "d": len(lines)}).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/x-ndjson")
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *a):  # noqa: N802
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, posts
+
+
+HTTP_ONCE_PIPELINE = """
+name: http-once
+input:
+  tail: {path: "%s"}
+steps:
+  call:
+    window: {events: 4, seconds: 3600}
+    reduce:
+      send-receive-http: "%s"
+  store:
+    after: [call]
+    flatmap:
+      send-file: {path: "%s"}
+"""
+
+
+def _wait_for(cond, seconds=90.0):
+    import time as _time
+
+    deadline = _time.time() + seconds
+    while not cond() and _time.time() < deadline:
+        _time.sleep(0.2)
+    return cond()
+
+
+@pytest.fixture
+def data_batches_only(spark):
+    """Run only triggers that carry data.  The window timers would
+    otherwise start a no-data trigger every interval, and a stop that
+    lands inside one interrupts its batch body."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, prev)
+
+
+def _idle_stop(q):
+    """Stop a continuous query between triggers: the last trigger has
+    folded its counters in and released its cache, and the stop
+    interrupts no batch body."""
+    import time as _time
+
+    deadline = _time.time() + 30
+    while q.status["isTriggerActive"] and _time.time() < deadline:
+        _time.sleep(0.05)
+    q.stop()
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize("trigger", ["available_now", "processing_time"])
+def test_http_step_posts_each_window_once(spark, tmp_path, trigger, data_batches_only):
+    """A send-receive-http step feeding a send-file sink, with
+    PipelineMetrics: the sink and the counters read one execution of
+    the batch, so each window is POSTed exactly once per trigger (the
+    reference sends each vector once, src/step-functions/
+    send-receive-http.ts:96-143)."""
+    src = tmp_path / "in"
+    src.mkdir()
+    out_file = tmp_path / "out.ndjson"
+    (src / "a.ndjson").write_text(
+        "\n".join(json.dumps({"n": "m.x", "d": i}) for i in range(12)) + "\n"
+    )
+    srv, posts = _counting_server()
+    before = _persistent_rdds(spark)
+    try:
+        template = from_yaml(
+            HTTP_ONCE_PIPELINE
+            % (src, f"http://127.0.0.1:{srv.server_address[1]}/call", out_file)
+        )
+        metrics = PipelineMetrics()
+        if trigger == "available_now":
+            q = run_pipeline_stream(
+                template, spark=spark, metrics=metrics, available_now=True,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+            )
+            q.awaitTermination(120)
+            q.stop()
+        else:
+            q = run_pipeline_stream(
+                template, spark=spark, metrics=metrics, trigger_seconds=0.2,
+                checkpoint_dir=str(tmp_path / "ckpt"),
+            )
+            try:
+                assert _wait_for(
+                    lambda: metrics.step_events_total.get(("store", "outgoing"), 0) >= 3
+                )
+            finally:
+                _idle_stop(q)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    windows = 3
+    assert sorted(posts) == [4] * windows
+    lines = [json.loads(l) for l in out_file.read_text().splitlines()]
+    assert [(e["n"], e["d"]) for e in lines] == [("reply", 4)] * windows
+    assert metrics.pipeline_events_total["incoming"] == 12
+    assert metrics.step_events_total[("call", "outgoing")] == windows
+    assert metrics.step_events_total[("store", "outgoing")] == windows
+    assert _persistent_rdds(spark) == before
+
+
+KEYED_JSONNET_PIPELINE = """
+name: keyed-jsonnet-window
+input:
+  tail: {path: "%s"}
+steps:
+  windows:
+    match/drop: "m.#"
+    window: {events: 4, seconds: 3600, key: data.k}
+    reduce:
+      send-receive-jsonnet: |-
+        function(events) {
+          n: "window",
+          d: {k: events[0].d.k, c: std.length(events), s: std.sum([e.d.v for e in events])},
+        }
+  store:
+    after: [windows]
+    flatmap:
+      send-file: {path: "%s"}
+"""
+
+
+def _keyed_files(src, n_files=3):
+    """Two keys, 2+1+1 events each over three files (one window per key
+    fills across the trigger boundaries) plus one routed-away event
+    per file."""
+    vals = {"a": iter(range(1, 5)), "b": iter(range(10, 50, 10))}
+    for i, c in enumerate([2, 1, 1][:n_files]):
+        rows = [
+            {"n": "m.ev", "d": {"k": k, "v": next(vals[k])}}
+            for k in ("a", "b") for _ in range(c)
+        ] + [{"n": "other", "d": {"k": "a", "v": 999}}]
+        (src / f"f{i}.ndjson").write_text("\n".join(json.dumps(r) for r in rows) + "\n")
+
+
+def test_stateful_runner_counters_and_cache_release(spark, tmp_path, data_batches_only):
+    """The stateful window path under a continuous trigger: keyed
+    count-or-time window, Jsonnet reduce, send-file sink, checkpoint.
+    The counters and sink lines are the per-window results, and no
+    cached block outlives a trigger."""
+    from cdp_spark.streaming.sources import stream_ndjson_files
+
+    src = tmp_path / "in"
+    src.mkdir()
+    out_file = tmp_path / "out.ndjson"
+    _keyed_files(src)
+    template = from_yaml(KEYED_JSONNET_PIPELINE % (src, out_file))
+    metrics = PipelineMetrics()
+    before = _persistent_rdds(spark)
+    q = run_pipeline_stream(
+        template,
+        input_stream=stream_ndjson_files(spark, str(src), max_files_per_trigger=1),
+        metrics=metrics,
+        trigger_seconds=0.2,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        assert _wait_for(
+            lambda: metrics.step_events_total.get(("store", "outgoing"), 0) >= 2
+        )
+    finally:
+        _idle_stop(q)
+
+    got = sorted(
+        (d["k"], d["c"], d["s"])
+        for d in (json.loads(l)["d"] for l in out_file.read_text().splitlines())
+    )
+    assert got == [("a", 4, 10), ("b", 4, 100)]
+    # Under the stateful path `incoming` counts the flushed window
+    # members, not the events read (12 offered, 3 routed away).
+    assert metrics.pipeline_events_total["incoming"] == 8
+    assert metrics.step_events_total[("windows", "outgoing")] == 2
+    assert metrics.step_events_total[("store", "outgoing")] == 2
+    assert _persistent_rdds(spark) == before
+
+
+def test_stateful_runner_sink_error_propagates_and_releases_cache(
+    spark, tmp_path, data_batches_only
+):
+    """A sink that raises fails the query with its error, and the
+    trigger's cached frames are released on the way out."""
+    from pyspark.errors import StreamingQueryException
+
+    from cdp_spark.streaming.sources import stream_ndjson_files
+
+    src = tmp_path / "in"
+    src.mkdir()
+    out_dir = tmp_path / "is_a_directory"
+    out_dir.mkdir()
+    _keyed_files(src)
+    # The first sink executes the batch (and fills the caches); the
+    # second appends to a directory, which raises.
+    template = from_yaml(
+        KEYED_JSONNET_PIPELINE % (src, tmp_path / "out.ndjson")
+        + """
+  broken:
+    after: [store]
+    flatmap:
+      send-file: {path: "%s"}
+"""
+        % out_dir
+    )
+    before = _persistent_rdds(spark)
+    q = run_pipeline_stream(
+        template,
+        input_stream=stream_ndjson_files(spark, str(src), max_files_per_trigger=1),
+        metrics=PipelineMetrics(),
+        trigger_seconds=0.2,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match="IsADirectoryError"):
+            q.awaitTermination(120)
+    finally:
+        q.stop()
+    assert _persistent_rdds(spark) == before
+
+
+def test_execute_runs_each_step_once_under_fan_out(spark, tmp_path):
+    """Batch ``PipelineResult.execute``: an HTTP step read by two sinks
+    and by the output is called once per window, the two sinks (one
+    cached plan) both write every window, and nothing stays cached."""
+    rows = [("m.x", str(i), None) for i in range(8)]
+    df = spark.createDataFrame(
+        rows, "n string, d string, t array<struct<i:double,p:string,h:string>>"
+    )
+    srv, posts = _counting_server()
+    before = _persistent_rdds(spark)
+    try:
+        template = from_yaml(
+            f"""
+name: fan-out
+input:
+  stdin:
+steps:
+  call:
+    window: {{events: 4, seconds: 3600}}
+    reduce:
+      send-receive-http: "http://127.0.0.1:{srv.server_address[1]}/call"
+  a:
+    after: [call]
+    flatmap:
+      send-file: {{path: "{tmp_path / 'a.ndjson'}"}}
+  b:
+    after: [call]
+    flatmap:
+      send-file: {{path: "{tmp_path / 'b.ndjson'}"}}
+"""
+        )
+        result = compile_pipeline(spark, template, input_df=df, observe=True)
+        got = []
+        result.execute(lambda out: got.extend(r.d for r in out.collect()))
+    finally:
+        srv.shutdown()
+        srv.server_close()
+
+    assert posts == [4, 4]
+    assert got == ["4"] * 4  # two windows, forwarded by both sinks
+    for name in ("a", "b"):
+        lines = (tmp_path / f"{name}.ndjson").read_text().splitlines()
+        assert [json.loads(l)["d"] for l in lines] == [4, 4]
+    metrics = PipelineMetrics()
+    metrics.update_from(result)
+    assert metrics.pipeline_events_total["incoming"] == 8
+    assert metrics.step_events_total[("call", "outgoing")] == 2
+    assert _persistent_rdds(spark) == before
