@@ -328,11 +328,6 @@ def c4_kept_lines(col: Column, min_words: int = C4_MIN_LINE_WORDS) -> Column:
     return F.filter(_trimmed_lines(col), keep)
 
 
-def c4_clean(col: Column, min_words: int = C4_MIN_LINE_WORDS) -> Column:
-    """The C4-cleaned text: kept lines re-joined with newlines."""
-    return F.array_join(c4_kept_lines(col, min_words), "\n")
-
-
 def c4_signals(col: Column, min_words: int = C4_MIN_LINE_WORDS) -> Column:
     """C4 page-level signals as a struct: n_lines, n_kept_lines,
     n_sentences (terminal-punct occurrences in the kept text),

@@ -35,25 +35,10 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """Rough BPE-style subword count: word-piece regex splits on
-    letter/digit/punct boundaries, ~ the usual tokens≈chars/4 check."""
-    pieces = F.split(F.trim(col), r"[^A-Za-z0-9]+|(?<=[a-z])(?=[A-Z])")
-    return F.size(F.filter(pieces, lambda p: F.length(p) > 0))
-
-
 def avg_token_length(col: Column) -> Column:
     tk = tokens(col)
     total = F.aggregate(tk, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
     return F.when(F.size(tk) > 0, total.cast("double") / F.size(tk)).otherwise(F.lit(0.0))
-
-
-def punct_ratio(col: Column) -> Column:
-    """Fraction of characters that are sentence punctuation."""
-    n_punct = F.length(col) - F.length(F.regexp_replace(col, r"[.!?,;:]", ""))
-    return F.when(F.length(col) > 0, n_punct.cast("double") / F.length(col)).otherwise(
-        F.lit(0.0)
-    )
 
 
 def stopword_ratio(col: Column, stopwords: list[str] | None = None) -> Column:
@@ -102,20 +87,6 @@ def fingerprint(col: Column) -> Column:
     """Stable document fingerprint (hex md5 — same value DuckDB's
     md5() produces, so it doubles as a cross-engine key)."""
     return F.md5(col)
-
-
-def rolling_fingerprint(col: Column, window: int = 8) -> Column:
-    """Winnowing-style content fingerprint: min xxhash64 over rolling
-    token windows — robust to small edits, all JVM-side."""
-    tk = tokens(col)
-    n = F.size(tk)
-    starts = F.when(n >= window, F.sequence(F.lit(1), n - window + 1)).otherwise(
-        F.when(n > 0, F.array(F.lit(1))).otherwise(F.array().cast("array<int>"))
-    )
-    grams = F.transform(
-        starts, lambda i: F.xxhash64(F.array_join(F.slice(tk, i, window), " "))
-    )
-    return F.array_min(grams)
 
 
 def unigram_logprob(df, text_col: str = "text", id_col: str = "doc_id",

@@ -61,11 +61,6 @@ _VALID_NAME_REGEX = r"^[A-Za-z0-9\-_$:]+(\.[A-Za-z0-9\-_$:]+)*$"
 WrapDirective = Union[str, dict, None]
 
 
-def valid_name_col(col: Column) -> Column:
-    """Boolean Column: is this a valid event name (src/pattern.ts:46-48)."""
-    return col.isNotNull() & col.rlike(_VALID_NAME_REGEX)
-
-
 def validate_wrap(wrap: WrapDirective) -> None:
     """Port of validateWrap (src/event.ts:340-374)."""
     if wrap is None:
@@ -251,30 +246,24 @@ def read_ndjson(
     return parse_lines(spark.read.text(path), "value", wrap)
 
 
+# One NDJSON line per event, as ONE SQL expression (a single JVM
+# parse).  Also embedded in the per-window vector aggregate
+# (operators.transform._collect_vectors), so every wire shape of an
+# event comes from this one encoder.  The name is JSON-string-encoded
+# (event names can't contain quotes/backslashes, but stay correct
+# regardless); the payload embeds as raw JSON, not a quoted string.
+EVENT_LINE_SQL = (
+    "concat('{\"n\":', substring(to_json(array(n)), 2, length(to_json(array(n))) - 2), "
+    "coalesce(concat(',\"d\":', d), ''), "
+    "',\"t\":', coalesce(to_json(t), '[]'), '}')"
+)
+
+
 def serialize_events(df: DataFrame) -> Column:
-    """One NDJSON line per event, reference wire shape
+    """One NDJSON line per event of ``df``, reference wire shape
     (Event.toJSON, src/event.ts:122-128): key order n, d, t; ``d``
-    omitted when absent; ``t`` always present (empty array when null).
-
-    Built by string concatenation so the payload embeds as raw JSON
-    rather than a quoted string.
-    """
-    return F.concat(
-        F.lit('{"n":'),
-        # JSON-string-encode the name (event names can't contain
-        # quotes/backslashes, but stay correct regardless).
-        F.expr('substring(to_json(array(n)), 2, length(to_json(array(n))) - 2)'),
-        F.coalesce(F.concat(F.lit(',"d":'), F.col("d")), F.lit("")),
-        F.lit(',"t":'),
-        F.coalesce(F.to_json(F.col("t")), F.lit("[]")),
-        F.lit("}"),
-    )
-
-
-def write_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write events as NDJSON part files (send-file analog,
-    src/step-functions/send-file.ts:80-135)."""
-    df.select(serialize_events(df).alias("value")).write.mode(mode).text(path)
+    omitted when absent; ``t`` always present (empty array when null)."""
+    return F.expr(EVENT_LINE_SQL)
 
 
 def stamp_new_events(

@@ -10,21 +10,28 @@ or, with ``jq-expr``, each value the jq program produces
 
 Driver-side sinks (stdout, single-file append) iterate with
 ``toLocalIterator`` — bounded memory, used for parity/debug.  The
-scale path for files is ``dir=True`` (distributed text write), and
-send-http posts from executors via ``foreachPartition``.
+scale path for files is the ``spark-dir`` step option (distributed
+text write), and send-http posts from executors via
+``foreachPartition`` through the one HTTP client
+(:mod:`cdp_spark.io.http_client`).
 """
 
 from __future__ import annotations
 
 import json
 import sys
+from itertools import islice
 from typing import Callable, Iterable, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..events import serialize_events
-from ..operators.transform import jq_produced_values, jsonnet_produced_values
+from ..operators.transform import produced_values
+from .http_client import poster
+
+# send-http without an expr posts NDJSON bodies of at most this many lines.
+NDJSON_BATCH_LINES = 500
 
 
 def sink_payload_lines(
@@ -38,14 +45,9 @@ def sink_payload_lines(
     """DataFrame of one output line per emitted value, with an order
     column: events as NDJSON, or each jq/jsonnet-produced value
     verbatim when an expr is given (src/step-functions/index.ts:35-48)."""
-    if jq_expr is None and jsonnet_expr is None:
+    produced = produced_values(df, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude, order_col)
+    if produced is None:
         return df.select(F.col(order_col).alias("_ord"), serialize_events(df).alias("line"))
-    if jsonnet_expr is not None:
-        produced = jsonnet_produced_values(
-            df, jsonnet_expr, order_col=order_col, prelude=jsonnet_prelude
-        )
-    else:
-        produced = jq_produced_values(df, jq_expr, order_col=order_col, prelude=jq_prelude)
 
     # Reference rule for every expr-sink (send-stdout.ts:75-78,
     # send-file.ts:95-98, http-client.ts sendThing): STRING values are
@@ -118,55 +120,20 @@ def make_http_action(
     target: str,
     method: str = "POST",
     headers: Optional[dict[str, str]] = None,
-    max_retries: int = 4,
-    backoff_factor: float = 1.0,
-    timeout: float = 60.0,
-    batch_size: int = 500,
 ) -> Callable[[], None]:
-    """send-http fire-and-forget (src/step-functions/send-http.ts:88-154)
-    with 5xx retry + exponential backoff (src/io/http-client.ts:28-56).
-    Executes on executors via foreachPartition; concurrency is the
-    partition count (the reference's 10-in-flight window becomes
+    """send-http fire-and-forget (src/step-functions/send-http.ts:88-154):
+    the lines go out as NDJSON bodies of up to ``NDJSON_BATCH_LINES``
+    lines.  Executes on executors via foreachPartition; concurrency is
+    the partition count (the reference's 10-in-flight window becomes
     cluster parallelism)."""
+    post = poster(method, target, {"Content-Type": "application/x-ndjson", **(headers or {})})
 
-    def action() -> None:
-        hdrs = {"Content-Type": "application/x-ndjson", **(headers or {})}
+    def send_partition(rows) -> None:  # noqa: ANN001
+        rows = iter(rows)
+        while batch := [row["line"] for row in islice(rows, NDJSON_BATCH_LINES)]:
+            post(("\n".join(batch) + "\n").encode())
 
-        def send_partition(rows) -> None:  # noqa: ANN001
-            import time
-
-            import requests
-
-            session = requests.Session()
-            buf: list[str] = []
-
-            def flush() -> None:
-                if not buf:
-                    return
-                body = ("\n".join(buf) + "\n").encode()
-                for attempt in range(max_retries + 1):
-                    try:
-                        resp = session.request(method, target, data=body, headers=hdrs, timeout=timeout)
-                        if resp.status_code >= 500 and attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                            continue
-                        break
-                    except requests.RequestException:
-                        if attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                        else:
-                            break
-                buf.clear()
-
-            for row in rows:
-                buf.append(row["line"])
-                if len(buf) >= batch_size:
-                    flush()
-            flush()
-
-        lines_df.select("line").foreachPartition(send_partition)
-
-    return action
+    return lambda: lines_df.select("line").foreachPartition(send_partition)
 
 
 def make_http_value_action(
@@ -174,9 +141,6 @@ def make_http_value_action(
     target: str,
     method: str = "POST",
     headers: Optional[dict[str, str]] = None,
-    max_retries: int = 4,
-    backoff_factor: float = 1.0,
-    timeout: float = 60.0,
 ) -> Callable[[], None]:
     """send-http with a jq/jsonnet expr: ONE request per produced
     value, body = the value itself (raw for strings — already
@@ -184,36 +148,19 @@ def make_http_value_action(
     implicit Content-Type (http-client.ts sendThing:111-124).  This
     is how e.g. the filebeat-opensearch example assembles a single
     _bulk NDJSON body per window."""
+    post = poster(method, target, dict(headers or {}))
 
-    def action() -> None:
-        hdrs = dict(headers or {})
+    def send_partition(rows) -> None:  # noqa: ANN001
+        for row in rows:
+            post(row["line"].encode())
 
-        def send_partition(rows) -> None:  # noqa: ANN001
-            import time
+    return lambda: lines_df.select("line").foreachPartition(send_partition)
 
-            import requests
 
-            session = requests.Session()
-            for row in rows:
-                body = row["line"].encode()
-                for attempt in range(max_retries + 1):
-                    try:
-                        resp = session.request(
-                            method, target, data=body, headers=hdrs, timeout=timeout
-                        )
-                        if resp.status_code >= 500 and attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                            continue
-                        break
-                    except requests.RequestException:
-                        if attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                        else:
-                            break
-
-        lines_df.select("line").foreachPartition(send_partition)
-
-    return action
+def _iter_values(produced: DataFrame) -> Iterable[str]:
+    """Produced values (JSON text) in (window, index) order, driver-side."""
+    for row in produced.orderBy("_worder", "_idx").select("_val").toLocalIterator():
+        yield row["_val"]
 
 
 # expose-http buffers by step name, so tests / embedding apps can query
@@ -255,15 +202,10 @@ def make_expose_action(
         if buffer is None or buffer.size != responses:
             buffer = ExposeBuffer(responses)
             _EXPOSE_BUFFERS[step_name] = buffer
-        if jq_expr is not None or jsonnet_expr is not None:
-            if jsonnet_expr is not None:
-                produced = jsonnet_produced_values(df, jsonnet_expr, prelude=jsonnet_prelude)
-            else:
-                produced = jq_produced_values(df, jq_expr, prelude=jq_prelude)
-            for row in (
-                produced.orderBy("_worder", "_idx").select("_val").toLocalIterator()
-            ):
-                buffer.register_value(row["_val"])
+        produced = produced_values(df, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude)
+        if produced is not None:
+            for val in _iter_values(produced):
+                buffer.register_value(val)
         else:
             from .brokers import _iter_vectors
 
@@ -313,18 +255,9 @@ def make_broker_action(
     opts = options or {}
 
     def action() -> None:
-        if jq_expr is not None or jsonnet_expr is not None:
-            if jsonnet_expr is not None:
-                produced = jsonnet_produced_values(
-                    df, jsonnet_expr, prelude=jsonnet_prelude
-                )
-            else:
-                produced = jq_produced_values(df, jq_expr, prelude=jq_prelude)
-            vals = (
-                row["_val"]
-                for row in produced.orderBy("_worder", "_idx").select("_val").toLocalIterator()
-            )
-            brokers.publish_values(kind, vals, opts, pipeline_name, step_name)
+        produced = produced_values(df, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude)
+        if produced is not None:
+            brokers.publish_values(kind, _iter_values(produced), opts, pipeline_name, step_name)
         else:
             brokers.publish_events(kind, df, opts, pipeline_name, step_name)
 

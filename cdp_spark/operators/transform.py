@@ -11,9 +11,10 @@ external program/service; its output becomes the new events.
   exactly one output line, keeping window attribution deterministic.
 - send-receive-http (src/step-functions/send-receive-http.ts:96-143):
   POST each vector as NDJSON; the response body becomes the new
-  events; request errors yield an empty vector.  Partition-level
-  batched HTTP with retry/backoff (src/io/http-client.ts:28-56) —
-  this is the external-model-inference hook.
+  events; request errors yield an empty vector.  Requests go through
+  the one HTTP client (:mod:`cdp_spark.io.http_client`, retry/backoff
+  as src/io/http-client.ts:28-56) — this is the external-model-
+  inference hook.
 - send-receive-jsonnet (src/step-functions/send-receive-jsonnet.ts:70-97
   -> stream-jsonnet/main.go:18-70): same adapter shape as jq, but the
   ``function(events)`` program runs in-process on each executor via
@@ -32,48 +33,49 @@ import subprocess
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..events import TRACE_TYPE, WrapDirective, validate_wrap, variants_to_events
+from ..events import (
+    EVENT_LINE_SQL,
+    TRACE_TYPE,
+    WrapDirective,
+    validate_wrap,
+    variants_to_events,
+)
 from ..windows import WINDOW_COL
 
 
-def _serialized_vector_col(order_col: str) -> Column:
-    """Array-of-events JSON for one window, in arrival order: the
-    vector-in wire shape the reference feeds to jq/HTTP.  Built as ONE
-    F.expr (single JVM parse) instead of ~25 Column-builder py4j round
-    trips — this runs inside every per-micro-batch pipeline compile
-    (optimization r17); the parsed tree is the prior Column form's."""
-    nm = "to_json(array(e.n))"
-    return F.expr(
-        "concat('[', array_join(transform(array_sort(collect_list("
-        f"struct(`{order_col}` AS o, n, d, "
-        "coalesce(to_json(t), '[]') AS t))), "
-        "e -> concat('{\"n\":', "
-        f"substring({nm}, 2, length({nm}) - 2), "
-        "CASE WHEN e.d IS NOT NULL THEN concat(',\"d\":', e.d) "
-        "ELSE '' END, "
-        "',\"t\":', e.t, '}')), ','), ']')"
-    )
-
-
-def _collect_vectors(df: DataFrame, order_col: str) -> DataFrame:
-    """(window id, min order, vector-json) — one row per window."""
+def _collect_vectors(df: DataFrame, order_col: str, ndjson: bool = False) -> DataFrame:
+    """(window id, min order, ``_vec``) — one row per window.  ``_vec``
+    holds the window's event lines (:data:`EVENT_LINE_SQL`) in arrival
+    order: as a JSON array, the vector-in shape jq/Jsonnet read, or
+    with ``ndjson`` newline-joined with a trailing newline, the
+    send-receive-http body.  One F.expr (a single JVM parse) — this
+    runs inside every per-micro-batch pipeline compile."""
     w = WINDOW_COL if WINDOW_COL in df.columns else None
     grouped = df.groupBy(F.col(w).alias("_w")) if w else df.groupBy(F.lit(1).alias("_w"))
-    return grouped.agg(
-        F.min(order_col).alias("_worder"),
-        _serialized_vector_col(order_col).alias("_vec"),
+    lines = (
+        "transform(array_sort(collect_list("
+        f"struct(`{order_col}` AS o, {EVENT_LINE_SQL} AS line))), e -> e.line)"
     )
+    vec = (
+        f"concat(array_join({lines}, '\\n'), '\\n')"
+        if ndjson
+        else f"concat('[', array_join({lines}, ','), ']')"
+    )
+    return grouped.agg(F.min(order_col).alias("_worder"), F.expr(vec).alias("_vec"))
 
 
 def _values_to_events(
-    produced: DataFrame, wrap: WrapDirective, max_array_depth: int = 5
+    produced: DataFrame,
+    wrap: WrapDirective,
+    max_array_depth: int = 5,
+    order: tuple[str, ...] = ("_worder", "_idx"),
 ) -> DataFrame:
-    """produced: (_worder, _idx, _val JSON-text) -> event rows with a
-    deterministic order column ``_ord`` (window order, then output
-    index)."""
+    """produced: (``order`` columns, _val JSON-text) -> event rows with
+    a deterministic order column ``_ord`` (window order, then output
+    index, then any further ``order`` column)."""
     validate_wrap(wrap)
     # The order column is the lexicographic struct (window order,
     # output index) — NOT a packed `_worder * 2^20 + _idx` long
@@ -86,7 +88,7 @@ def _values_to_events(
     # order, unique.  Consumers needing a dense long derive it with
     # one row_number over this column (the pipeline compiler's
     # _renumber already does exactly that).
-    ord_col = F.struct("_worder", "_idx").alias("_ord")
+    ord_col = F.struct(*order).alias("_ord")
     if wrap is not None:
         name = wrap if isinstance(wrap, str) else wrap["name"]
         return produced.select(
@@ -177,17 +179,14 @@ def send_receive_http(
     method: str = "POST",
     headers: Optional[dict[str, str]] = None,
     wrap: WrapDirective = None,
-    max_retries: int = 4,
-    backoff_factor: float = 1.0,
-    timeout: float = 60.0,
     jq_expr: Optional[str] = None,
     jq_prelude: Optional[str] = None,
     jsonnet_expr: Optional[str] = None,
     jsonnet_prelude: Optional[str] = None,
 ) -> DataFrame:
-    """POST each window vector as NDJSON to ``target``; the response
-    body (NDJSON of values) becomes the new events.  Errors (network,
-    non-2xx after retries) produce an empty vector, matching
+    """POST each window vector as NDJSON to ``target``; each line of
+    the response body (NDJSON of values) becomes a new event.  Errors
+    (network, non-2xx after retries) produce an empty vector, matching
     src/step-functions/send-receive-http.ts:96-143.
 
     With ``jq_expr`` / ``jsonnet_expr`` the vector is first piped
@@ -196,147 +195,55 @@ def send_receive_http(
     optional pre-transform, send-receive-http.ts:104-121 — e.g. the
     external-processing example posts ``map(.d)`` as a single JSON
     array instead of NDJSON).
+
+    Both modes are one ``mapInPandas`` over (window, value, body)
+    rows; output order is (window, value, response line).
     """
-    import requests  # gated: available in this env, but optional
+    # imported here: cdp_spark.io's sinks import this module
+    from ..io.http_client import ndjson_values, poster
 
     validate_wrap(wrap)
-    if jq_expr is not None and jsonnet_expr is not None:
-        raise ValueError("jq-expr and jsonnet-expr are mutually exclusive")
-    if jq_expr is not None or jsonnet_expr is not None:
-        if jq_expr is not None:
-            produced = jq_produced_values(df, jq_expr, order_col, jq_prelude)
-        else:
-            produced = jsonnet_produced_values(df, jsonnet_expr, order_col, jsonnet_prelude)
-        return _http_per_value(
-            produced, target, method, headers, wrap, max_retries, backoff_factor, timeout
+    produced = produced_values(df, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude, order_col)
+    if produced is None:
+        bodies = _collect_vectors(df, order_col, ndjson=True).select(
+            "_worder", F.lit(0).cast("long").alias("_idx"), F.col("_vec").alias("_body")
         )
-    vectors = _collect_vectors(df, order_col)
-    hdrs = {"Content-Type": "application/x-ndjson", **(headers or {})}
+        content_type = "application/x-ndjson"
+    else:
+        bodies = produced.select("_worder", "_idx", F.col("_val").alias("_body"))
+        content_type = "application/json"
+    post = poster(method, target, {"Content-Type": content_type, **(headers or {})})
 
     def call(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        session = requests.Session()
         for pdf in batches:
-            rows = []
-            for worder, vec in zip(pdf["_worder"].tolist(), pdf["_vec"].tolist()):
-                body = "\n".join(json.dumps(e) for e in json.loads(vec)) + "\n"
-                text = None
-                for attempt in range(max_retries + 1):
-                    try:
-                        resp = session.request(
-                            method, target, data=body.encode(), headers=hdrs, timeout=timeout
-                        )
-                        if resp.status_code >= 500 and attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                            continue
-                        if 200 <= resp.status_code < 300:
-                            text = resp.text
-                        break
-                    except requests.RequestException:
-                        if attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                        else:
-                            break
-                if text is None:
-                    continue
-                idx = 0
-                for line in text.splitlines():
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        val = json.loads(line)
-                    except ValueError:
-                        continue
-                    rows.append(
-                        (worder, idx, json.dumps(val, separators=(",", ":"), ensure_ascii=False))
-                    )
-                    idx += 1
-            yield pd.DataFrame(rows, columns=["_worder", "_idx", "_val"])
-
-    produced = vectors.mapInPandas(call, schema="_worder long, _idx long, _val string")
-    return _values_to_events(produced, wrap)
-
-
-def _http_per_value(
-    produced: DataFrame,
-    target: str,
-    method: str,
-    headers: Optional[dict[str, str]],
-    wrap: WrapDirective,
-    max_retries: int,
-    backoff_factor: float,
-    timeout: float,
-) -> DataFrame:
-    """One HTTP request per pre-transformed value: body = the value's
-    JSON text; each response line becomes a produced value.  Output
-    order is (window, value idx, response line), densely renumbered
-    before the shared value→event path."""
-    import requests
-
-    hdrs = {"Content-Type": "application/json", **(headers or {})}
-
-    def call(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        session = requests.Session()
-        for pdf in batches:
-            rows = []
-            for worder, idx, val in zip(
-                pdf["_worder"].tolist(), pdf["_idx"].tolist(), pdf["_val"].tolist()
-            ):
-                text = None
-                for attempt in range(max_retries + 1):
-                    try:
-                        resp = session.request(
-                            method, target, data=val.encode(), headers=hdrs, timeout=timeout
-                        )
-                        if resp.status_code >= 500 and attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                            continue
-                        if 200 <= resp.status_code < 300:
-                            text = resp.text
-                        break
-                    except requests.RequestException:
-                        if attempt < max_retries:
-                            time.sleep(backoff_factor * (2**attempt))
-                        else:
-                            break
-                if text is None:
-                    continue
-                line_no = 0
-                for line in text.splitlines():
-                    line = line.strip()
-                    if not line:
-                        continue
-                    try:
-                        out_val = json.loads(line)
-                    except ValueError:
-                        continue
-                    rows.append(
-                        (
-                            worder,
-                            idx,
-                            line_no,
-                            json.dumps(out_val, separators=(",", ":"), ensure_ascii=False),
-                        )
-                    )
-                    line_no += 1
+            rows = [
+                (worder, idx, line, val)
+                for worder, idx, body in zip(pdf["_worder"], pdf["_idx"], pdf["_body"])
+                for line, val in enumerate(ndjson_values(post(body.encode())))
+            ]
             yield pd.DataFrame(rows, columns=["_worder", "_idx", "_line", "_val"])
 
-    raw = produced.mapInPandas(
-        call, schema="_worder long, _idx long, _line long, _val string"
-    )
-    # Dense renumber (same rationale as _values_to_events): fold the
-    # three-level order into the (_worder, _idx) contract it expects.
-    from pyspark.sql.window import Window
+    replies = bodies.mapInPandas(call, schema="_worder long, _idx long, _line long, _val string")
+    return _values_to_events(replies, wrap, order=("_worder", "_idx", "_line"))
 
-    renumbered = raw.withColumn(
-        "_idx2",
-        F.row_number().over(Window.partitionBy("_worder").orderBy("_idx", "_line")).cast("long"),
-    ).select("_worder", F.col("_idx2").alias("_idx"), "_val")
-    return _values_to_events(renumbered, wrap)
+
+def produced_values(
+    df: DataFrame,
+    jq_expr: Optional[str] = None,
+    jq_prelude: Optional[str] = None,
+    jsonnet_expr: Optional[str] = None,
+    jsonnet_prelude: Optional[str] = None,
+    order_col: str = "_ord",
+) -> Optional[DataFrame]:
+    """The values a step's ``jq-expr`` or ``jsonnet-expr`` produces
+    over each window vector, as (_worder, _idx, _val JSON-text); None
+    when the step sets neither.  Template validation rejects a step
+    that sets both."""
+    if jsonnet_expr is not None:
+        return jsonnet_produced_values(df, jsonnet_expr, order_col, jsonnet_prelude)
+    if jq_expr is not None:
+        return jq_produced_values(df, jq_expr, order_col, jq_prelude)
+    return None
 
 
 def jsonnet_produced_values(

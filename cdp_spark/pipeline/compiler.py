@@ -263,8 +263,6 @@ def _attach_sink(ctx: _Ctx, step: StepDef, df: DataFrame) -> DataFrame:
     fn = step.function_name
     opts = step.function_options
     o = opts if isinstance(opts, dict) else {}
-    if o.get("jq-expr") is not None and o.get("jsonnet-expr") is not None:
-        raise ValueError(f"step '{step.name}': jq-expr and jsonnet-expr are mutually exclusive")
     lines = sink_payload_lines(
         df,
         ORDER_COL,

@@ -4,7 +4,8 @@ Parity with the reference front-end:
 - template schema (src/api.ts:186-235),
 - per-step invariants (src/api.ts:254-293): at most one of
   match/drop|match/pass, exactly one of flatmap|reduce, valid
-  patterns, window bounds with string coercion,
+  patterns, window bounds with string coercion, at most one of
+  jq-expr|jsonnet-expr,
 - DAG soundness (src/pipeline.ts:55-99): reserved $input name, unique
   step names, dangling references, cycle detection,
 - ${VAR} environment substitution (src/utils.ts:105-120) applied by
@@ -92,6 +93,14 @@ def _check(cond: bool, message: str) -> None:
 
 
 def _validate_step_function(step: str, fn: str, options: Any) -> None:
+    _check(
+        not (
+            isinstance(options, dict)
+            and options.get("jq-expr") is not None
+            and options.get("jsonnet-expr") is not None
+        ),
+        f"step '{step}' {fn}: jq-expr and jsonnet-expr are mutually exclusive",
+    )
     if fn == "rename":
         _check(isinstance(options, dict), f"step '{step}' rename options must be a mapping")
         extra = set(options) - {"replace", "append", "prepend"}

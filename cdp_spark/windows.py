@@ -48,86 +48,6 @@ def with_arrival_order(
     )
 
 
-def global_dense_index(
-    df: DataFrame,
-    order_cols: Sequence[str],
-    out_col: str = "_ord",
-    small_threshold: int = 1 << 16,
-) -> DataFrame:
-    """Distributed ``row_number() OVER (ORDER BY order_cols)`` (1-based)
-    for UNIQUE keys, without the single-partition exchange.
-
-    The input plan is materialized eagerly (localCheckpoint) before
-    anything else touches it: both ``repartitionByRange``'s range
-    sampling and the partition-count pass would otherwise re-execute
-    upstream — which double-runs side-effecting stages (jq/jsonnet
-    subprocesses) and double-fires observed CollectMetrics counters.
-    After the checkpoint every downstream pass reads cached blocks.
-
-    Small inputs (``<= small_threshold`` rows, known exactly from the
-    checkpoint) take a zero-shuffle path: coalesce(1) + an in-partition
-    stamp.  Large inputs range-partition on the keys (partitions are
-    globally ordered), one mapInPandas pass stamps each row with its
-    partition id and a local running index, and the per-partition
-    counts — one row per partition, fetched to the driver exactly as
-    RDD.zipWithIndex does — become cumulative offsets broadcast back
-    into a tiny join.  Determinism follows from sortWithinPartitions +
-    key uniqueness.  This is the zipWithIndex pattern expressed on
-    DataFrames — the ordered-output path that survives result sizes
-    where one global sort task would not."""
-    from pyspark import TaskContext
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    for reserved in ("_gdi_pid", "_gdi_lidx", "_gdi_off"):
-        if reserved in df.columns:
-            raise ValueError(f"column {reserved} is reserved")
-    df = df.localCheckpoint(eager=True)
-    n = df.count()  # cached blocks — a metadata-cheap job
-
-    schema = StructType(
-        list(df.schema)
-        + [StructField("_gdi_pid", LongType()), StructField("_gdi_lidx", LongType())]
-    )
-
-    def index_partition(batches):
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        i = 0
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["_gdi_pid"] = pid
-            pdf["_gdi_lidx"] = list(range(i, i + len(pdf)))
-            i += len(pdf)
-            yield pdf
-
-    if n <= small_threshold:
-        # No range sampling, no shuffle, no offsets join: one narrow
-        # coalesce and a single stamping pass.
-        part = df.coalesce(1).sortWithinPartitions(*order_cols)
-        return (
-            part.mapInPandas(index_partition, schema=schema)
-            .withColumn(out_col, (F.col("_gdi_lidx") + 1).cast("long"))
-            .drop("_gdi_pid", "_gdi_lidx")
-        )
-
-    part = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    indexed = part.mapInPandas(index_partition, schema=schema)
-    counts = sorted(
-        (r["_gdi_pid"], r["_gdi_n"])
-        for r in indexed.groupBy("_gdi_pid").agg(F.count(F.lit(1)).alias("_gdi_n")).collect()
-    )
-    offsets, acc = [], 0
-    for pid, cnt in counts:
-        offsets.append((pid, acc))
-        acc += cnt
-    off_df = df.sparkSession.createDataFrame(offsets, "_gdi_pid long, _gdi_off long")
-    return (
-        indexed.join(F.broadcast(off_df), "_gdi_pid")
-        .withColumn(out_col, (F.col("_gdi_off") + F.col("_gdi_lidx") + 1).cast("long"))
-        .drop("_gdi_pid", "_gdi_lidx", "_gdi_off")
-    )
-
-
 def tumbling_count_windows(
     df: DataFrame,
     max_size: int,

@@ -73,6 +73,17 @@ steps:
         ({"a": {"reduce": {"rename": {"replace": ".bad"}}}}, "rename"),
         ({"a": {"reduce": {"keep-when": {"type": 42}}}}, "keep-when schema"),
         ({"a": {"reduce": {"nonsense-fn": {}}}}, "unknown step function"),
+        *[
+            (
+                {"a": {"reduce": {fn: {**opts, "jq-expr": ".", "jsonnet-expr": "function(e) e"}}}},
+                "step 'a' .*jq-expr and jsonnet-expr are mutually exclusive",
+            )
+            for fn, opts in [
+                ("send-file", {"path": "/tmp/x.ndjson"}),
+                ("send-http", {"target": "http://127.0.0.1:1/x"}),
+                ("send-receive-http", {"target": "http://127.0.0.1:1/x"}),
+            ]
+        ],
     ],
 )
 def test_validation_errors(steps, message):
@@ -383,3 +394,116 @@ steps:
         ],
     )
     assert sorted(got) == [("x", "3"), ("y", "11")]
+
+
+def _stub_server(statuses, reply=lambda body: json.dumps({"n": "reply", "d": 1})):
+    """Local HTTP service answering the i-th POST with ``statuses[i]``
+    (the last status repeats) and, on a 200, ``reply(body)`` (one
+    reply event by default).  Returns (server, calls); ``calls``
+    records (status, body, Content-Type)."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    calls: list[tuple[int, str, str]] = []
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):  # noqa: N802
+            body = self.rfile.read(int(self.headers.get("Content-Length", 0))).decode()
+            with lock:
+                status = statuses[min(len(calls), len(statuses) - 1)]
+                calls.append((status, body, self.headers.get("Content-Type")))
+            out = reply(body).encode() if status == 200 else b""
+            self.send_response(status)
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *a):  # noqa: N802
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, calls
+
+
+def _run_with_server(spark, statuses, step_yaml, rows, **server):
+    """Compile a pipeline whose first step, ``call``, is ``step_yaml``
+    with a stub server's URL filled in (more steps may follow), execute
+    it, and return (output events in order, server calls)."""
+    srv, calls = _stub_server(statuses, **server)
+    url = f"http://127.0.0.1:{srv.server_address[1]}/x"
+    try:
+        t = from_yaml(f"name: p\ninput: {{stdin: }}\nsteps:\n  call:\n{step_yaml % url}")
+        result = compile_pipeline(spark, t, input_df=events_input(spark, rows), arrival_ts=1000.0)
+        got = []
+        result.execute(lambda out: got.extend((r["n"], r["d"]) for r in out.orderBy("_ord").collect()))
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    return got, calls
+
+
+def test_send_receive_http_body_is_the_send_file_lines(spark, tmp_path):
+    """A window's send-receive-http body is the window's send-file
+    lines, byte for byte, newline-joined with a trailing newline: one
+    event encoder for every wire path (Event.toJSON,
+    src/event.ts:122-128)."""
+    out_file = tmp_path / "out.ndjson"
+    steps = (
+        "    window: {events: 3, seconds: 3600}\n    reduce:\n      send-receive-http: \"%s\"\n"
+        f"  store:\n    flatmap:\n      send-file: {{path: \"{out_file}\"}}\n"
+    )
+    rows = [("a.b", '{"s":"héllo ✓ 日本"}'), ("a.b", "null"), ("a.c", '"ünï"')]
+    _, calls = _run_with_server(spark, [200], steps, rows)
+    lines = out_file.read_text(encoding="utf-8").splitlines()
+    assert len(lines) == 3 and "日本" in lines[0] and '"d":null' in lines[1]
+    assert calls == [(200, "\n".join(lines) + "\n", "application/x-ndjson")]
+
+
+SEND_HTTP = "    flatmap:\n      send-http: {target: \"%s\"}\n"
+SEND_HTTP_JQ = "    window: {events: 2, seconds: 3600}\n    reduce:\n      send-http: {target: \"%s\", jq-expr: \"map(.d)\"}\n"
+RECEIVE = "    window: {events: 2, seconds: 3600}\n    reduce:\n      send-receive-http: {target: \"%s\"}\n"
+RECEIVE_JQ = "    window: {events: 2, seconds: 3600}\n    reduce:\n      send-receive-http: {target: \"%s\", jq-expr: \"map(.d)\", wrap: r}\n"
+
+
+@pytest.mark.parametrize("step_yaml, rows, body, content_type, out", [
+    (SEND_HTTP, [("a", "1")], '{"n":"a","d":1,"t":[{"i":1000.0,', "application/x-ndjson", [("a", "1")]),
+    (SEND_HTTP_JQ, [("a", "1"), ("a", "2")], "[1,2]", None, [("a", "1"), ("a", "2")]),
+    (RECEIVE, [("a", "1"), ("a", "2")], '{"n":"a","d":1,', "application/x-ndjson", [("reply", "1")]),
+    (RECEIVE_JQ, [("a", "1"), ("a", "2")], "[1,2]", "application/json", [("r", '{"n":"reply","d":1}')]),
+], ids=["send-http", "send-http-jq", "send-receive-http", "send-receive-http-jq"])
+def test_http_retries_a_5xx_once_then_delivers(spark, monkeypatch, step_yaml, rows, body, content_type, out):
+    """One HTTP client for every wire step (src/io/http-client.ts:28-56):
+    a 503 is retried and the body delivered exactly once."""
+    from cdp_spark.io import http_client
+
+    monkeypatch.setattr(http_client, "BACKOFF_S", 0.0)
+    got, calls = _run_with_server(spark, [503, 200], step_yaml, rows)
+    assert [s for s, _, _ in calls] == [503, 200]
+    assert calls[0][1] == calls[1][1] and calls[1][1].startswith(body)
+    assert calls[1][2] == content_type
+    assert got == out
+
+
+def test_http_404_is_not_retried_and_gives_an_empty_vector(spark, monkeypatch):
+    from cdp_spark.io import http_client
+
+    monkeypatch.setattr(http_client, "BACKOFF_S", 0.0)
+    got, calls = _run_with_server(spark, [404], RECEIVE, [("a", "1"), ("a", "2")])
+    assert [s for s, _, _ in calls] == [404]
+    assert got == []
+
+
+def test_send_receive_http_orders_by_window_value_line(spark):
+    """Replies keep (window, produced value, response line) order."""
+    step = (
+        "    window: {events: 2, seconds: 3600}\n    reduce:\n"
+        "      send-receive-http: {target: \"%s\", jq-expr: \".[] | .d\", wrap: r}\n"
+    )
+    got, calls = _run_with_server(
+        spark, [200], step, [("a", "1"), ("a", "2"), ("a", "3"), ("a", "4")],
+        reply=lambda body: f"[{body},0]\n\nnot json\n[{body},1]\n",
+    )
+    assert len(calls) == 4
+    assert [json.loads(d) for _, d in got] == [[v, i] for v in (1, 2, 3, 4) for i in (0, 1)]
