@@ -28,6 +28,7 @@ so invalid outputs drop silently like the reference.
 
 from __future__ import annotations
 
+import functools
 import json
 import subprocess
 from typing import Iterator, Optional
@@ -104,6 +105,32 @@ def _values_to_events(
     return out.filter(F.col("_reason").isNull()).select("n", "d", "t", "_ord")
 
 
+# The program checks below run on the driver for every compile (once
+# per trigger, again for each sink with an expr); a template's programs
+# never change, so each is checked once per process.  lru_cache does not
+# cache exceptions: a bad program raises on every call.
+
+
+@functools.lru_cache(maxsize=256)
+def _check_jq_program(jq_bin: str, program: str) -> None:
+    """Fail fast on a bad jq program (parity: the reference errors at
+    pipeline start, src/io/jq.ts) — run once against an empty array."""
+    probe = subprocess.run(
+        [jq_bin, "-c", program], input="[]", capture_output=True, text=True
+    )
+    if probe.returncode != 0:
+        raise ValueError(f"invalid jq program: {probe.stderr.strip()}")
+
+
+@functools.lru_cache(maxsize=256)
+def _check_jsonnet_program(program: str) -> None:
+    """Fail fast on a bad Jsonnet program (parity: SnippetToAST at
+    pipeline start, stream-jsonnet/main.go:36-40)."""
+    from ..jsonnet import parse
+
+    parse(program)
+
+
 def jq_produced_values(
     df: DataFrame,
     jq_expr: str,
@@ -122,13 +149,7 @@ def jq_produced_values(
     src/io/json-processor.ts:115-187.
     """
     program = f"[ try ( {(prelude + chr(10)) if prelude else ''}{jq_expr} ) ]"
-    # Fail fast on a bad program (parity: the reference errors at
-    # pipeline start, src/io/jq.ts) — run once against an empty array.
-    probe = subprocess.run(
-        [jq_bin, "-c", program], input="[]", capture_output=True, text=True
-    )
-    if probe.returncode != 0:
-        raise ValueError(f"invalid jq program: {probe.stderr.strip()}")
+    _check_jq_program(jq_bin, program)
 
     vectors = _collect_vectors(df, order_col)
 
@@ -274,9 +295,7 @@ def jsonnet_produced_values(
     )
 
     program = f"{(prelude + chr(10)) if prelude else ''}{jsonnet_expr}"
-    # Fail fast on a bad program (parity: SnippetToAST at pipeline
-    # start, stream-jsonnet/main.go:36-40).
-    jsonnet_parse(program)
+    _check_jsonnet_program(program)
 
     vectors = _collect_vectors(df, order_col)
 

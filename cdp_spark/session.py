@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "cdp_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -52,6 +54,12 @@ def get_spark(app_name: str = "cdp_spark", shuffle_partitions: int | None = None
         # which Spark's parquet reader rejects by default; read it as
         # long and convert in load_table (micros, matching DuckDB).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers fork from cdp_spark.pyworker, which stops each
+        # runner re-reading pyspark.zip's directory (gh-103200, Python
+        # < 3.12).  The daemon imports it before any task ships code,
+        # so the directory holding cdp_spark goes on the workers' path.
+        .config("spark.python.daemon.module", "cdp_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -52,6 +52,7 @@ not counted yet or at all); per-batch paths count every event read.
 
 from __future__ import annotations
 
+import logging
 import tempfile
 import time
 from typing import Callable, Optional
@@ -64,6 +65,8 @@ from ..metrics import PipelineMetrics
 from ..pipeline.compiler import compile_pipeline
 from ..pipeline.template import PipelineTemplate
 from .sources import stream_generator, stream_ndjson_files
+
+_log = logging.getLogger("cdp_spark.runner")
 
 
 def start_foreach_batch(
@@ -395,6 +398,7 @@ class PipelineRunner:
         try:
             return all(check() for check in self._health_checks)
         except Exception:
+            _log.warning("health check raised; reporting unhealthy", exc_info=True)
             return False
 
     def close(self, drain_timeout: float = 5.0) -> None:
@@ -406,7 +410,7 @@ class PipelineRunner:
             try:
                 closer()
             except Exception:
-                pass
+                _log.warning("input closer raised", exc_info=True)
         # 2. drain: let in-flight micro-batches finish within the
         #    timeout (INPUT_DRAIN_TIMEOUT analog, api.ts:423-426)
         deadline = time.time() + drain_timeout
@@ -419,13 +423,13 @@ class PipelineRunner:
                     break
                 time.sleep(0.2)
         except Exception:
-            pass
+            _log.warning("drain poll raised", exc_info=True)
         # 3. stop the query
         try:
             if self.query.isActive:
                 self.query.stop()
         except Exception:
-            pass
+            _log.warning("query stop raised", exc_info=True)
 
 
 def run_pipeline_managed(

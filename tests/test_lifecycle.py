@@ -111,6 +111,31 @@ steps:
     runner.close()
 
 
+def test_close_logs_a_raising_closer_and_still_stops(spark, tmp_path, caplog):
+    import logging
+
+    def closer():
+        raise RuntimeError("closer boom")
+
+    def check():
+        raise RuntimeError("check boom")
+
+    query = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    runner = PipelineRunner(query, input_closers=[closer], health_checks=[check])
+    with caplog.at_level(logging.WARNING, logger="cdp_spark.runner"):
+        assert not runner.healthy()
+        runner.close(drain_timeout=0.5)
+    assert not query.isActive
+    messages = [(r.getMessage(), r.exc_info[1]) for r in caplog.records]
+    assert any("health check" in m and str(e) == "check boom" for m, e in messages)
+    assert any("input closer" in m and str(e) == "closer boom" for m, e in messages)
+
+
 def test_reference_exposition_example_end_to_end(spark, tmp_path):
     """The reference's examples/exposition pipeline (prometheus-style
     text via jsonnet + expose-http), run as a streaming pipeline on

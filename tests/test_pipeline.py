@@ -257,6 +257,49 @@ steps:
         )
 
 
+def _compile_twice(spark, step_yaml):
+    t = from_yaml(f"name: p\ninput: {{stdin: }}\nsteps:\n  t:\n    reduce:\n      {step_yaml}\n")
+    for _ in range(2):
+        compile_pipeline(spark, t, input_df=events_input(spark, [("a", "1")]), arrival_ts=1000.0)
+
+
+def test_jq_program_is_checked_once_per_process(spark, monkeypatch):
+    import subprocess
+
+    probes = []
+    run = subprocess.run
+
+    def counting(args, *a, **kw):
+        probes.append(args)
+        return run(args, *a, **kw)
+
+    monkeypatch.setattr(subprocess, "run", counting)
+    # a program no other test compiles, so the process cache is cold
+    _compile_twice(spark, 'send-receive-jq: "[.[] | .d] | length + 17"')
+    assert len(probes) == 1
+    for _ in range(2):
+        with pytest.raises(ValueError, match="invalid jq program"):
+            _compile_twice(spark, 'send-receive-jq: "this is (not valid jq 17"')
+
+
+def test_jsonnet_program_is_checked_once_per_process(spark, monkeypatch):
+    from cdp_spark import jsonnet
+
+    parses = []
+    parse = jsonnet.parse
+
+    def counting(src):
+        parses.append(src)
+        return parse(src)
+
+    monkeypatch.setattr(jsonnet, "parse", counting)
+    _compile_twice(spark, 'send-receive-jsonnet: "function(events) std.length(events) + 17"')
+    assert len(parses) == 1
+    for _ in range(2):
+        with pytest.raises(jsonnet.JsonnetParseError):
+            _compile_twice(spark, 'send-receive-jsonnet: "function(events) (17"')
+
+
 def test_send_file_sink(spark, tmp_path):
     out_file = tmp_path / "out.ndjson"
     result, got = run_pipeline(
