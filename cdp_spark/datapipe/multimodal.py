@@ -89,28 +89,6 @@ def extract_features(
     )
 
 
-def sample_frames(
-    df: DataFrame,
-    every_n_bytes: int,
-    id_col: str = "id",
-    media_col: str = "media",
-    max_frames: int = 16,
-) -> DataFrame:
-    """'Frame sampling' stand-in: slice the binary at fixed strides
-    (JVM-side substring) — the partitioning/explosion shape of real
-    video frame sampling, one output row per frame."""
-    b = F.col(media_col)
-    idx = F.sequence(
-        F.lit(0), F.least(F.lit(max_frames - 1), F.floor(F.length(b) / every_n_bytes).cast("int"))
-    )
-    return df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(idx, lambda i: F.substring(b, i * every_n_bytes + 1, every_n_bytes))
-        ).alias("frame_idx", "frame"),
-    )
-
-
 RESIZED_SCHEMA = "id long, width int, height int, pixels binary"
 
 

@@ -1,9 +1,7 @@
 """Embedding similarity search over array<float> columns.
 
-- Brute-force cosine top-k: JVM-side zip_with/aggregate dot products
-  against a broadcast query vector — a single scan, no shuffle except
-  the final top-k (orderBy+limit is Spark's TakeOrdered, which does a
-  per-partition top-k then merges k*partitions rows on the driver).
+- Cosine over array<float> Columns (:func:`cosine`): JVM-side
+  zip_with/aggregate dot products, used by every scorer below.
 - Random-hyperplane LSH buckets: sign-bit signature per vector via
   fixed seeded projections; same-bucket join gives the ANN candidate
   set (the scale path: the shuffle carries (id, bucket) only).
@@ -98,25 +96,6 @@ def cosine_to(vec_col: Column, query_vector: list[float]) -> Column:
     q = F.array(*[F.lit(float(x)) for x in query_vector])
     denominator = norm(vec_col) * F.lit(qn)
     return F.when(denominator > 0, dot(vec_col, q) / denominator).otherwise(F.lit(0.0))
-
-
-def cosine_topk(
-    df: DataFrame,
-    query_vector: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Exact top-k by cosine against a literal query vector.  Ties
-    break on id for determinism."""
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
-    sim = F.round(cosine(F.col(vec_col), q), round_digits)
-    return (
-        df.select(F.col(id_col), sim.alias("cosine_sim"))
-        .orderBy(F.col("cosine_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
 
 
 def _round_half_up(a, digits: int):
@@ -1442,19 +1421,6 @@ def pq_encode_col(vec_col: Column, codebooks: list[list[list[float]]]) -> Column
         sub = F.slice(vec_col, s * d_sub + 1, d_sub)
         parts.append(F.element_at(F.transform(F.array(sub), make_argmin(cb)), 1))
     return F.array(*parts)
-
-
-def pq_encode(
-    df: DataFrame,
-    dim: int,
-    n_sub: int = 8,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 11,
-) -> DataFrame:
-    cbs = pq_codebooks(dim, n_sub, n_codes, seed)
-    return df.withColumn("codes", pq_encode_col(F.col(vec_col), cbs))
 
 
 def _adc_lut(

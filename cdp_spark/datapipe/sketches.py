@@ -31,7 +31,6 @@ capability, like joins.
 
 from __future__ import annotations
 
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -209,11 +208,6 @@ def _hll_sql(table: str, col: str, p: int, group_col: str | None) -> str:
 def hll_oracle_sql(table: str, col: str, p: int = 8) -> str:
     """The DuckDB twin of :func:`hll_estimate` (global sketch)."""
     return _hll_sql(table, col, p, group_col=None)
-
-
-def hll_error_bound(p: int = 8) -> float:
-    """The theoretical relative standard error ~1.04/sqrt(2^p)."""
-    return 1.04 / math.sqrt(1 << p)
 
 
 # ---------------------------------------------------------------------------

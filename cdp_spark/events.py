@@ -160,21 +160,19 @@ def _quote_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def variants_to_events(
-    df: DataFrame,
-    variant_col: str = "_v",
-    keep_cols: Optional[list[str]] = None,
-    max_array_depth: int = 5,
-) -> DataFrame:
-    """Turn a DataFrame with a variant column of raw JSON values into
-    candidate events: flattens (nested) arrays, extracts/validates the
-    envelope.  Output columns: keep_cols + n, d, t, _reason (null when
-    the value is a valid event; else a drop reason).  Shared by NDJSON
-    ingestion and the send-receive transforms' output parsing
-    (parseVector, src/event.ts:276-297)."""
-    keep = [_quote_ident(c) for c in keep_cols or []]
-    v = _quote_ident(variant_col)
-    flat = df
+# SQL over one JSON value held as a VARIANT expression ``v``: the
+# value's nested arrays flattened into one array (up to
+# ``max_array_depth`` levels), and the envelope fields of an event
+# candidate.  One definition serves ingestion (variants_to_events,
+# which keeps the drop reason for the dead-letter channel) and the
+# send-receive value path (valid_events_sql, which keeps only events).
+_TRACE_DDL = TRACE_TYPE.simpleString()
+# SQL string literals eat single backslashes — double them so the
+# parsed regex is byte-for-byte _VALID_NAME_REGEX
+_NAME_RE_SQL = _VALID_NAME_REGEX.replace("\\", "\\\\")
+
+
+def _flat_array_sql(v: str, max_array_depth: int) -> str:
     # ONE Generate instead of max_array_depth stacked explodes
     # (optimization r17): every DataFrame op re-analyzes the whole
     # accumulated plan, so five explode layers cost five growing
@@ -186,53 +184,106 @@ def variants_to_events(
     # explode once.  Rows with non-array values pass through as
     # 1-element arrays; arrays nested deeper than max_array_depth
     # surface as ARRAY variants and are flagged 'not an event object'
-    # below — both unchanged.  tests/test_events.py covers every
-    # branch.
+    # — both unchanged.  tests/test_events.py covers every branch.
+    # An ARRAY variant casts to array<variant> as is; a to_json /
+    # from_json round trip gave the same elements at twice the analysis
+    # cost per bind.
     arr_t = (
         "CASE WHEN startswith(schema_of_variant({x}), 'ARRAY') "
-        "THEN from_json(to_json({x}), 'array<variant>') "
+        "THEN try_variant_get({x}, '$', 'array<variant>') "
         "ELSE array({x}) END"
     )
     expr = arr_t.format(x=v)
     for i in range(1, max_array_depth):
         expr = f"flatten(transform({expr}, x{i} -> {arr_t.format(x=f'x{i}')}))"
-    flat = flat.selectExpr(*keep, f"explode({expr}) AS {v}")
+    return expr
 
-    # Same single-parse selectExpr trade as the flatten loop above;
-    # expression-for-expression the Column form's tree (distinguish
-    # absent d — SQL NULL — from JSON null: to_json of a variant-null
-    # is 'null', of SQL NULL is NULL).
-    extracted = flat.selectExpr(
-        *keep,
-        f"try_variant_get({v}, '$.n', 'string') AS n",
-        f"to_json(try_variant_get({v}, '$.d', 'variant')) AS d",
-        f"try_variant_get({v}, '$.t', 'variant') AS _traw",
-        f"schema_of_variant({v}) AS _sch",
-    )
-    trace_ddl = TRACE_TYPE.simpleString()
-    # SQL string literals eat single backslashes — double them so the
-    # parsed regex is byte-for-byte _VALID_NAME_REGEX
-    name_re = _VALID_NAME_REGEX.replace("\\", "\\\\")
-    t_parsed = f"from_json(to_json(_traw), '{trace_ddl}')"
+
+def _name_sql(v: str) -> str:
+    return f"try_variant_get({v}, '$.n', 'string')"
+
+
+def _data_sql(v: str) -> str:
+    # distinguish absent d — SQL NULL — from JSON null: to_json of a
+    # variant-null is 'null', of SQL NULL is NULL
+    return f"to_json(try_variant_get({v}, '$.d', 'variant'))"
+
+
+def _raw_trace_sql(v: str) -> str:
+    return f"try_variant_get({v}, '$.t', 'variant')"
+
+
+def _parsed_trace_sql(traw: str) -> str:
+    return f"from_json(to_json({traw}), '{_TRACE_DDL}')"
+
+
+def _trace_sql(traw: str) -> str:
+    return f"coalesce({_parsed_trace_sql(traw)}, CAST(NULL AS {_TRACE_DDL}))"
+
+
+def _reason_sql(n: str, traw: str, sch: str) -> str:
+    """NULL when the candidate (name ``n``, raw trace ``traw``, variant
+    schema ``sch``) is a valid event, else why it is not."""
+    t_parsed = _parsed_trace_sql(traw)
     trace_ok = (
-        f"(_traw IS NULL OR ({t_parsed} IS NOT NULL AND NOT "
+        f"({traw} IS NULL OR ({t_parsed} IS NOT NULL AND NOT "
         f"exists({t_parsed}, tp -> tp.i IS NULL OR tp.p IS NULL "
         f"OR tp.h IS NULL)))"
     )
-    reason = (
-        "CASE WHEN NOT startswith(_sch, 'OBJECT') "
+    return (
+        f"CASE WHEN NOT startswith({sch}, 'OBJECT') "
         "THEN 'not an event object' "
-        f"WHEN NOT (n IS NOT NULL AND n RLIKE '{name_re}') "
+        f"WHEN NOT ({n} IS NOT NULL AND {n} RLIKE '{_NAME_RE_SQL}') "
         "THEN 'invalid or missing event name' "
         f"WHEN NOT {trace_ok} THEN 'invalid trace' "
-        "ELSE CAST(NULL AS string) END AS _reason"
+        "ELSE CAST(NULL AS string) END"
+    )
+
+
+def valid_events_sql(json_text: str, max_array_depth: int = 5) -> tuple[str, dict[str, str]]:
+    """The valid events in each JSON text of ``json_text`` (a SQL
+    expression), as ``(generator, fields)``: ``generator`` explodes the
+    text's flattened values, invalid candidates already dropped, into a
+    VARIANT column ``_v``; ``fields`` maps n, d and t to SQL over
+    ``_v``.  The same envelope rules as :func:`variants_to_events`,
+    with the filter inside the generator, so parsing a step's produced
+    values back into events costs one projection and no separate
+    filter (parseVector, src/event.ts:276-297)."""
+    flat = _flat_array_sql(f"try_parse_json({json_text})", max_array_depth)
+    valid = _reason_sql(_name_sql("ev"), _raw_trace_sql("ev"), "schema_of_variant(ev)")
+    fields = {"n": _name_sql("_v"), "d": _data_sql("_v"), "t": _trace_sql(_raw_trace_sql("_v"))}
+    return f"explode(filter({flat}, ev -> {valid} IS NULL))", fields
+
+
+def variants_to_events(
+    df: DataFrame,
+    variant_col: str = "_v",
+    keep_cols: Optional[list[str]] = None,
+    max_array_depth: int = 5,
+) -> DataFrame:
+    """Turn a DataFrame with a variant column of raw JSON values into
+    candidate events: flattens (nested) arrays, extracts/validates the
+    envelope.  Output columns: keep_cols + n, d, t, _reason (null when
+    the value is a valid event; else a drop reason).  NDJSON ingestion
+    keeps the reasons for the dead-letter channel (parseVector,
+    src/event.ts:276-297)."""
+    keep = [_quote_ident(c) for c in keep_cols or []]
+    v = _quote_ident(variant_col)
+    flat = df.selectExpr(*keep, f"explode({_flat_array_sql(v, max_array_depth)}) AS {v}")
+    # Same single-parse selectExpr trade as the flatten above.
+    extracted = flat.selectExpr(
+        *keep,
+        f"{_name_sql(v)} AS n",
+        f"{_data_sql(v)} AS d",
+        f"{_raw_trace_sql(v)} AS _traw",
+        f"schema_of_variant({v}) AS _sch",
     )
     return extracted.selectExpr(
         *keep,
         "n",
         "d",
-        f"coalesce({t_parsed}, CAST(NULL AS {trace_ddl})) AS t",
-        reason,
+        f"{_trace_sql('_traw')} AS t",
+        f"{_reason_sql('n', '_traw', '_sch')} AS _reason",
     )
 
 
@@ -266,33 +317,41 @@ def serialize_events(df: DataFrame) -> Column:
     return F.expr(EVENT_LINE_SQL)
 
 
-def stamp_new_events(
-    df: DataFrame, pipeline_name: str, signature: str, arrival_ts: Column | None = None
-) -> DataFrame:
-    """Append a trace point unconditionally — events entering from an
-    input form (makeNewEventParser, src/event.ts:218-230)."""
-    ts = arrival_ts if arrival_ts is not None else F.unix_timestamp(F.current_timestamp()).cast("double")
-    point = F.struct(
-        ts.alias("i"), F.lit(pipeline_name).alias("p"), F.lit(signature).alias("h")
+def _sql_string(s: str) -> str:
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def new_event_trace_sql(
+    trace_sql: str, pipeline_name: str, signature: str, arrival_ts: Optional[float] = None
+) -> str:
+    """SQL of the trace ``trace_sql`` with a point appended
+    unconditionally — events entering from an input form
+    (makeNewEventParser, src/event.ts:218-230).  One expression, so a
+    per-trigger bind builds it with a single JVM parse; the point's time
+    is ``arrival_ts`` (unix seconds), or the current time when None."""
+    ts = f"{float(arrival_ts)!r}D" if arrival_ts is not None else (
+        "CAST(unix_timestamp(current_timestamp()) AS DOUBLE)"
     )
-    return df.withColumn("t", F.concat(F.coalesce(F.col("t"), F.lit([]).cast(TRACE_TYPE)), F.array(point)))
+    point = (
+        f"named_struct('i', {ts}, "
+        f"'p', {_sql_string(pipeline_name)}, 'h', {_sql_string(signature)})"
+    )
+    return f"concat(coalesce({trace_sql}, CAST(array() AS {_TRACE_DDL})), array({point}))"
 
 
-def stamp_old_events(
-    df: DataFrame, pipeline_name: str, signature: str, arrival_ts: Column | None = None
-) -> DataFrame:
-    """Append a trace point only when this pipeline's (p, h) is not
-    already present — events re-emitted by a step function
+def old_event_trace(
+    trace: Column, pipeline_name: str, signature: str, arrival_ts: Column | None = None
+) -> Column:
+    """``trace`` with a point appended only when this pipeline's (p, h)
+    is not already present — events re-emitted by a step function
     (makeOldEventParser, src/event.ts:244-263)."""
     ts = arrival_ts if arrival_ts is not None else F.unix_timestamp(F.current_timestamp()).cast("double")
-    point = F.struct(
-        ts.alias("i"), F.lit(pipeline_name).alias("p"), F.lit(signature).alias("h")
-    )
-    trace = F.coalesce(F.col("t"), F.lit([]).cast(TRACE_TYPE))
+    point = F.struct(ts.alias("i"), F.lit(pipeline_name).alias("p"), F.lit(signature).alias("h"))
+    trace = F.coalesce(trace, F.lit([]).cast(TRACE_TYPE))
     has_point = F.exists(
         trace, lambda tp: (tp["p"] == F.lit(pipeline_name)) & (tp["h"] == F.lit(signature))
     )
-    return df.withColumn("t", F.when(has_point, trace).otherwise(F.concat(trace, F.array(point))))
+    return F.when(has_point, trace).otherwise(F.concat(trace, F.array(point)))
 
 
 def event_timestamp(df: DataFrame) -> Column:

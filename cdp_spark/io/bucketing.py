@@ -94,18 +94,3 @@ def salted_join(
     out = salted_left.join(salted_right, keys + ["_salt"], how)
     return out.drop("_salt")
 
-
-def salted_count(df: DataFrame, key_cols: Sequence[str], salt_source: Column, salt: int = 16) -> DataFrame:
-    """Two-phase skew-safe count per key: partial count on
-    (key, salt) spreads a hot key across tasks, then a tiny final
-    combine on the key.  (Plain groupBy count already does map-side
-    partial aggregation — this variant exists for pipelines that need
-    an explicit repartition between the phases, e.g. before a
-    windowed rank over the same key.)"""
-    keys = list(key_cols)
-    partial = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(salt_source), F.lit(salt)).cast("int"))
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("_partial").cast("long").alias("n"))

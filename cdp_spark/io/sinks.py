@@ -8,8 +8,12 @@ actions.  The emitted payload is either the events themselves (NDJSON)
 or, with ``jq-expr``, each value the jq program produces
 (src/step-functions/index.ts:35-48).
 
-Driver-side sinks (stdout, single-file append) iterate with
-``toLocalIterator`` — bounded memory, used for parity/debug.  The
+Driver-side sinks (stdout, single-file append) collect one run's lines
+with ``toArrow`` and order them on the driver: one action, which fills
+every observation upstream of the lines, and no Spark sort, whose
+range-partition sampling job would execute an observed plan a second
+time (see README "Per-trigger work").  One run's lines (one trigger in
+streaming) are held on the driver; that is the parity/debug path.  The
 scale path for files is the ``spark-dir`` step option (distributed
 text write), and send-http posts from executors via
 ``foreachPartition`` through the one HTTP client
@@ -23,15 +27,68 @@ import sys
 from itertools import islice
 from typing import Callable, Iterable, Optional
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..events import serialize_events
-from ..operators.transform import produced_values
+from ..events import EVENT_LINE_SQL
+from ..operators.transform import produced_values, value_program
+from ..windows import WINDOW_COL
 from .http_client import poster
 
 # send-http without an expr posts NDJSON bodies of at most this many lines.
 NDJSON_BATCH_LINES = 500
+
+
+# Reference rule for every expr-sink (send-stdout.ts:75-78,
+# send-file.ts:95-98, http-client.ts sendThing): STRING values are
+# emitted raw, everything else compact-JSON.  _val is JSON text, so
+# unquote string values.
+@F.pandas_udf(T.StringType())
+def _raw_line(vals: pd.Series) -> pd.Series:
+    def conv(t):
+        try:
+            v = json.loads(t)
+        except ValueError:
+            return t
+        return v if isinstance(v, str) else t
+
+    return vals.map(conv)
+
+
+class SinkLines:
+    """A sink step's output lines, lowered once: one line per emitted
+    value with an order column ``_ord`` — events as NDJSON, or each
+    jq/jsonnet-produced value verbatim when an expr is given
+    (src/step-functions/index.ts:35-48).  :meth:`bind` costs one
+    projection (three with an expr)."""
+
+    def __init__(
+        self,
+        order_col: str = "_ord",
+        jq_expr: Optional[str] = None,
+        jq_prelude: Optional[str] = None,
+        jsonnet_expr: Optional[str] = None,
+        jsonnet_prelude: Optional[str] = None,
+        window_col: Optional[str] = WINDOW_COL,
+    ):
+        self.program = value_program(
+            jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude, order_col, window_col
+        )
+        if self.program is None:
+            self._cols = [F.col(order_col).alias("_ord"), F.expr(EVENT_LINE_SQL).alias("line")]
+        else:
+            # Dense (window, index) renumber — see ValueEvents for why
+            # the packed-long form overflows at >=1024 input partitions.
+            self._cols = [
+                F.row_number().over(Window.orderBy("_worder", "_idx")).cast("long").alias("_ord"),
+                _raw_line(F.col("_val")).alias("line"),
+            ]
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        source = df if self.program is None else self.program.produced(df)
+        return source.select(*self._cols)
 
 
 def sink_payload_lines(
@@ -43,42 +100,20 @@ def sink_payload_lines(
     jsonnet_prelude: Optional[str] = None,
 ) -> DataFrame:
     """DataFrame of one output line per emitted value, with an order
-    column: events as NDJSON, or each jq/jsonnet-produced value
-    verbatim when an expr is given (src/step-functions/index.ts:35-48)."""
-    produced = produced_values(df, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude, order_col)
-    if produced is None:
-        return df.select(F.col(order_col).alias("_ord"), serialize_events(df).alias("line"))
-
-    # Reference rule for every expr-sink (send-stdout.ts:75-78,
-    # send-file.ts:95-98, http-client.ts sendThing): STRING values are
-    # emitted raw, everything else compact-JSON.  _val is JSON text,
-    # so unquote string values here.
-    @F.pandas_udf("string")
-    def raw_line(vals):  # noqa: ANN001
-        import pandas as pd  # noqa: F401
-
-        def conv(t):
-            try:
-                v = json.loads(t)
-            except ValueError:
-                return t
-            return v if isinstance(v, str) else t
-
-        return vals.map(conv)
-
-    # Dense (window, index) renumber — see _values_to_events for why
-    # the packed-long form overflows at >=1024 input partitions.
-    from pyspark.sql.window import Window
-
-    return produced.select(
-        F.row_number().over(Window.orderBy("_worder", "_idx")).cast("long").alias("_ord"),
-        raw_line(F.col("_val")).alias("line"),
-    )
+    column (see :class:`SinkLines`)."""
+    window_col = WINDOW_COL if WINDOW_COL in df.columns else None
+    return SinkLines(
+        order_col, jq_expr, jq_prelude, jsonnet_expr, jsonnet_prelude, window_col
+    ).bind(df)
 
 
-def _iter_lines(df: DataFrame) -> Iterable[str]:
-    for row in df.orderBy("_ord").select("line").toLocalIterator():
-        yield row["line"]
+def ordered_lines(lines_df: DataFrame) -> list[str]:
+    """The ``line`` column of ``lines_df`` in ``_ord`` order, collected
+    by one ``toArrow`` and sorted on the driver (a struct ``_ord``
+    sorts field by field, as Spark orders structs)."""
+    table = lines_df.toArrow().select(["_ord", "line"]).flatten()
+    keys = [(name, "ascending") for name in table.column_names if name != "line"]
+    return table.sort_by(keys, null_placement="at_start").column("line").to_pylist()
 
 
 def make_stdout_action(lines_df: DataFrame, stream=None) -> Callable[[], None]:
@@ -86,7 +121,7 @@ def make_stdout_action(lines_df: DataFrame, stream=None) -> Callable[[], None]:
 
     def action() -> None:
         out = stream if stream is not None else sys.stdout
-        for line in _iter_lines(lines_df):
+        for line in ordered_lines(lines_df):
             out.write(line + "\n")
 
     return action
@@ -98,8 +133,9 @@ def make_file_action(lines_df: DataFrame, path: str) -> Callable[[], None]:
     make_file_dir_action for the distributed write."""
 
     def action() -> None:
+        lines = ordered_lines(lines_df)
         with open(path, "a", encoding="utf-8") as fh:
-            for line in _iter_lines(lines_df):
+            for line in lines:
                 fh.write(line + "\n")
 
     return action
@@ -230,6 +266,8 @@ _EXPOSE_SERVERS: dict[str, object] = {}
 
 
 def get_expose_server(step_name: str):
+    """The running server of an expose-http step that set a ``port``;
+    with ``port: 0`` it is the only way to learn the bound port."""
     return _EXPOSE_SERVERS.get(step_name)
 
 

@@ -18,11 +18,14 @@ the plan.  ``PipelineMetrics`` accumulates across pipeline runs
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:  # pragma: no cover
     from .pipeline.compiler import PipelineResult
+
+_log = logging.getLogger("cdp_spark.metrics")
 
 
 @dataclass
@@ -59,7 +62,8 @@ class PipelineMetrics:
             try:
                 total += int(fn())
             except Exception:
-                pass  # a dying component must not break the scrape
+                # a dying component must not break the scrape
+                _log.warning("queue watcher %r raised; scraping the others", fn, exc_info=True)
         return total
 
     def backpressure(self) -> bool:
@@ -68,7 +72,9 @@ class PipelineMetrics:
                 if fn():
                     return True
             except Exception:
-                pass
+                _log.warning(
+                    "backpressure watcher %r raised; scraping the others", fn, exc_info=True
+                )
         return False
 
     def record(self, flow: str, count: int) -> None:
@@ -82,8 +88,9 @@ class PipelineMetrics:
 
     def update_from(self, result: "PipelineResult") -> None:
         """Fold one executed pipeline's observations in.  Call only
-        after an action has run ``result.output`` — ``Observation.get``
-        blocks until its plan executed.
+        after :meth:`PipelineResult.execute` (or an action on
+        ``result.output``) — ``Observation.get`` blocks until a plan
+        holding it executed.
 
         ``incoming`` counts the rows of the compiled batch's input.
         Under the streaming runner's stateful window path those are the

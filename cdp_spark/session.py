@@ -7,15 +7,26 @@ parity, Arrow for the Pandas-UDF slow path).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_log = logging.getLogger("cdp_spark.session")
+_warned_checksum_off = False
 
 
 def get_spark(app_name: str = "cdp_spark", shuffle_partitions: int | None = None) -> SparkSession:
+    global _warned_checksum_off
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    checksum = os.environ.get("CDP_SPARK_CHECKPOINT_CHECKSUM", "false")
+    if checksum.lower() != "true" and not _warned_checksum_off:
+        _warned_checksum_off = True
+        _log.warning(
+            "streaming checkpoint checksums are off; set CDP_SPARK_CHECKPOINT_CHECKSUM=true "
+            "to detect corrupt checkpoint files (object-store checkpoints)"
+        )
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus)
     builder = (
@@ -45,11 +56,9 @@ def get_spark(app_name: str = "cdp_spark", shuffle_partitions: int | None = None
         # queries (optimization r17).  Local/dev checkpoints sit on
         # reliable local disk, so corruption detection is disabled by
         # default here; deployments checkpointing to object stores
-        # re-enable it via CDP_SPARK_CHECKPOINT_CHECKSUM=true.
-        .config(
-            "spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            os.environ.get("CDP_SPARK_CHECKPOINT_CHECKSUM", "false"),
-        )
+        # re-enable it via CDP_SPARK_CHECKPOINT_CHECKSUM=true.  The
+        # first get_spark of a process warns while it is off.
+        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", checksum)
         # The synthetic events table stores ts as TIMESTAMP(NANOS),
         # which Spark's parquet reader rejects by default; read it as
         # long and convert in load_table (micros, matching DuckDB).

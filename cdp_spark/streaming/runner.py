@@ -33,14 +33,18 @@ Semantics vs the reference:
 - Backpressure / queueing are Spark's (trigger intervals, source rate
   limits) — not reimplemented (SURVEY §2.5).
 
-Each trigger executes its plan once.  ``foreachBatch`` hands over a
-plan, not data, and every action on it would run the stateful flush,
-the Jsonnet/jq reduces and the HTTP calls again.  The runner persists
-the batch for the trigger, and :meth:`PipelineResult.execute` persists
-every frame that a sink shares with the output (or that fans out to
-several steps): the sinks run, the output goes to ``on_batch`` or to
-the metrics count, and the cache is released whether the trigger
-succeeds or fails.
+Each trigger executes its plan once, with as few actions as its sinks
+allow.  ``foreachBatch`` hands over a plan, not data, and every action
+on it would run the stateful flush, the Jsonnet/jq reduces and the
+HTTP calls again.  The template is lowered once and bound to each
+batch (:func:`cdp_spark.pipeline.compiler.lower`); a driver-side sink's
+action fills the metrics' observations, so with one such sink and no
+``on_batch`` the trigger runs one Spark action and persists nothing.
+When a second action reads the batch (another sink, ``on_batch``, or
+an observation no sink fills), the runner persists the batch, and
+:meth:`PipelineResult.execute` persists every frame that several
+actions share; the cache is released whether the trigger succeeds or
+fails.
 
 Metrics: pass a :class:`cdp_spark.metrics.PipelineMetrics`; per-batch
 observed counters accumulate into the reference's counter families.
@@ -57,7 +61,7 @@ import tempfile
 import time
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..dead_letter import ship_dead_letters
@@ -270,55 +274,13 @@ def run_pipeline_stream(
         )
         applied = {st.name for st in pre_steps}
         prewindowed = win.name
-        prewindow_keyed = win.window_key is not None
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch hands over a plan, not data: the stateful flush
-        # below it would run once per action on the batch.  Persist it
-        # for the trigger; every action reads the one execution.
-        batch_df.persist()
-        try:
-            _run_batch(batch_df, epoch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _run_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # One wall-clock read per micro-batch = the reference's
         # batch-shared arrivalTimestamp (src/event.ts:198-206).
         arrival = time.time()
-        if prewindowed is not None:
-            from pyspark.sql import functions as F
-
-            from ..events import TRACE_TYPE
-            from ..pipeline.compiler import ORDER_COL, WINDOW_COL
-
-            # rebuild (n, d, t, _w, _ord) from the flushed rows; flush
-            # order = (window id, index within window).  Keyed windows
-            # re-qualify the per-key window ids with the key (string
-            # ids, same convention as the batch compiler) and rebuild
-            # a dense arrival order over the batch's flushed rows —
-            # cross-key order is unspecified by the extension, and the
-            # per-batch row_number is over already-flushed windows
-            # (small), the same parity trade the batch DAG documents.
-            if prewindow_keyed:
-                ow = Window.orderBy("key", "w", "i")
-                batch_df = batch_df.select(
-                    "n",
-                    "d",
-                    F.from_json("t_json", TRACE_TYPE).alias("t"),
-                    F.concat_ws(
-                        "\x1f", F.col("key"), F.col("w").cast("string")
-                    ).alias(WINDOW_COL),
-                    F.row_number().over(ow).cast("long").alias(ORDER_COL),
-                )
-            else:
-                batch_df = batch_df.select(
-                    "n",
-                    "d",
-                    F.from_json("t_json", TRACE_TYPE).alias("t"),
-                    F.col("w").alias(WINDOW_COL),
-                    (F.col("w") * F.lit(1 << 32) + F.col("i")).alias(ORDER_COL),
-                )
+        # Under the stateful path batch_df is the operator's flushed
+        # rows; the bind rebuilds events, window and order from them.
         result = compile_pipeline(
             batch_df.sparkSession,
             template,
@@ -328,18 +290,20 @@ def run_pipeline_stream(
             applied_steps=applied,
             prewindowed_step=prewindowed,
         )
-
-        def consume(output: DataFrame) -> None:
-            if on_batch is not None:
-                on_batch(output, epoch_id)
-            elif metrics is not None:
-                # Observations downstream of every sink fill only when
-                # the output executes.
-                output.count()
-            if metrics is not None:
-                metrics.update_from(result)
-
-        result.execute(consume)
+        consume = None if on_batch is None else (lambda output: on_batch(output, epoch_id))
+        # foreachBatch hands over a plan, not data: the stateful flush
+        # below it runs once per action on the batch.  Persist it for
+        # the trigger only when a second action will read it.
+        held = result.actions(consume is not None) > 1
+        if held:
+            batch_df.persist()
+        try:
+            result.execute(consume)
+        finally:
+            if held:
+                batch_df.unpersist()
+        if metrics is not None:
+            metrics.update_from(result)
         # Forward dead letters when DEAD_LETTER_TARGET is configured
         # (src/dead-letter.ts:19-32); no-op otherwise.
         ship_dead_letters(result.dead_letters)
@@ -424,9 +388,19 @@ class PipelineRunner:
                 time.sleep(0.2)
         except Exception:
             _log.warning("drain poll raised", exc_info=True)
-        # 3. stop the query
+        # 3. stop the query — mid-trigger if the drain timed out: the
+        #    stop interrupts the batch body, and a batch it had
+        #    persisted can stay registered in the cache
         try:
             if self.query.isActive:
+                if self.query.status.get("isTriggerActive", False):
+                    last = self.query.lastProgress
+                    _log.warning(
+                        "stopping the query mid-trigger: epoch %d still running after "
+                        "drain_timeout=%.1fs",
+                        last["batchId"] + 1 if last else 0,
+                        drain_timeout,
+                    )
                 self.query.stop()
         except Exception:
             _log.warning("query stop raised", exc_info=True)

@@ -189,14 +189,3 @@ def count_or_time_windows(
         arranged = df.coalesce(1).sortWithinPartitions(order_name)
     return arranged.mapInPandas(assign_stream, schema=schema)
 
-
-def collect_windows(df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
-    """Gather each window group into one row with an array of structs —
-    the vector-in representation for send-receive transforms.
-
-    ``payload_cols[0]`` must be the arrival-order column: array_sort
-    orders struct elements by their first field.
-    """
-    return df.groupBy(WINDOW_COL).agg(
-        F.array_sort(F.collect_list(F.struct(*payload_cols))).alias("events")
-    )

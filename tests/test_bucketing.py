@@ -110,17 +110,3 @@ def test_salted_join_rejects_right_outer(spark):
     with pytest.raises(ValueError):
         bucketing.salted_join(df, df, ["id"], left_id=F.col("id"), how="full")
 
-
-def test_salted_count_matches_groupby(spark):
-    ev = load_table(spark, SF, "events")
-    plain = {
-        (r.user_id, r.n)
-        for r in ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        (r.user_id, r.n)
-        for r in bucketing.salted_count(
-            ev, ["user_id"], salt_source=F.col("event_id"), salt=8
-        ).collect()
-    }
-    assert plain == salted

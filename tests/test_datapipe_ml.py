@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from cdp_spark.datapipe import similarity as sim
 from cdp_spark.datapipe import text as txt
 from cdp_spark.session import load_table
+from tests.oracles import cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -79,7 +80,7 @@ def test_trained_ivf_matches_bruteforce_topk_better_than_it_must(spark):
     qvec = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
     brute = [
         r.vec_id
-        for r in sim.cosine_topk(emb, qvec, k=10).collect()
+        for r in cosine_topk(emb, qvec, k=10).collect()
     ]
     ivf = [
         r.vec_id

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from cdp_spark.events import (
     parse_lines,
     serialize_events,
-    stamp_new_events,
-    stamp_old_events,
+    new_event_trace_sql,
+    old_event_trace,
     event_timestamp,
     validate_wrap,
 )
@@ -108,7 +108,7 @@ def test_stamp_new_always_appends(spark):
     events, _ = parse_lines(
         lines_df(spark, ['{"n":"a","t":[{"i":1.0,"p":"pipe","h":"sig"}]}', '{"n":"b"}'])
     )
-    stamped = stamp_new_events(events, "pipe", "sig", arrival_ts=F.lit(9.0))
+    stamped = events.withColumn("t", F.expr(new_event_trace_sql("t", "pipe", "sig", 9.0)))
     rows = {r["n"]: r["t"] for r in stamped.collect()}
     assert [tp["i"] for tp in rows["a"]] == [1.0, 9.0]
     assert [(tp["p"], tp["h"]) for tp in rows["b"]] == [("pipe", "sig")]
@@ -126,7 +126,7 @@ def test_stamp_old_appends_only_if_missing(spark):
             ],
         )
     )
-    stamped = stamp_old_events(events, "pipe", "sig", arrival_ts=F.lit(9.0))
+    stamped = events.withColumn("t", old_event_trace(F.col("t"), "pipe", "sig", F.lit(9.0)))
     rows = {r["n"]: r["t"] for r in stamped.collect()}
     assert [tp["i"] for tp in rows["a"]] == [1.0]
     assert [tp["i"] for tp in rows["b"]] == [1.0, 9.0]

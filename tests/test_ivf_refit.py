@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from cdp_spark.datapipe import fold_commit as fc
 from cdp_spark.datapipe import similarity as sim
 from cdp_spark.session import load_table
+from tests.oracles import cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -80,7 +81,7 @@ def test_post_refit_folds_assign_to_trained_lists(spark, tmp_path):
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
                              round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 def test_committed_epochs_skip_replay_across_the_swap(spark, tmp_path):
@@ -151,7 +152,7 @@ def test_streaming_skew_policy_fires_and_advances_generation(
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
                              round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 # ------------------------------------------------------- r13 hardening
@@ -322,7 +323,7 @@ def test_refit_retries_when_a_fold_commits_mid_rebuild(
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
                              round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 def test_post_check_fold_watermark_not_carried(spark, tmp_path, monkeypatch):
@@ -367,7 +368,7 @@ def test_post_check_fold_watermark_not_carried(spark, tmp_path, monkeypatch):
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
                              round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 def test_retry_carries_default_lineage_meta_watermark_fresh(
@@ -672,7 +673,7 @@ def test_fold_auto_compaction_in_the_real_lifecycle(
     assert _rows(
         sim.ivf_index_topk(spark, path, qv, k=10, n_probe=8,
                            round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 def test_streaming_recall_floor_policy_fires_and_advances_generation(
@@ -718,7 +719,7 @@ def test_streaming_recall_floor_policy_fires_and_advances_generation(
     assert _rows(
         sim.ivf_serving_topk(spark, root, qv, k=10, n_probe=8,
                              round_digits=4)
-    ) == _rows(sim.cosine_topk(emb, qv, k=10, round_digits=4))
+    ) == _rows(cosine_topk(emb, qv, k=10, round_digits=4))
 
 
 def test_recall_measurement_gated_on_growth_since_last_measurement(

@@ -212,3 +212,65 @@ steps:
     older = buf.get(buf.get().link_key)
     older_lines = older.body.strip().split("\n")[1:]
     assert [line.rsplit(" ", 1)[1] for line in older_lines] == ["0.4", "0.5"]
+
+
+def test_close_warns_when_it_stops_a_trigger_mid_flight(spark, tmp_path, caplog):
+    """A trigger still running after ``drain_timeout`` is stopped, and
+    ``close`` says so, naming its epoch."""
+    import logging
+    import threading
+
+    from cdp_spark.streaming import run_pipeline_stream
+    from cdp_spark.streaming.sources import stream_ndjson_files
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.ndjson").write_text('{"n":"a","d":1}\n')
+    template = from_yaml(
+        f"""
+name: p
+input: {{tail: {src}}}
+steps:
+  t:
+    reduce:
+      rename: {{prepend: "x."}}
+"""
+    )
+    started = threading.Event()
+
+    def slow(df, epoch):
+        started.set()
+        time.sleep(3)
+
+    query = run_pipeline_stream(
+        template,
+        input_stream=stream_ndjson_files(spark, str(src)),
+        on_batch=slow,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_seconds=0.2,
+    )
+    runner = PipelineRunner(query)
+    assert started.wait(120)
+    with caplog.at_level(logging.WARNING, logger="cdp_spark.runner"):
+        runner.close(drain_timeout=0.3)
+    assert not query.isActive
+    assert any(
+        "mid-trigger" in r.getMessage() and "epoch 0" in r.getMessage() for r in caplog.records
+    )
+
+
+def test_checksum_off_warns_once_per_process(spark, monkeypatch, caplog):
+    import logging
+
+    from cdp_spark import session
+
+    monkeypatch.delenv("CDP_SPARK_CHECKPOINT_CHECKSUM", raising=False)
+    monkeypatch.setattr(session, "_warned_checksum_off", False)
+    conf = spark.sparkContext.getConf()
+    with caplog.at_level(logging.WARNING, logger="cdp_spark.session"):
+        for _ in range(2):
+            # the running session, same app name and shuffle partitions
+            session.get_spark(conf.get("spark.app.name"), shuffle_partitions=8)
+    records = [r for r in caplog.records if r.name == "cdp_spark.session"]
+    assert len(records) == 1
+    assert "CDP_SPARK_CHECKPOINT_CHECKSUM" in records[0].getMessage()

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from cdp_spark.datapipe.multimodal import (
     extract_features,
     resize_images,
-    sample_frames,
     with_media_meta,
 )
 
@@ -47,18 +46,6 @@ def test_extract_features_fake_deterministic(spark):
 def test_extract_features_real_decode_gated(spark):
     with pytest.raises(Exception, match="fake=True"):
         extract_features(_media(spark), fake=False).collect()
-
-
-def test_sample_frames_stride_and_cap(spark):
-    df = spark.createDataFrame([(1, bytes(range(100)))], "id long, media binary")
-    frames = sample_frames(df, every_n_bytes=30, max_frames=16).collect()
-    # 100 bytes / 30 -> slices at 0,30,60,90
-    assert [r["frame_idx"] for r in frames] == [0, 1, 2, 3]
-    assert bytes(frames[0]["frame"]) == bytes(range(30))
-    assert bytes(frames[3]["frame"]) == bytes(range(90, 100))
-    # cap
-    capped = sample_frames(df, every_n_bytes=5, max_frames=4).collect()
-    assert len(capped) == 4
 
 
 def test_resize_images_fixed_output_size(spark):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from cdp_spark.datapipe import sampling as sa
 from cdp_spark.datapipe import similarity as sim
 from cdp_spark.session import load_table
+from tests.oracles import cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,7 +156,7 @@ def test_ivf_serving_recall_matches_served_topk(spark, tmp_path):
         }
         truth = [
             r["vec_id"]
-            for r in sim.cosine_topk(emb, qv, k=10, round_digits=4).collect()
+            for r in cosine_topk(emb, qv, k=10, round_digits=4).collect()
         ]
         manual = sum(1 for v in truth if v in served) / 10.0
         assert abs(got[qid] - manual) < 1e-9, (qid, got[qid], manual)

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from cdp_spark.datapipe import dedup as ddp
 from cdp_spark.datapipe import similarity as sim
 from cdp_spark.session import load_table
+from tests.oracles import cosine_topk
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,7 +30,7 @@ def test_pq_refine_restores_exact_ranking_over_candidates(spark):
         emb, qv, k=10, n_candidates=n, n_centroids=16, n_probe=16,
         round_digits=4,
     ).select("vec_id", "cosine_sim")
-    exact = sim.cosine_topk(emb, qv, k=10, round_digits=4)
+    exact = cosine_topk(emb, qv, k=10, round_digits=4)
     assert _rows(refined) == _rows(exact)
 
 
@@ -54,7 +55,7 @@ def test_pq_refine_candidates_come_from_adc_stage(spark):
     # and the order within the candidate set is exact cosine
     manual = sorted(
         _rows(
-            sim.cosine_topk(
+            cosine_topk(
                 emb.filter(F.col("vec_id").isin(*cands)), qv,
                 k=10, round_digits=4,
             )

@@ -128,6 +128,32 @@ def test_metrics_exposition_endpoint(spark):
         server.close()
 
 
+def test_raising_watcher_is_logged_and_the_others_still_scrape(caplog):
+    import logging
+
+    def dying_queue():
+        raise RuntimeError("queue gone")
+
+    def dying_gate():
+        raise RuntimeError("gate gone")
+
+    metrics = PipelineMetrics()
+    metrics.register_queue_watcher(lambda: 2)
+    metrics.register_queue_watcher(dying_queue)
+    metrics.register_queue_watcher(lambda: 5)
+    metrics.register_backpressure_watcher(dying_gate)
+    metrics.register_backpressure_watcher(lambda: False)
+    with caplog.at_level(logging.WARNING, logger="cdp_spark.metrics"):
+        assert metrics.queued_events() == 7
+        assert metrics.backpressure() is False
+    messages = [(r.name, r.getMessage(), str(r.exc_info[1])) for r in caplog.records]
+    assert any(
+        name == "cdp_spark.metrics" and "dying_queue" in m and e == "queue gone"
+        for name, m, e in messages
+    )
+    assert any("dying_gate" in m and e == "gate gone" for _, m, e in messages)
+
+
 def test_load_gauges_from_watchers():
     """queued_events / backpressure gauges (src/metrics.ts:46-117):
     computed at scrape time from registered component watchers."""

@@ -7,11 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdp_spark.datapipe.sketches import (
-    hll_error_bound,
     hll_estimate,
     hll_oracle_sql,
     hll_registers,
 )
+
+# HyperLogLog's relative standard error at p = 8: 1.04 / sqrt(2^8).
+HLL_ERROR_BOUND_P8 = 1.04 / 16
 
 
 def _ids(spark, n, start=0):
@@ -22,7 +24,7 @@ def test_hll_estimate_within_theoretical_error(spark):
     for n in (100, 1000, 20000):
         est = hll_estimate(_ids(spark, n), "v", p=8).first()["hll_estimate"]
         # 1.04/sqrt(m) is one sigma; allow four
-        assert abs(est - n) / n < 4 * hll_error_bound(8), (n, est)
+        assert abs(est - n) / n < 4 * HLL_ERROR_BOUND_P8, (n, est)
 
 
 def test_hll_matches_duckdb_oracle_exactly(spark):
@@ -238,13 +240,13 @@ def test_hll_estimate_by_matches_per_group_global(spark):
 
 
 def test_hll_estimate_by_error_within_bound(spark):
-    from cdp_spark.datapipe.sketches import hll_error_bound, hll_estimate_by
+    from cdp_spark.datapipe.sketches import hll_estimate_by
 
     rows = [(i, "a" if i < 4000 else "b") for i in range(6000)]
     df = spark.createDataFrame(rows, "v long, grp string")
     out = {r["grp"]: r["hll_estimate"]
            for r in hll_estimate_by(df, ["grp"], "v", 8).collect()}
-    bound = 4 * hll_error_bound(8)  # 4 sigma
+    bound = 4 * HLL_ERROR_BOUND_P8  # 4 sigma
     assert abs(out["a"] - 4000) / 4000 < bound
     assert abs(out["b"] - 2000) / 2000 < bound
 

@@ -11,7 +11,6 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from cdp_spark.windows import (
-    collect_windows,
     count_or_time_windows,
     sliding_count_windows,
     tumbling_count_windows,
@@ -87,8 +86,3 @@ def test_count_or_time_partitioned(spark):
     }
     assert got == {("a", 0): [0, 2], ("a", 1): [4], ("b", 0): [1, 3], ("b", 1): [5]}
 
-
-def test_collect_windows_orders_by_first_payload_col(spark):
-    df = tumbling_count_windows(ints_df(spark, 4), 2, "rn")
-    rows = collect_windows(df, ["rn", "d"]).orderBy("_w").collect()
-    assert [[e["d"] for e in r["events"]] for r in rows] == [[1, 2], [3, 4]]
